@@ -109,16 +109,7 @@ def decontaminate(train: DataFrame, test: DataFrame, n: int = 8,
     # guarded by the test-side word-count upper bound (see docstring)
     cand_h = cand.select("h").distinct()
     if broadcast_max_hashes > 0:
-        # coalesce(size, 0): with legacy sizeOfNull, null text rows yield
-        # size = -1 each and a null-heavy test set would UNDERSTATE the
-        # word-count bound, re-enabling the driver-OOM broadcast this guard
-        # exists to prevent (ADVICE r5)
-        bound = test.select(
-            F.sum(F.coalesce(F.size(F.regexp_extract_all(
-                F.lower(F.col(text_col)), F.lit(_TOKS), F.lit(0)
-            )), F.lit(0))).alias("n")
-        ).first()["n"] or 0
-        if bound <= broadcast_max_hashes:
+        if _word_count_bound(test, text_col) <= broadcast_max_hashes:
             cand_h = F.broadcast(cand_h)
     tr_verify = (
         _word_ngrams(train, n, id_col, text_col)
@@ -134,6 +125,22 @@ def decontaminate(train: DataFrame, test: DataFrame, n: int = 8,
         F.countDistinct("g_te").alias("n_hits"),
         F.countDistinct("train_id").alias("n_train_docs"),
     )
+
+
+def _word_count_bound(docs: DataFrame, text_col: str) -> int:
+    """Total word count of ``docs`` (one scan, no shuffle): an upper bound
+    on its distinct word n-grams.
+
+    greatest(size, 0), not coalesce: with legacy sizeOfNull (ANSI off) a
+    null text yields size = -1, which coalesce passes through, so a
+    null-heavy side would UNDERSTATE the bound and re-enable the
+    driver-OOM broadcast the bound guards; under ANSI size(null) is null,
+    which greatest skips as well."""
+    return docs.select(
+        F.sum(F.greatest(F.size(F.regexp_extract_all(
+            F.lower(F.col(text_col)), F.lit(_TOKS), F.lit(0)
+        )), F.lit(0))).alias("n")
+    ).first()["n"] or 0
 
 
 def _md5_bucket(col, denom: int = 1000):

@@ -272,8 +272,11 @@ def hash_injective(sh: DataFrame) -> bool:
 
 
 #: per-Python-worker cache of {doc_id: frozenset(hashes)}, keyed by the
-#: identity of the loaded broadcast dict so unrelated corpora (tests, other
-#: queries in one session) never mix and stale corpora are evicted. Module
+#: broadcast's id so unrelated corpora (tests, other queries in one
+#: session) never mix and stale corpora are evicted. Not by id() of the
+#: loaded dict: CPython reuses a freed object's address, so a later
+#: corpus' dict can land where an earlier one lived and would silently
+#: verify against the earlier corpus' sets. Module
 #: level on purpose (guide §4.5): paraocr_spark ships to executors as an
 #: importable zip, so a reused Python worker keeps this across ALL tasks of
 #: a stage — each doc's set is built once per worker, not once per task
@@ -289,9 +292,10 @@ def _make_pair_set_verify(bc, tmin: float):
     import numpy as np
     import pandas as pd
 
+    key = bc._jbroadcast.id()  # driver side: unique per broadcast in the app
+
     def verify(batches):
         data = bc.value
-        key = id(data)
         cache = _PAIR_SET_CACHE.get(key)
         if cache is None:
             _PAIR_SET_CACHE.clear()  # evict stale corpora, bound memory

@@ -30,6 +30,7 @@ scan gives (maxPartitionBytes); Arrow batch size is bounded by
 
 from __future__ import annotations
 
+import functools
 import time
 from collections.abc import Iterator
 
@@ -240,13 +241,11 @@ def _merge_shards_relational(kernel_out: DataFrame) -> DataFrame:
     )
 
 
-
-
-
 def extract_pages(pages: DataFrame, *, salt: bool = True,
                   backend: str = "default",
                   backend_kwargs: dict | None = None,
-                  lineage_acc=None, fanout: bool = True) -> DataFrame:
+                  lineage_acc=None, fanout: bool = True,
+                  n_buckets: int | None = None) -> DataFrame:
     """Full extraction: optional skew salting -> kernel -> shard reassembly.
 
     Returns EXTRACTED_SCHEMA plus metric cols (_pid, _doc_bytes, _wall_s);
@@ -268,6 +267,9 @@ def extract_pages(pages: DataFrame, *, salt: bool = True,
     and NO Exchange is added, preserving the shuffle-free kernel plan
     (tests assert both shapes). Pass False to pin the input partitioning
     (e.g. when the caller already repartitioned).
+
+    ``n_buckets`` (writers only) buckets each branch for
+    sources.io.write_extracted BELOW the union — see union_branches.
     """
     from paraocr_spark.operators.skew import ensure_min_parallelism, salt_pages
 
@@ -278,8 +280,10 @@ def extract_pages(pages: DataFrame, *, salt: bool = True,
         )
         if fanout:
             prepped = ensure_min_parallelism(prepped)
-        return extract_kernel(prepped, backend, backend_kwargs,
-                              lineage_acc).drop("shard_id", "n_shards")
+        return union_branches([
+            extract_kernel(prepped, backend, backend_kwargs,
+                           lineage_acc).drop("shard_id", "n_shards")
+        ], n_buckets)
 
     normal, giant_pages = split_normal_giants(pages)
     if fanout:
@@ -290,7 +294,29 @@ def extract_pages(pages: DataFrame, *, salt: bool = True,
         extract_kernel(salt_pages(giant_pages), backend, backend_kwargs,
                        lineage_acc)
     )
-    return singles.unionByName(sharded)
+    return union_branches([singles, sharded], n_buckets)
+
+
+def union_branches(branches: list[DataFrame],
+                   n_buckets: int | None = None) -> DataFrame:
+    """unionByName the extraction branches (normal-kernel output, merged
+    giants).
+
+    With ``n_buckets`` each branch first gets its own warc_bucket hash
+    exchange (sources.io.bucket_for_write, identical partition count on
+    both sides), and the union zips the aligned partitions with no
+    exchange above it. A single exchange above the union would put the
+    normal kernel and the giant merge in ONE map stage, which cannot start
+    until the giant chain's salt and shard-kernel stages finish — a
+    serial prefix before any normal doc is extracted. Per-branch, the
+    normal kernel's map stage runs concurrently with the giant chain
+    (FP-Hadoop, VLDB'15: skew handling must not serialize the rest of the
+    job)."""
+    if n_buckets is not None:
+        from paraocr_spark.sources.io import bucket_for_write
+
+        branches = [bucket_for_write(b, n_buckets) for b in branches]
+    return functools.reduce(DataFrame.unionByName, branches)
 
 
 def split_normal_giants(pages: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -58,7 +58,10 @@ class PipelineConfig:
     shard_cache_path: str | None = None
     #: bucket(warc_ts) fan-out of the output layout (Iceberg bucket(N)
     #: analog): size to the table, not the cluster — hundreds at 100 TB,
-    #: ~2x cores for small runs
+    #: fewer for small tables. Each invocation writes one file per bucket;
+    #: the write's task count is min(warc_buckets, cores), not warc_buckets
+    #: (sources/io.bucket_for_write), so buckets above the core count cost
+    #: files, not tasks
     warc_buckets: int = 64
     extra: dict = field(default_factory=dict)
 
@@ -111,11 +114,15 @@ def extract_with_shard_cache(
     normal-doc branch + reassembly. Reused shards keep their original
     _pid/_doc_bytes/_wall_s, so a resumed run's lineage attributes cached
     work to the invocation that actually did it.
+
+    The result is write-ready: both branches are bucketed for
+    sources.io.write_extracted (``cfg.warc_buckets``) below their union.
     """
     from paraocr_spark.operators.extract import (
         _merge_shards_relational,
         extract_kernel,
         split_normal_giants,
+        union_branches,
     )
     from paraocr_spark.operators.skew import salt_pages
 
@@ -164,7 +171,8 @@ def extract_with_shard_cache(
     singles = extract_kernel(normal, cfg.backend, cfg.backend_kwargs).drop(
         "shard_id", "n_shards"
     )
-    return singles.unionByName(_merge_shards_relational(relevant))
+    return union_branches([singles, _merge_shards_relational(relevant)],
+                          cfg.warc_buckets)
 
 
 def gc_shard_cache(spark: SparkSession, cache_path: str, keep_fp: str,
@@ -292,11 +300,14 @@ def run_and_write(
         {}, LineageAccParam()
     )
     t0 = time.perf_counter()  # before plan build: the shard-cache path is eager
+    # both routes bucket each branch below the union
+    # (operators/extract.union_branches): write_extracted adds no exchange
     extracted_df = (
         extract_with_shard_cache(spark, todo, cfg)
         if use_cache_path
         else extract_pages(todo, salt=cfg.salt, backend=cfg.backend,
-                           backend_kwargs=cfg.backend_kwargs, lineage_acc=acc)
+                           backend_kwargs=cfg.backend_kwargs, lineage_acc=acc,
+                           n_buckets=cfg.warc_buckets)
     )
     out = (
         extracted_df

@@ -33,6 +33,24 @@ def with_warc_bucket(df: DataFrame, n_buckets: int = WARC_BUCKETS) -> DataFrame:
     )
 
 
+def bucket_for_write(df: DataFrame, n_buckets: int = WARC_BUCKETS) -> DataFrame:
+    """Add ``warc_bucket`` and hash-partition on it into
+    P = min(n_buckets, defaultParallelism) partitions: the write layout's
+    one exchange.
+
+    Every bucket lands in exactly one partition, so the partitioned write
+    opens exactly one file per bucket. P is sized to the cores, not the
+    buckets: with 64 buckets on 4 cores the write runs 4 tasks holding
+    ~16 buckets each instead of 64 one-bucket tasks; at scale (cores >=
+    n_buckets) P = n_buckets, as before. The partition count is explicit,
+    so AQE never coalesces it — two frames bucketed by this helper have
+    identical partitioning and a Union of them zips partition i with
+    partition i (``spark.sql.unionOutputPartitioning``, scoped on by
+    write_extracted) instead of needing an exchange above it."""
+    p = min(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
+    return with_warc_bucket(df, n_buckets).repartition(p, F.col("warc_bucket"))
+
+
 def write_extracted(df: DataFrame, path: str, mode: str = "append",
                     n_buckets: int = WARC_BUCKETS) -> None:
     """Append extracted rows partitioned by (run_id, bucket(warc_ts)).
@@ -41,27 +59,30 @@ def write_extracted(df: DataFrame, path: str, mode: str = "append",
     in their own directories — the lineage read-back prunes to the current
     run instead of scanning every prior append; within a run, a constant
     invocation_id column lets parquet file stats skip earlier resumes'
-    files without reading their pages."""
+    files without reading their pages.
+
+    An input that already carries ``warc_bucket`` must have been bucketed
+    by bucket_for_write with the same ``n_buckets`` (extract_pages does so
+    per branch, below its union, when given n_buckets): it is written with
+    no further exchange. Any other input is bucketed here."""
     spark = df.sparkSession
     if _iceberg_available(spark) and path.count(".") >= 1 and "/" not in path:
-        # Iceberg catalog table name, e.g. "cat.db.extracted"
-        df.writeTo(path).append()
+        # Iceberg catalog table name, e.g. "cat.db.extracted"; the table's
+        # own bucket(warc_ts) transform partitions it
+        df.drop("warc_bucket").writeTo(path).append()
         return
     # n_buckets is a LAYOUT knob (Iceberg bucket(N) analog): hundreds at
     # 100 TB, small for small tables — 64 buckets on a 2.4 GB bench table
     # is pure shuffle + tiny-file overhead
     parts = (["run_id"] if "run_id" in df.columns else []) + ["warc_bucket"]
     _check_partition_layout(path, parts[0])
-    w = (
-        with_warc_bucket(df, n_buckets)
-        # co-locate each bucket in one task BEFORE the partitioned write:
-        # without this every task holds an open writer per bucket (buckets x
-        # tasks tiny files, writer memory, and a 6x wall-time hit measured
-        # at 24k docs)
-        .repartition(n_buckets, F.col("warc_bucket"))
-        .write.mode(mode)
-        .partitionBy(*parts)
-    )
+    # co-locate each bucket in one task BEFORE the partitioned write:
+    # without this every task holds an open writer per bucket (buckets x
+    # tasks tiny files, writer memory, and a 6x wall-time hit measured at
+    # 24k docs)
+    if "warc_bucket" not in df.columns:
+        df = bucket_for_write(df, n_buckets)
+    w = df.write.mode(mode).partitionBy(*parts)
     if mode == "overwrite":
         # replace only the partitions present in df (idempotent micro-batch
         # replay), never the whole table
@@ -74,21 +95,26 @@ def write_extracted(df: DataFrame, path: str, mode: str = "append",
     # their dict, a rounding error next to the text bytes)
     w = w.option("parquet.enable.dictionary", "false")
     # plannedWrite (default on) would SORT every task's rows by the
-    # partition columns before writing — but the repartition above already
-    # guarantees one (run_id, warc_bucket) value per task (run_id is a
-    # literal per invocation), so the sort moves the full output through
-    # an UnsafeExternalSorter for nothing. Measured at 1.15M docs / 4
+    # partition columns before writing — but the bucketing already puts
+    # each (run_id, warc_bucket) value in one task (run_id is a literal per
+    # invocation), so the sort moves the full output through an
+    # UnsafeExternalSorter for nothing. Measured at 1.15M docs / 4
     # executors: the write stage burned 312 CPU-s (4.8x its 1-executor
     # cost — 8 concurrent sorters hit the host memory-bandwidth wall);
-    # scoped off, one sequential writer per task needs no sort. Restore
-    # after: other writers (e.g. unbucketed saves) want the planned sort.
-    # Without the planned sort the task-side writer must handle a handful
-    # of partition values per task (hash collisions of bucket values onto
-    # tasks — up to ~4 of 16): allow that many concurrent open writers, or
-    # FileFormatWriter falls back to sorting inside the task anyway.
+    # scoped off, the task-side writer keeps one open file per bucket it
+    # holds. A task holds ~n_buckets/P buckets (64 hashed onto 4
+    # partitions: 11/16/16/21), so allow max(32, n_buckets) concurrent
+    # writers: above the cap FileFormatWriter falls back to sorting the
+    # rest of the task's rows, the sort this scoping exists to avoid.
+    # unionOutputPartitioning (Spark 4.1 default true) lets a Union of
+    # per-branch bucketed inputs keep their common hash partitioning —
+    # pinned here so a session that turned it off still gets one task
+    # (and one file) per bucket. Restore all three after: other writers
+    # (e.g. unbucketed saves) want the planned sort.
     scoped = {
         "spark.sql.optimizer.plannedWrite.enabled": "false",
-        "spark.sql.maxConcurrentOutputFileWriters": "32",
+        "spark.sql.maxConcurrentOutputFileWriters": str(max(32, n_buckets)),
+        "spark.sql.unionOutputPartitioning": "true",
     }
     prev = {k: spark.conf.get(k) for k in scoped}
     for k, v in scoped.items():

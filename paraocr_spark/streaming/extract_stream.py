@@ -56,7 +56,8 @@ def extract_stream(spark: SparkSession, input_path: str, output_path: str,
         batch_df = ignore_keyword_filter(batch_df, cfg.ignore_url_keywords)
         out = (
             extract_pages(batch_df, salt=cfg.salt, backend=cfg.backend,
-                          backend_kwargs=cfg.backend_kwargs)
+                          backend_kwargs=cfg.backend_kwargs,
+                          n_buckets=cfg.warc_buckets)
             .withColumn("config_fp", F.lit(cfg.fingerprint))
             # batch_id in the partition value + dynamic partition OVERWRITE
             # = idempotent replay (the retried batch replaces only its own
@@ -64,8 +65,10 @@ def extract_stream(spark: SparkSession, input_path: str, output_path: str,
             .withColumn("run_id", F.lit(f"{cfg.run_id}-b{batch_id}"))
         )
         pio.write_extracted(out.select(*EXTRACTED_COLS, "config_fp", "run_id",
-                                       "_pid", "_doc_bytes", "_wall_s"),
-                            output_path, mode="overwrite")
+                                       "_pid", "_doc_bytes", "_wall_s",
+                                       "warc_bucket"),
+                            output_path, mode="overwrite",
+                            n_buckets=cfg.warc_buckets)
 
     writer = (
         read_pages_stream(spark, input_path)

@@ -170,3 +170,23 @@ def test_clean_corpus_releases_storage(spark):
         assert q.count() == 8
     jsc = spark.sparkContext._jsc
     assert jsc.getPersistentRDDs().size() == 0
+
+
+def test_word_count_bound_counts_null_texts_as_zero_with_ansi_off(spark):
+    """decontaminate's broadcast guard bounds the test side's n-grams by its
+    word count. With ANSI off (legacy sizeOfNull) size(null) is -1, and a
+    coalesce(size, 0) guard let each null text SUBTRACT one (2 against a
+    true 3 here), understating the bound; greatest(size, 0) keeps it exact
+    under both settings."""
+    from paraocr_spark.operators.corpus import _word_count_bound
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, None)], schema="doc_id long, text string",
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("false", "true"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            assert _word_count_bound(docs, "text") == 3, ansi
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)

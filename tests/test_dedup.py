@@ -196,3 +196,35 @@ def test_ppjoin_expand_variants_identical(spark, docs):
     a = {(r.a, r.b) for r in dedup.ppjoin_candidates(sh, 0.5, expand="selfjoin").collect()}
     b = {(r.a, r.b) for r in dedup.ppjoin_candidates(sh, 0.5, expand="bucket").collect()}
     assert a == b and a
+
+
+def test_pair_set_cache_keyed_by_broadcast_not_address(spark):
+    """A reused Python worker keeps _PAIR_SET_CACHE across queries. Keyed by
+    id() of the loaded dict, a second corpus whose dict is allocated where
+    the freed first one lived (CPython's allocator reuses freed addresses)
+    would verify against the FIRST corpus' sets. Keyed by the broadcast id,
+    each corpus is verified against its own."""
+    import pandas as pd
+
+    sc = spark.sparkContext
+    pairs = pd.DataFrame({"a": [1], "b": [2]})
+
+    def kept(bc):
+        out = dedup._make_pair_set_verify(bc, 0.5)(iter([pairs]))
+        return [(int(a), int(b)) for o in out for a, b in zip(o["a"], o["b"])]
+
+    bc1, bc2 = sc.broadcast({}), sc.broadcast({})
+    try:
+        data = {1: [10, 11], 2: [10, 11]}  # identical sets: jaccard 1
+        bc1._value = data  # the loaded value, as a worker holds it
+        assert kept(bc1) == [(1, 2)]
+        # corpus 2 at corpus 1's address, deterministically: id() cannot
+        # tell this from a freed dict whose memory the next corpus reuses
+        data.clear()
+        data.update({1: [10, 11], 2: [20, 21]})  # disjoint sets: jaccard 0
+        bc2._value = data
+        assert kept(bc2) == []
+    finally:
+        dedup._PAIR_SET_CACHE.clear()
+        bc1.destroy()
+        bc2.destroy()

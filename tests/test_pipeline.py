@@ -329,3 +329,147 @@ def test_iceberg_write_read_when_runtime_present(spark, tmp_path):
     )
     pio.write_extracted(df, "it.db.extracted")
     assert spark.table("it.db.extracted").count() == 2
+
+
+def _files_per_bucket_dir(out: str) -> dict:
+    """{run_id=.../warc_bucket=... dir: parquet file count}."""
+    import collections
+
+    return collections.Counter(
+        str(p.parent.relative_to(out))
+        for p in pathlib.Path(out).rglob("*.parquet")
+    )
+
+
+def _buckets_with_both_branches(spark, out: str) -> int:
+    """Buckets holding a salted giant AND a normal doc: only there could a
+    union that concatenates (instead of zipping) its children's
+    partitions put one bucket in two write tasks, i.e. two files."""
+    from paraocr_spark.operators.skew import GIANT_BYTES_THRESHOLD
+
+    giant = (F.col("_doc_bytes") > GIANT_BYTES_THRESHOLD).cast("int")
+    return (
+        pio.read_table(spark, out).groupBy("warc_bucket")
+        .agg(F.max(giant).alias("g"), F.min(giant).alias("n"))
+        .where("g = 1 and n = 0").count()
+    )
+
+
+def _executed_write_plan(spark, out: str) -> str:
+    """The final (AQE) physical plan of the latest write into ``out``, read
+    from the SQL status store (populated with the UI disabled) once the
+    listener bus has delivered the write's plan updates."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    plans = [
+        execs.apply(i).physicalPlanDescription() for i in range(execs.size())
+    ]
+    return [p for p in plans
+            if "InsertIntoHadoopFsRelationCommand" in p and out in p][-1]
+
+
+def _bucket_exchanges_per_union_side(plan: str) -> tuple[str, list[int]]:
+    """(the final plan tree above the Union, the number of
+    hashpartitioning(warc_bucket) Exchanges under each Union child)."""
+    import re
+
+    tree = plan.split("\n\n")[0]
+    current = re.split(r"== (?:Current|Final) Plan ==", tree)[1]
+    current = current.split("== Initial Plan ==")[0].splitlines()
+    u = next(i for i, ln in enumerate(current) if re.search(r"\bUnion \(", ln))
+    col = current[u].index("Union")
+    sides: list[list[str]] = []
+    for ln in current[u + 1:]:
+        if ln[col:col + 2] in (":-", "+-"):
+            sides.append([])
+        sides[-1].append(ln)
+    bucket_ex = set(re.findall(
+        r"\((\d+)\) Exchange\nInput[^\n]*\nArguments: "
+        r"hashpartitioning\(warc_bucket#\d+, \d+\)", plan))
+    counts = [
+        sum(1 for ln in side for nid in re.findall(r"\((\d+)\)", ln)
+            if nid in bucket_ex)
+        for side in sides
+    ]
+    return "\n".join(current[:u]), counts
+
+
+def test_run_and_write_buckets_each_branch_below_the_union(spark, tmp_path):
+    """The salted extract's two branches (normal kernel, merged giants) each
+    get their own warc_bucket Exchange BELOW the union, and the union zips
+    them with no Exchange above it — so the normal kernel's map stage never
+    waits on the giant chain — while every bucket still gets exactly one
+    file for the invocation."""
+    out = str(tmp_path / "extracted")
+    pages = pages_df(spark, 120, 4)  # i % 40 == 9: three giants
+    m = run_and_write(spark, pages, out, str(tmp_path / "lin"),
+                      PipelineConfig(run_id="rb", warc_buckets=8))
+    assert m["rows"] == 120
+    files = _files_per_bucket_dir(out)
+    assert len(files) == 8 and set(files.values()) == {1}, files
+    assert all(d.startswith("run_id=rb/warc_bucket=") for d in files)
+    assert _buckets_with_both_branches(spark, out) > 0
+
+    above, per_side = _bucket_exchanges_per_union_side(
+        _executed_write_plan(spark, out))
+    assert per_side == [1, 1], per_side
+    assert "Exchange" not in above, above
+
+
+def test_run_and_write_one_file_per_bucket_above_32_buckets_per_task(
+        spark, tmp_path, monkeypatch):
+    """The write runs min(n_buckets, cores) tasks, so with 512 buckets at
+    local[8] a task holds well over 32 buckets. Each still gets one file,
+    and with the concurrent-writer cap scoped to max(32, n_buckets) the
+    task never exceeds it (above the cap Spark falls back to sorting the
+    rest of the task's rows — the sort plannedWrite=false exists to
+    avoid)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    seen = []
+    real_parquet = DataFrameWriter.parquet
+
+    def spy(self, path, **kw):
+        seen.append(spark.conf.get("spark.sql.maxConcurrentOutputFileWriters"))
+        return real_parquet(self, path, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    out = str(tmp_path / "extracted")
+    run_and_write(spark, pages_df(spark, 400, 4), out, str(tmp_path / "lin"),
+                  PipelineConfig(run_id="r512", warc_buckets=512))
+    assert seen == ["512"]
+    files = _files_per_bucket_dir(out)
+    assert set(files.values()) == {1}, files
+    # the scenario really happened: buckets hashed onto the write's tasks
+    # exactly as its Exchange does (Murmur3 pmod P)
+    p = min(512, spark.sparkContext.defaultParallelism)
+    per_task = (
+        pio.read_table(spark, out).select("warc_bucket").distinct()
+        .groupBy(F.pmod(F.hash("warc_bucket"), F.lit(p)).alias("task"))
+        .count().agg(F.max("count")).first()[0]
+    )
+    assert per_task > 32, per_task
+
+
+def test_bucketed_write_layout_holds_with_union_partitioning_off(spark, tmp_path):
+    """A session that turned spark.sql.unionOutputPartitioning off still
+    gets the zipped union (write_extracted scopes it on) — and gets its own
+    setting back afterwards."""
+    key = "spark.sql.unionOutputPartitioning"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        out = str(tmp_path / "extracted")
+        run_and_write(spark, pages_df(spark, 120, 4), out,
+                      str(tmp_path / "lin"),
+                      PipelineConfig(run_id="roff", warc_buckets=8))
+        assert spark.conf.get(key) == "false"
+        files = _files_per_bucket_dir(out)
+        assert len(files) == 8 and set(files.values()) == {1}, files
+        assert _buckets_with_both_branches(spark, out) > 0
+        above, per_side = _bucket_exchanges_per_union_side(
+            _executed_write_plan(spark, out))
+        assert per_side == [1, 1] and "Exchange" not in above
+    finally:
+        spark.conf.set(key, prev)
