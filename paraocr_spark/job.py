@@ -94,12 +94,9 @@ def main(argv: list[str] | None = None) -> int:
                    "parallel.py:431-448): finished shards of an interrupted "
                    "run are never re-extracted")
     p.add_argument("--master", default=None, help="override master (local[N] for bench)")
-    p.add_argument("--partitions", type=int, default=None)
-    p.add_argument("--repartition", action="store_true",
-                   help="round-robin repartition the input to --partitions "
-                   "before extracting. Only useful when the source's own "
-                   "partitioning is skewed/too coarse — an evenly-written "
-                   "parquet table needs no extra shuffle")
+    p.add_argument("--partitions", type=int, default=None,
+                   help="spark.sql.shuffle.partitions, and the partition "
+                   "count of --synthetic pages")
     p.add_argument("--warmup", action="store_true",
                    help="run a tiny extraction first so Python-worker import "
                    "cost and JIT are excluded from the timed run (the "
@@ -150,7 +147,6 @@ def main(argv: list[str] | None = None) -> int:
 
         cfg = PipelineConfig(
             run_id=args.run_id, salt=not args.no_salt,
-            min_partitions=args.partitions if args.repartition else None,
             backend=args.backend,
             backend_kwargs=json.loads(args.backend_kwargs) if args.backend_kwargs else {},
             ignore_url_keywords=(

@@ -134,7 +134,6 @@ def _ppjoin_prune(threshold: float, xp: str = "x", yp: str = "y"):
 
 
 def ppjoin_candidates(sh: DataFrame, threshold: float,
-                      expand: str = "selfjoin",
                       distinct: bool = True) -> DataFrame:
     """Prefix-filtered candidate pairs (a < b) for a jaccard-threshold join.
 
@@ -163,17 +162,13 @@ def ppjoin_candidates(sh: DataFrame, threshold: float,
     RESULT-sized output is far cheaper than shuffling tens of millions of
     candidate rows just to dedupe them (guide §2.4: remove shuffles).
 
-    ``expand`` picks the pair-expansion strategy (identical results):
-
-    * ``selfjoin`` (default): route the prefix relation through ONE
-      explicit hashpartition(hs) Exchange and self-join on hs — the
-      Exchange is computed once (ReusedExchange) and the quadratic in-bucket
-      expansion STREAMS through the sort-merge join, where AQE's skew-join
-      can split a hot prefix hash across tasks. No per-bucket state.
-    * ``bucket``: collect_set each bucket + double explode. Fewer shuffles
-      on uniform data, but a hot prefix hash concentrates its whole bucket
-      into one aggregation buffer/row (OOM risk on skewed corpora — ADVICE
-      r3) — kept for A/B measurement, not the production default.
+    Pairs expand by a self-join of the prefix relation on hs, routed
+    through ONE explicit hashpartition(hs) Exchange: the quadratic
+    in-bucket expansion streams through the sort-merge join, where AQE's
+    skew-join can split a hot prefix hash across tasks, and no bucket is
+    ever held as one aggregation buffer (a collect_set-per-bucket form
+    concentrates a hot hash's whole bucket in one row — an OOM risk on
+    skewed corpora).
     """
     exh = sh.select(
         "id", F.size("sh").alias("sz"), F.explode("sh").alias("s")
@@ -197,24 +192,10 @@ def ppjoin_candidates(sh: DataFrame, threshold: float,
         .select("id", "sz", (F.col("p0") + 1).alias("pos"),
                 F.col("tok.hs").alias("hs"))
     )
-    if expand == "selfjoin":
-        prefix = prefix.repartition(F.col("hs"))  # shuffle-as-cache
-        x, y = prefix.alias("x"), prefix.alias("y")
-        pairs = (
-            x.join(y, "hs")
-            .where(F.col("x.id") < F.col("y.id"))
-            .where(_ppjoin_prune(threshold))
-            .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
-        )
-        return pairs.dropDuplicates(["a", "b"]) if distinct else pairs
-    buckets = (
-        prefix.groupBy("hs")
-        .agg(F.collect_set(F.struct("id", "sz", "pos")).alias("xs"))
-        .where(F.size("xs") >= 2)
-    )
+    prefix = prefix.repartition(F.col("hs"))  # shuffle-as-cache
+    x, y = prefix.alias("x"), prefix.alias("y")
     pairs = (
-        buckets.select(F.explode("xs").alias("x"), "xs")
-        .select("x", F.explode("xs").alias("y"))
+        x.join(y, "hs")
         .where(F.col("x.id") < F.col("y.id"))
         .where(_ppjoin_prune(threshold))
         .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
@@ -261,14 +242,6 @@ def shingle_stats(sh: DataFrame) -> dict:
         "n_strings": int(r["ns"] or 0),
         "n_hashes": int(r["nh"] or 0),
     }
-
-
-def hash_injective(sh: DataFrame) -> bool:
-    """True iff xxhash64 is injective on this shingle table's vocabulary
-    (see shingle_stats); gates the hash-space verify prefilter, falling
-    back to the string path on the (never-observed) collision."""
-    s = shingle_stats(sh)
-    return s["n_strings"] == s["n_hashes"]
 
 
 #: per-Python-worker cache of {doc_id: frozenset(hashes)}, keyed by the
@@ -346,9 +319,10 @@ def _verify_hash_prefiltered(pairs: DataFrame, sh: DataFrame,
        _exact_jaccard, which recomputes jaccard over the true string sets —
        so emitted values are bit-identical to the direct path.
 
-    Callers must have proved hash injectivity on this corpus
-    (hash_injective): then step 2 is exact, since hashed jaccard == string
-    jaccard. On a collision corpus callers use _exact_jaccard directly.
+    Callers must have proved hash injectivity on this corpus (shingle_stats:
+    n_strings == n_hashes): then step 2 is exact, since hashed jaccard ==
+    string jaccard. On a collision corpus callers use _exact_jaccard
+    directly.
 
     ``broadcast_hv=True`` (small corpora only) skips the joins entirely:
     the hashed-array table is collected and broadcast as an id->hash-list
@@ -429,7 +403,6 @@ def shingle_cache(docs: DataFrame, id_col: str = "doc_id",
 def dedup_ngram_jaccard(docs: DataFrame, threshold: float = 0.5,
                         id_col: str = "doc_id", text_col: str = "text",
                         n: int = 3, prefix_filter: bool = True,
-                        expand: str = "selfjoin",
                         sh: DataFrame | None = None,
                         broadcast_hv_max_bytes: int = 64 << 20) -> DataFrame:
     """EXACT jaccard near-dup pairs via a prefix-filtered inverted-index join
@@ -469,7 +442,7 @@ def dedup_ngram_jaccard(docs: DataFrame, threshold: float = 0.5,
         # pre-verify dropDuplicates shuffle (multiplicity ~1.05) and dedupe
         # the result-sized verified output instead. Duplicated pairs verify
         # to IDENTICAL rows, so dropDuplicates on (a, b) is deterministic.
-        cands = ppjoin_candidates(sh, threshold, expand=expand, distinct=False)
+        cands = ppjoin_candidates(sh, threshold, distinct=False)
         # hash-space verify prefilter when provably exact (one shared probe
         # job, shingle_stats); string verify of the survivors emits the same
         # 6dp jaccard either way, so results are identical to the direct
@@ -518,61 +491,24 @@ def dedup_ngram_jaccard(docs: DataFrame, threshold: float = 0.5,
 
 
 # --------------------------------------------------------------- minhash
-def minhash_signatures(sh: DataFrame, vectorized: bool = False) -> DataFrame:
+def minhash_signatures(sh: DataFrame) -> DataFrame:
     """(id, m0..m63): 64 permutation-min hashes. h = xxhash64(shingle)
     folded into [0, P); sig_i = min((a_i * h + b_i) mod P).
 
-    Default: the relational form (explode -> 64 partial-min aggregates,
-    map-side combine, pure JVM). ``vectorized=True`` keeps hashing as a
-    JVM projection and computes each doc's 64 mins in ONE numpy
-    broadcast-multiply + reduceat per Arrow batch — kept as a measured
-    A/B: at sf1.0/50k docs in a clean window the two read 0.83 s
-    (relational) vs 0.94 s (vectorized; Arrow transfer of the hash arrays
-    eats the aggregate-buffer saving), so the shuffle-free JVM shape stays
-    the default. Exact either way: a_i, b_i, h < 2^31 so a_i*h+b_i < 2^62
-    fits int64, and numpy int64 arithmetic is exact — both paths emit
-    bit-identical signatures (pytest asserts equality on a real corpus).
+    Relational form: explode -> 64 partial-min aggregates, map-side
+    combine, pure JVM. A numpy batch kernel (JVM hashing, one
+    broadcast-multiply + reduceat per Arrow batch) measured slower at
+    sf1.0/50k docs — 0.94 s vs 0.83 s — because the Arrow transfer of the
+    hash arrays ate the aggregate-buffer saving.
     """
-    if not vectorized:
-        ex = sh.select("id", F.explode("sh").alias("s"))
-        h = F.pmod(F.xxhash64("s"), F.lit(_P))
-        ex = ex.select("id", h.alias("h"))
-        aggs = [
-            F.min(F.pmod(F.lit(_A[i]) * F.col("h") + F.lit(_B[i]), F.lit(_P))).alias(f"m{i}")
-            for i in range(_K)
-        ]
-        return ex.groupBy("id").agg(*aggs)
-
-    import numpy as np
-    import pandas as pd
-
-    hv = sh.select(
-        "id",
-        F.transform("sh", lambda s: F.pmod(F.xxhash64(s), F.lit(_P))).alias("hv"),
-    )
-    A = np.array(_A, dtype=np.int64)
-    B = np.array(_B, dtype=np.int64)
-    cols = [f"m{i}" for i in range(_K)]
-
-    def sigs(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            lens = np.fromiter((len(v) for v in pdf["hv"]), dtype=np.int64,
-                               count=len(pdf))
-            flat = np.concatenate([np.asarray(v, dtype=np.int64)
-                                   for v in pdf["hv"]])
-            # (tokens, 64): permuted hashes; exact in int64 (see docstring)
-            perm = (flat[:, None] * A[None, :] + B[None, :]) % _P
-            offsets = np.zeros(len(lens), dtype=np.int64)
-            np.cumsum(lens[:-1], out=offsets[1:])
-            mins = np.minimum.reduceat(perm, offsets, axis=0)
-            out = pd.DataFrame(mins, columns=cols)
-            out.insert(0, "id", pdf["id"].to_numpy())
-            yield out
-
-    schema = "id long, " + ", ".join(f"{c} long" for c in cols)
-    return hv.mapInPandas(sigs, schema=schema)
+    ex = sh.select("id", F.explode("sh").alias("s"))
+    h = F.pmod(F.xxhash64("s"), F.lit(_P))
+    ex = ex.select("id", h.alias("h"))
+    aggs = [
+        F.min(F.pmod(F.lit(_A[i]) * F.col("h") + F.lit(_B[i]), F.lit(_P))).alias(f"m{i}")
+        for i in range(_K)
+    ]
+    return ex.groupBy("id").agg(*aggs)
 
 
 def dedup_minhash_lsh(docs: DataFrame, threshold: float = 0.5,

@@ -52,6 +52,8 @@ EXTRACTED_SCHEMA_DDL = (
     f"features {FEATURES_DDL}"
 )
 
+_BASE_COLS = ["url", "warc_ts", "html", "text", "lang"]
+
 _KERNEL_SCHEMA_DDL = (
     EXTRACTED_SCHEMA_DDL
     + ", shard_id int, n_shards int, _pid int, _doc_bytes long, _wall_s double"
@@ -244,9 +246,9 @@ def _merge_shards_relational(kernel_out: DataFrame) -> DataFrame:
 def extract_pages(pages: DataFrame, *, salt: bool = True,
                   backend: str = "default",
                   backend_kwargs: dict | None = None,
-                  lineage_acc=None, fanout: bool = True,
+                  lineage_acc=None,
                   n_buckets: int | None = None) -> DataFrame:
-    """Full extraction: optional skew salting -> kernel -> shard reassembly.
+    """Full extraction: split -> kernel -> shard reassembly -> union.
 
     Returns EXTRACTED_SCHEMA plus metric cols (_pid, _doc_bytes, _wall_s);
     callers project them away or roll them into lineage
@@ -258,43 +260,35 @@ def extract_pages(pages: DataFrame, *, salt: bool = True,
     (Spark does not auto-cache a diamond). Giants are rare (<3%), so the
     second source scan — whose filter discards everything else before any
     Python — is cheap; the alternative (persisting the kernel output) would
-    materialize the full corpus at 100 TB.
+    materialize the full corpus at 100 TB. ``salt=False`` sends every row
+    down the normal branch (no giant branch, no second scan).
 
-    ``fanout`` (default True) applies ensure_min_parallelism to the kernel
-    input: a small input (one parquet row group -> 1-2 scan splits) would
-    otherwise run the whole Python kernel on 1-2 cores (measured 4.6 s ->
-    1.0 s at 50k docs/local[32]). At scale the scan has >= cores splits
-    and NO Exchange is added, preserving the shuffle-free kernel plan
-    (tests assert both shapes). Pass False to pin the input partitioning
-    (e.g. when the caller already repartitioned).
+    The normal kernel's input goes through skew.ensure_min_parallelism: a
+    small input (one parquet row group -> 1-2 scan splits) would otherwise
+    run the whole Python kernel on 1-2 cores (measured 4.6 s -> 1.0 s at
+    50k docs/local[32]). At scale the scan has >= cores splits and NO
+    Exchange is added, preserving the shuffle-free kernel plan (tests
+    assert both shapes).
 
     ``n_buckets`` (writers only) buckets each branch for
     sources.io.write_extracted BELOW the union — see union_branches.
     """
     from paraocr_spark.operators.skew import ensure_min_parallelism, salt_pages
 
-    base_cols = ["url", "warc_ts", "html", "text", "lang"]
-    if not salt:
-        prepped = pages.select(
-            *base_cols, F.lit(0).alias("shard_id"), F.lit(1).alias("n_shards"),
-        )
-        if fanout:
-            prepped = ensure_min_parallelism(prepped)
-        return union_branches([
-            extract_kernel(prepped, backend, backend_kwargs,
-                           lineage_acc).drop("shard_id", "n_shards")
-        ], n_buckets)
-
-    normal, giant_pages = split_normal_giants(pages)
-    if fanout:
-        normal = ensure_min_parallelism(normal)
-    singles = extract_kernel(normal, backend, backend_kwargs,
-                             lineage_acc).drop("shard_id", "n_shards")
-    sharded = _merge_shards_relational(
-        extract_kernel(salt_pages(giant_pages), backend, backend_kwargs,
-                       lineage_acc)
-    )
-    return union_branches([singles, sharded], n_buckets)
+    if salt:
+        normal, giant_pages = split_normal_giants(pages)
+    else:
+        normal, giant_pages = _unsharded(pages), None
+    branches = [
+        extract_kernel(ensure_min_parallelism(normal), backend, backend_kwargs,
+                       lineage_acc).drop("shard_id", "n_shards")
+    ]
+    if giant_pages is not None:
+        branches.append(_merge_shards_relational(
+            extract_kernel(salt_pages(giant_pages), backend, backend_kwargs,
+                           lineage_acc)
+        ))
+    return union_branches(branches, n_buckets)
 
 
 def union_branches(branches: list[DataFrame],
@@ -333,13 +327,17 @@ def split_normal_giants(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
     from paraocr_spark.core.quality import MIN_NATIVE_TEXT_CHARS
     from paraocr_spark.operators.skew import giant_condition
 
-    base_cols = ["url", "warc_ts", "html", "text", "lang"]
     text_cant_fastpath = F.col("text").isNull() | (
         F.length("text") < F.lit(MIN_NATIVE_TEXT_CHARS)
     )
-    giant_cond = giant_condition() & text_cant_fastpath
-    normal = pages.where(~F.coalesce(giant_cond, F.lit(False))).select(
-        *base_cols, F.lit(0).alias("shard_id"), F.lit(1).alias("n_shards"),
-    )
-    giants = pages.where(F.coalesce(giant_cond, F.lit(False))).select(*base_cols)
+    giant_cond = F.coalesce(giant_condition() & text_cant_fastpath, F.lit(False))
+    normal = _unsharded(pages.where(~giant_cond))
+    giants = pages.where(giant_cond).select(*_BASE_COLS)
     return normal, giants
+
+
+def _unsharded(pages: DataFrame) -> DataFrame:
+    """Kernel input for whole (unsalted) documents: one shard of one."""
+    return pages.select(
+        *_BASE_COLS, F.lit(0).alias("shard_id"), F.lit(1).alias("n_shards"),
+    )

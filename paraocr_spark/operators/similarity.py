@@ -496,7 +496,8 @@ def neardup_pairs_lsh(emb: DataFrame, threshold: float,
         rows = emb.select(id_col, vec_col).collect()
         ids = np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows))
         M = np.array([list(r[1]) for r in rows], dtype=np.float64)
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
+        with np.errstate(invalid="ignore"):  # zero-norm rows become NaN
+            M /= np.linalg.norm(M, axis=1, keepdims=True)
         idx = {int(i): j for j, i in enumerate(ids)}
         bc = emb.sparkSession.sparkContext.broadcast((idx, M))
         tmin = float(threshold) - 1e-4
@@ -513,7 +514,10 @@ def neardup_pairs_lsh(emb: DataFrame, threshold: float,
                 rb = np.fromiter((idx_[int(x)] for x in b), dtype=np.int64,
                                  count=len(b))
                 cos = np.einsum("ij,ij->i", M_[ra], M_[rb])
-                keep = cos >= tmin
+                # NaN (a zero-norm side) is not pruned: the rerank decides
+                # it exactly as on the join-only path — a null cosine, or
+                # DIVIDE_BY_ZERO under ANSI
+                keep = ~(cos < tmin)
                 yield pdf[["a", "b"]][keep]
 
         cands = cands.mapInPandas(prefilter, schema="a long, b long")

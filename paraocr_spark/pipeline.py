@@ -22,8 +22,14 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from paraocr_spark.backends import preflight_backend
 from paraocr_spark.operators.extract import extract_pages
-from paraocr_spark.operators.lineage import config_fingerprint, lineage_rollup
+from paraocr_spark.operators.lineage import (
+    LineageAccParam,
+    config_fingerprint,
+    lineage_rollup,
+    lineage_rows_from_acc,
+)
 from paraocr_spark.operators.resume import filter_unprocessed
 from paraocr_spark.sources import io as pio
 
@@ -37,6 +43,11 @@ EXTRACTED_COLS = [
 class PipelineConfig:
     """Job knobs — the OCRConfig analog (config.py:22-62), spark-submit args.
 
+    Every front (run_extraction, run_and_write, the stream's micro-batches)
+    builds its plan from this config in one place (_extraction_plan), so
+    each field means the same thing on all three.
+
+    ``salt`` splits giant layout docs into shards (operators/skew.py).
     ``backend`` selects the extractor strategy by registry name or dotted
     module.Class path (backends.py) — the --ocr-backend analog
     (cli.py:101-123). It feeds the fingerprint, so swapping backends
@@ -44,17 +55,19 @@ class PipelineConfig:
     ``ignore_url_keywords``: documents whose url matches any keyword
     (case-insensitive substring) are skipped BEFORE extraction — the
     --ignore-keywords analog (cli.py:249-251), pushed into the source scan.
+    Input parallelism is not a knob: the kernel input is fanned out to the
+    core count only when the scan is coarser than that
+    (skew.ensure_min_parallelism).
     """
     run_id: str = "run0"
     salt: bool = True
-    min_partitions: int | None = None
     backend: str = "default"
     backend_kwargs: dict = field(default_factory=dict)
     ignore_url_keywords: list = field(default_factory=list)
     #: optional parquet path for SHARD-level partial-result reuse on giant
     #: docs — the analog of the reference's per-page txt cache
     #: (parallel.py:431-448): a killed run's finished shards are never
-    #: re-extracted on resume
+    #: re-extracted on resume. Used only with ``salt`` (no shards otherwise)
     shard_cache_path: str | None = None
     #: bucket(warc_ts) fan-out of the output layout (Iceberg bucket(N)
     #: analog): size to the table, not the cluster — hundreds at 100 TB,
@@ -94,7 +107,8 @@ def ignore_keyword_filter(pages: DataFrame, keywords: list) -> DataFrame:
 
 
 def extract_with_shard_cache(
-    spark: SparkSession, todo: DataFrame, cfg: PipelineConfig
+    spark: SparkSession, todo: DataFrame, cfg: PipelineConfig,
+    n_buckets: int | None = None,
 ) -> DataFrame:
     """Extraction with SHARD-granular partial-result reuse for giant docs.
 
@@ -115,8 +129,8 @@ def extract_with_shard_cache(
     _pid/_doc_bytes/_wall_s, so a resumed run's lineage attributes cached
     work to the invocation that actually did it.
 
-    The result is write-ready: both branches are bucketed for
-    sources.io.write_extracted (``cfg.warc_buckets``) below their union.
+    ``n_buckets`` (writers only) buckets both branches for
+    sources.io.write_extracted below their union, as in extract_pages.
     """
     from paraocr_spark.operators.extract import (
         _merge_shards_relational,
@@ -172,7 +186,7 @@ def extract_with_shard_cache(
         "shard_id", "n_shards"
     )
     return union_branches([singles, _merge_shards_relational(relevant)],
-                          cfg.warc_buckets)
+                          n_buckets)
 
 
 def gc_shard_cache(spark: SparkSession, cache_path: str, keep_fp: str,
@@ -228,28 +242,59 @@ def gc_shard_cache(spark: SparkSession, cache_path: str, keep_fp: str,
     }
 
 
+def _extraction_plan(
+    pages: DataFrame,
+    cfg: PipelineConfig,
+    done: DataFrame | None = None,
+    *,
+    n_buckets: int | None = None,
+    lineage: bool = False,
+):
+    """The plan every front runs: driver-side backend preflight -> url
+    keyword filter -> resume anti-join -> extract -> config_fp column.
+
+    Giant shards go through the shard cache whenever ``cfg`` names one
+    (extract_with_shard_cache — eager: it runs the giant kernel), else
+    through extract_pages. ``n_buckets`` makes the result write-ready
+    (union_branches). Returns (plan, acc): with ``lineage`` on the
+    extract_pages route, acc is a LineageAccParam accumulator the kernel
+    fills during the caller's action; it is None on the shard-cache route,
+    whose reused shards never run the kernel this invocation, and when
+    ``lineage`` is off.
+
+    extract_pages and filter_unprocessed are called through this module's
+    names (and the fronts write through pio.write_extracted) so a profiler
+    can wrap them.
+    """
+    spark = pages.sparkSession
+    preflight_backend(cfg.backend, cfg.backend_kwargs)  # fail fast on driver
+    pages = ignore_keyword_filter(pages, cfg.ignore_url_keywords)
+    todo = filter_unprocessed(pages, done, cfg.fingerprint)
+    acc = None
+    if cfg.shard_cache_path and cfg.salt:
+        out = extract_with_shard_cache(spark, todo, cfg, n_buckets)
+    else:
+        if lineage:
+            acc = spark.sparkContext.accumulator({}, LineageAccParam())
+        out = extract_pages(todo, salt=cfg.salt, backend=cfg.backend,
+                            backend_kwargs=cfg.backend_kwargs,
+                            lineage_acc=acc, n_buckets=n_buckets)
+    return out.withColumn("config_fp", F.lit(cfg.fingerprint)), acc
+
+
 def run_extraction(
     spark: SparkSession,
     pages: DataFrame,
     cfg: PipelineConfig | None = None,
     done: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Returns (extracted, lineage) DataFrames — lazily, caller writes/acts.
+    """Returns (extracted, lineage) DataFrames — lazily, caller writes/acts
+    (except the shard-cache route's giant-shard append, which is eager).
 
     ``done`` is the prior output for resume (None = fresh run).
     """
-    from paraocr_spark.backends import preflight_backend
-
     cfg = cfg or PipelineConfig()
-    preflight_backend(cfg.backend, cfg.backend_kwargs)  # fail fast on driver
-    pages = ignore_keyword_filter(pages, cfg.ignore_url_keywords)
-    todo = filter_unprocessed(pages, done, cfg.fingerprint)
-    if cfg.min_partitions:
-        # round-robin spread: evens out HTML-size skew without a key shuffle
-        todo = todo.repartition(cfg.min_partitions)
-    out = extract_pages(todo, salt=cfg.salt, backend=cfg.backend,
-                        backend_kwargs=cfg.backend_kwargs)
-    out = out.withColumn("config_fp", F.lit(cfg.fingerprint))
+    out, _ = _extraction_plan(pages, cfg, done)
     extracted = out.select(*EXTRACTED_COLS, "config_fp")
     lineage = lineage_rollup(out, cfg.run_id, cfg.fingerprint)
     return extracted, lineage
@@ -266,18 +311,11 @@ def run_and_write(
     """Execute and append to the extracted + lineage tables; returns metrics."""
     import uuid
 
-    from paraocr_spark.backends import preflight_backend
-
     cfg = cfg or PipelineConfig()
-    preflight_backend(cfg.backend, cfg.backend_kwargs)  # fail fast on driver
     # unique per INVOCATION: a resume that reuses the user-facing run_id
     # (the natural way to resume, and the default 'run0') must not roll
     # prior appends' rows into this invocation's lineage/metrics
     invocation_id = f"{cfg.run_id}-{uuid.uuid4().hex[:12]}"
-    pages = ignore_keyword_filter(pages, cfg.ignore_url_keywords)
-    todo = filter_unprocessed(pages, done, cfg.fingerprint)
-    if cfg.min_partitions:
-        todo = todo.repartition(cfg.min_partitions)
     # ONE kernel pass, ONE Spark job: the lineage rollup rides the write
     # action itself via a replace-merge accumulator (each kernel task sends
     # its partition totals once, idempotent under retries —
@@ -290,28 +328,14 @@ def run_and_write(
     # ladder decomposition. The read-back path survives below for the
     # shard-cache route, where reused shards never run the kernel this
     # invocation and so never reach the accumulator.
-    from paraocr_spark.operators.lineage import (
-        LineageAccParam,
-        lineage_rows_from_acc,
-    )
-
-    use_cache_path = bool(cfg.shard_cache_path and cfg.salt)
-    acc = None if use_cache_path else spark.sparkContext.accumulator(
-        {}, LineageAccParam()
-    )
     t0 = time.perf_counter()  # before plan build: the shard-cache path is eager
     # both routes bucket each branch below the union
     # (operators/extract.union_branches): write_extracted adds no exchange
-    extracted_df = (
-        extract_with_shard_cache(spark, todo, cfg)
-        if use_cache_path
-        else extract_pages(todo, salt=cfg.salt, backend=cfg.backend,
-                           backend_kwargs=cfg.backend_kwargs, lineage_acc=acc,
-                           n_buckets=cfg.warc_buckets)
+    extracted_df, acc = _extraction_plan(
+        pages, cfg, done, n_buckets=cfg.warc_buckets, lineage=True
     )
     out = (
         extracted_df
-        .withColumn("config_fp", F.lit(cfg.fingerprint))
         .withColumn("run_id", F.lit(cfg.run_id))
         .withColumn("invocation_id", F.lit(invocation_id))
     )

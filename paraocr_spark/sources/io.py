@@ -152,10 +152,6 @@ def _check_partition_layout(path: str, outer_col: str) -> None:
             return  # first partition dir settles the layout
 
 
-def write_lineage(df: DataFrame, path: str, mode: str = "append") -> None:
-    df.write.mode(mode).parquet(path)
-
-
 def write_lineage_rows(rows: list, path: str) -> None:
     """Append lineage rows (plain dicts, one per partition) to the lineage
     table from the DRIVER via pyarrow — no Spark job.
@@ -310,9 +306,9 @@ def read_pages_zip(spark: SparkSession, path: str,
 
     ``binaryFile`` scans the archives (distributed, one task per archive —
     zip central directories live at EOF, so an archive can't be split
-    below file level; at scale balance SKEW by repartitioning the result,
-    which the pipeline's ``min_partitions`` already does before the
-    kernel). Each entry becomes one pages row:
+    below file level; a few archives give a coarse input, which the
+    extraction kernel's input probe, skew.ensure_min_parallelism, fans out
+    to the core count). Each entry becomes one pages row:
 
       url      "<archive path>!<entry name>"  (stable, resume-friendly)
       warc_ts  the entry's zip timestamp (archive mtime when the entry

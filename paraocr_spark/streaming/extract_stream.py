@@ -6,13 +6,16 @@ Structured Streaming job that watches the pages table's directory and
 extracts new files as they land:
 
   * ``extract_stream`` uses **foreachBatch**, so every micro-batch runs the
-    exact same plan as the batch pipeline (salting, kernel, reassembly,
-    bucketed write, lineage) — one code path, tested once. foreachBatch
-    alone is at-least-once (a batch retried after a mid-write failure
-    would duplicate rows), so the batch write is made IDEMPOTENT: each
-    micro-batch lands in its own ``run_id=<run>-b<batch_id>`` partition
-    via dynamic partition overwrite — a replay overwrites exactly its own
-    partition, giving effective exactly-once end to end;
+    exact same plan as the batch pipeline (pipeline._extraction_plan:
+    backend preflight, keyword filter, salting or the shard cache, kernel,
+    reassembly, bucketed write) — one code path, tested once. Each row
+    keeps its metric columns (_pid, _doc_bytes, _wall_s); no lineage table
+    is written. foreachBatch alone is at-least-once (a batch retried
+    after a mid-write failure would duplicate rows), so the batch write is
+    made IDEMPOTENT: each micro-batch lands in its own
+    ``run_id=<run>-b<batch_id>`` partition via dynamic partition overwrite
+    — a replay overwrites exactly its own partition, giving effective
+    exactly-once end to end;
   * ``method_counts_stream`` is a pure streaming aggregation (watermark +
     tumbling window over warc_ts) for live quality monitoring — the analog
     of the reference's perf-log sink (parallel.py:124-137) as a stream.
@@ -26,8 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from paraocr_spark.operators.extract import extract_pages
-from paraocr_spark.pipeline import EXTRACTED_COLS, PipelineConfig
+from paraocr_spark.pipeline import EXTRACTED_COLS, PipelineConfig, _extraction_plan
 from paraocr_spark.sources import io as pio
 from paraocr_spark.sources.pages import PAGES_SCHEMA_DDL
 
@@ -48,22 +50,14 @@ def extract_stream(spark: SparkSession, input_path: str, output_path: str,
     cfg = cfg or PipelineConfig(run_id="stream")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from paraocr_spark.pipeline import ignore_keyword_filter
-
         # config_fp encodes backend + ignore keywords, so the batch MUST be
         # produced under exactly that config — otherwise resume would treat
         # default-backend rows as done under the custom config
-        batch_df = ignore_keyword_filter(batch_df, cfg.ignore_url_keywords)
-        out = (
-            extract_pages(batch_df, salt=cfg.salt, backend=cfg.backend,
-                          backend_kwargs=cfg.backend_kwargs,
-                          n_buckets=cfg.warc_buckets)
-            .withColumn("config_fp", F.lit(cfg.fingerprint))
-            # batch_id in the partition value + dynamic partition OVERWRITE
-            # = idempotent replay (the retried batch replaces only its own
-            # run_id=... directory, never touching other batches')
-            .withColumn("run_id", F.lit(f"{cfg.run_id}-b{batch_id}"))
-        )
+        out, _ = _extraction_plan(batch_df, cfg, n_buckets=cfg.warc_buckets)
+        # batch_id in the partition value + dynamic partition OVERWRITE
+        # = idempotent replay (the retried batch replaces only its own
+        # run_id=... directory, never touching other batches')
+        out = out.withColumn("run_id", F.lit(f"{cfg.run_id}-b{batch_id}"))
         pio.write_extracted(out.select(*EXTRACTED_COLS, "config_fp", "run_id",
                                        "_pid", "_doc_bytes", "_wall_s",
                                        "warc_bucket"),

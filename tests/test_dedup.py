@@ -189,15 +189,6 @@ def test_shingle_cache_scope_identical_and_released(spark, docs, doc_texts):
     assert jsc.getPersistentRDDs().size() == 0
 
 
-def test_ppjoin_expand_variants_identical(spark, docs):
-    """selfjoin (skew-safe default) and bucket expansion must yield the
-    same candidate set."""
-    sh = dedup.with_shingles(docs)
-    a = {(r.a, r.b) for r in dedup.ppjoin_candidates(sh, 0.5, expand="selfjoin").collect()}
-    b = {(r.a, r.b) for r in dedup.ppjoin_candidates(sh, 0.5, expand="bucket").collect()}
-    assert a == b and a
-
-
 def test_pair_set_cache_keyed_by_broadcast_not_address(spark):
     """A reused Python worker keeps _PAIR_SET_CACHE across queries. Keyed by
     id() of the loaded dict, a second corpus whose dict is allocated where

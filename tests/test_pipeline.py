@@ -473,3 +473,43 @@ def test_bucketed_write_layout_holds_with_union_partitioning_off(spark, tmp_path
         assert per_side == [1, 1] and "Exchange" not in above
     finally:
         spark.conf.set(key, prev)
+
+
+def test_three_fronts_build_the_same_extraction(spark, tmp_path):
+    """run_extraction, run_and_write and the stream's micro-batches build
+    their plan in one place, so one config means the same on all three: the
+    same keyword filter, the shard cache for giant shards (each front fills
+    its own cache), and identical extracted rows."""
+    from paraocr_spark.streaming.extract_stream import extract_stream
+
+    src = str(tmp_path / "pages")
+    pages_df(spark, 200, 4).write.parquet(src)  # giants at i % 160 == 9
+    pages = spark.read.parquet(src)
+    cols = ["url", "extracted_text", "spans", "method", "error"]
+
+    def cfg(front):
+        return PipelineConfig(run_id=front, ignore_url_keywords=["site1.example"],
+                              shard_cache_path=str(tmp_path / f"cache_{front}"))
+
+    def rows(df):
+        return sorted(
+            (r.url, r.extracted_text,
+             tuple((s["start"], s["end"]) for s in r.spans), r.method, r.error)
+            for r in df.select(*cols).collect()
+        )
+
+    extracted, _ = run_extraction(spark, pages, cfg("batch"))
+    batch = rows(extracted)
+    run_and_write(spark, pages, str(tmp_path / "out"), str(tmp_path / "lin"),
+                  cfg("write"))
+    written = rows(spark.read.parquet(str(tmp_path / "out")))
+    q = extract_stream(spark, src, str(tmp_path / "stream_out"),
+                       str(tmp_path / "ckpt"), cfg("stream"), available_now=True)
+    q.awaitTermination(300)
+    streamed = rows(spark.read.parquet(str(tmp_path / "stream_out")))
+
+    assert len(batch) == 196  # 4 urls on site1.example are skipped
+    assert batch == written == streamed
+    for front in ("batch", "write", "stream"):
+        cache = spark.read.parquet(str(tmp_path / f"cache_{front}"))
+        assert cache.select("url").distinct().count() == 2  # both giants

@@ -154,3 +154,42 @@ def test_neardup_auto_row_count_hint_skips_probe(spark):
     exact = {(r.a, r.b, r.cosine) for r in
              similarity.neardup_pairs(emb, threshold=0.35).collect()}
     assert {(r.a, r.b, r.cosine) for r in small.collect()} == exact
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_neardup_lsh_prefilter_matches_join_only_on_zero_norm_rows(
+        spark, monkeypatch, ansi):
+    """A zero vector has no cosine. The exact rerank (cosine_col) gives it
+    a null cosine with ANSI off and raises DIVIDE_BY_ZERO with ANSI on; the
+    numpy prefilter normalizes it to NaN. The prefilter may only drop pairs
+    the rerank would drop, so with the embedding broadcast (prefilter) and
+    without it (join-only) the outcome must be the same rows or the same
+    error."""
+    H0 = similarity._hyperplanes(64, similarity._BITS, similarity._TABLES)[0]
+    # every table-0 projection negative: bucket 0, the zero vector's bucket
+    w = -H0.T @ np.linalg.solve(H0 @ H0.T, np.ones(len(H0)))
+    v = np.random.RandomState(0).normal(size=64)
+    emb = spark.createDataFrame(
+        [(1, v.tolist()), (2, (2 * v).tolist()), (3, [0.0] * 64),
+         (4, w.tolist())],
+        "vec_id long, embedding array<float>",
+    )
+
+    def outcome():
+        try:
+            return sorted(tuple(r) for r in
+                          similarity.neardup_pairs_lsh(emb, 0.5).collect())
+        except Exception as e:  # noqa: BLE001 - the error IS the outcome
+            return "DIVIDE_BY_ZERO" if "DIVIDE_BY_ZERO" in str(e) else repr(e)
+
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        prefilter = outcome()
+        monkeypatch.setattr(similarity, "_PREFILTER_BROADCAST_MAX_BYTES", 0)
+        join_only = outcome()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+    assert prefilter == join_only
+    if ansi == "false":
+        assert join_only == [(1, 2, 1.0)]
