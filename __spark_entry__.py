@@ -60,8 +60,12 @@ def _ensure_shipped(spark: SparkSession) -> None:
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents.parquet, fanned out to the cores when the file has fewer
+    row groups than that (every sf table is one row group)."""
+    from paraocr_spark.sources.io import read_table
+
     _ensure_shipped(spark)
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return read_table(spark, f"{sf_dir}/documents.parquet")
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -266,10 +270,13 @@ def _q_neardup_embedding(spark, sf_dir):
     The oracle generator mirrors the SAME row-count decision, so the two
     stay in lockstep at any SF."""
     from paraocr_spark.operators.similarity import neardup_pairs_auto
+    from paraocr_spark.sources.io import parquet_footers
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    # the row count from the footers: no count() job in the query
+    n_rows = sum(md.num_rows for md in parquet_footers(emb))
     return neardup_pairs_auto(emb, threshold=0.4,
-                              exact_max_rows=_NEARDUP_EXACT_MAX)
+                              exact_max_rows=_NEARDUP_EXACT_MAX, n_rows=n_rows)
 
 
 #: env-overridable so tests can force the LSH route at tiny SFs
@@ -362,12 +369,10 @@ def _q_streaming_extract(spark, sf_dir):
     work = os.path.join(parent, _uuid.uuid4().hex[:12])
     os.makedirs(work, exist_ok=True)
     src = os.path.join(work, "pages")
-    # fan out before staging: a 1-2 split pages plan would write 1-2 files,
-    # and each availableNow micro-batch (and its Python kernel) inherits
-    # that file parallelism (skew.ensure_min_parallelism; no-op at scale)
-    from paraocr_spark.operators.skew import ensure_min_parallelism
-
-    ensure_min_parallelism(pages).write.mode("overwrite").parquet(src)
+    # pages inherit _docs' scan fan-out, so the staged table has one file
+    # per core and each availableNow micro-batch (and its Python kernel)
+    # runs on every core
+    pages.write.mode("overwrite").parquet(src)
     q = extract_stream(
         spark, src, os.path.join(work, "out"), os.path.join(work, "ckpt"),
         PipelineConfig(run_id="stream_entry", warc_buckets=8),
@@ -417,10 +422,9 @@ def _q_lang_id(spark, sf_dir):
     not CSE the repeated regexp subtree — measured 4.3 s -> 2.4 s at
     sf1.0. Results identical (same tokens, same tie-breaks)."""
     from paraocr_spark.functions.text import lang_id_from_tokens, lowered_tokens
-    from paraocr_spark.operators.skew import ensure_min_parallelism
 
     return (
-        ensure_min_parallelism(_docs(spark, sf_dir).select("text"))
+        _docs(spark, sf_dir)
         .select(lowered_tokens(F.col("text")).alias("_lt"))
         .select(lang_id_from_tokens(F.col("_lt")).alias("lang_pred"))
         .groupBy("lang_pred")

@@ -122,7 +122,7 @@ def main(argv: list[str] | None = None) -> int:
             parts = args.partitions or spark.sparkContext.defaultParallelism
             pages_path = tempfile.mkdtemp(prefix="paraocr_pages_") + "/pages"
             pages_df(spark, args.synthetic, parts).write.mode("overwrite").parquet(pages_path)
-            pages = spark.read.parquet(pages_path)
+            pages = pio.read_table(spark, pages_path)
         else:
             pages = pio.read_table(spark, args.input)
 

@@ -200,12 +200,6 @@ def synthetic_media(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                     payloads.append(full)
             yield pd.DataFrame({"media_id": ids, "payload": payloads})
 
-    # NOT fanned out (skew.ensure_min_parallelism): per-row work across
-    # this chain is a few hundred bytes of synthetic codec, so at bench
-    # sizes the round-robin Exchange costs about what the 2-core
-    # generation does (sub-second either way), and a real media table's
-    # scan is already wide, making the fanout a no-op. Keeping the r5
-    # plan shape avoids an Exchange that buys nothing at either end.
     return ids_df.select(id_col).mapInPandas(
         gen, schema="media_id long, payload binary"
     )

@@ -33,15 +33,9 @@ def _word_ngrams(docs: DataFrame, n: int, id_col: str, text_col: str) -> DataFra
     """(id, gram): distinct word n-grams per doc (lowercased [a-z0-9]+
     words). split() materialized before the gram lambda — see
     dedup.with_shingles for the Catalyst CSE trap this avoids."""
-    from paraocr_spark.operators.skew import ensure_min_parallelism
-
-    # fan out a coarse scan before the tokenize+gram map stage (no-op at
-    # scale — see skew.ensure_min_parallelism)
-    d = ensure_min_parallelism(
-        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
-    ).select(
-        "id",
-        F.regexp_extract_all(F.lower(F.col("_t")), F.lit(_TOKS), F.lit(0)).alias("_ws"),
+    d = docs.select(
+        F.col(id_col).alias("id"),
+        F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(_TOKS), F.lit(0)).alias("_ws"),
     )
     gram = F.transform(
         F.sequence(F.lit(0), F.size("_ws") - n),
@@ -204,12 +198,10 @@ def span_dedup(docs: DataFrame, w: int = 5, id_col: str = "doc_id",
     colliding window). Zipfian-hot windows still cost one aggregation row
     each (map-side partial min), never a bucket buffer.
     """
-    from paraocr_spark.operators.skew import ensure_min_parallelism
-
-    # fan out a coarse scan before the tile build (no-op at scale)
-    d = ensure_min_parallelism(
-        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
-    ).select("id", F.split(F.trim(F.col("_t")), " ").alias("_ws"))
+    d = docs.select(
+        F.col(id_col).alias("id"),
+        F.split(F.trim(F.col(text_col)), " ").alias("_ws"),
+    )
     n_win = F.ceil(F.size("_ws") / F.lit(w)).cast("int")
     tiles = F.transform(
         F.sequence(F.lit(0), n_win - 1),
@@ -356,14 +348,10 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3, id_col: str = "doc_id",
     OS-cached. N joins back as a broadcast scalar. Deterministic ties
     (score desc, term asc); tfidf rounded 6dp for cross-engine stability.
     """
-    from paraocr_spark.operators.skew import ensure_min_parallelism
-
-    toks = ensure_min_parallelism(
-        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
-    ).select(
-        "id",
+    toks = docs.select(
+        F.col(id_col).alias("id"),
         F.explode(
-            F.regexp_extract_all(F.lower(F.col("_t")), F.lit(_TOKS), F.lit(0))
+            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(_TOKS), F.lit(0))
         ).alias("term"),
     )
     tf = toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))

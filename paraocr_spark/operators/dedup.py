@@ -53,10 +53,6 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id",
     normalized text (functions/text.py), the analog of the reference's
     content-addressed cache keys (parallel.py:63-66).
     """
-    # NOT fanned out (skew.ensure_min_parallelism): one md5 over a short
-    # text per row is trivial map work, so on a small scan the round-robin
-    # Exchange costs more than it parallelizes (measured: no sf1.0 gain,
-    # ~0.3 s loss at sf0.1), and a large corpus scan is already wide.
     return (
         docs.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
         .groupBy("fp")
@@ -73,14 +69,8 @@ def with_shingles(docs: DataFrame, id_col: str = "doc_id",
     lambda: inlined in the transform() closure, Catalyst re-evaluates the
     split per element_at — 3n split() calls per row, measured 2.5x slower
     at sf0.1."""
-    from paraocr_spark.operators.skew import ensure_min_parallelism
-
-    # fan out a coarse scan before the gram build (no-op at scale): the
-    # split+concat shingle projection is the expensive map stage and sits
-    # BELOW the callers' keyed repartition, so without this it runs on the
-    # 1-2 splits a small parquet input yields
-    d = ensure_min_parallelism(
-        docs.select(F.col(id_col).alias("id"), F.trim(F.col(text_col)).alias("_tt"))
+    d = docs.select(
+        F.col(id_col).alias("id"), F.trim(F.col(text_col)).alias("_tt")
     ).withColumn("_ws", F.split(F.col("_tt"), " "))
     gram = F.transform(
         F.sequence(F.lit(0), F.size("_ws") - n),
@@ -567,17 +557,11 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id",
         correctness oracle computes the identical signature). Pass
         nbits=60 with it.
     """
-    from paraocr_spark.operators.skew import ensure_min_parallelism
-
-    toks = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), 0)
-    # fan out a coarse scan BEFORE the explode: the per-token hash pass
-    # (md5+conv for the portable hasher) otherwise runs on the 1-2 splits
-    # a small parquet input yields (skew.ensure_min_parallelism; no-op at
-    # scale where the scan has >= cores splits)
-    ex = ensure_min_parallelism(
-        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
-    ).select("id", F.explode(F.regexp_extract_all(
-        F.lower(F.col("_t")), F.lit("[a-z0-9]+"), 0)).alias("t"))
+    ex = docs.select(
+        F.col(id_col).alias("id"),
+        F.explode(F.regexp_extract_all(
+            F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), 0)).alias("t"),
+    )
     if hasher == "md5_60":
         h = F.conv(F.substring(F.md5(F.col("t").cast("binary")), 1, 15), 16, 10).cast("long")
     else:

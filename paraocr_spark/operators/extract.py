@@ -263,24 +263,22 @@ def extract_pages(pages: DataFrame, *, salt: bool = True,
     materialize the full corpus at 100 TB. ``salt=False`` sends every row
     down the normal branch (no giant branch, no second scan).
 
-    The normal kernel's input goes through skew.ensure_min_parallelism: a
-    small input (one parquet row group -> 1-2 scan splits) would otherwise
-    run the whole Python kernel on 1-2 cores (measured 4.6 s -> 1.0 s at
-    50k docs/local[32]). At scale the scan has >= cores splits and NO
-    Exchange is added, preserving the shuffle-free kernel plan (tests
-    assert both shapes).
+    The normal kernel runs with its input's partitioning: no Exchange, the
+    shuffle-free kernel plan. A coarse input is fanned out where it is
+    read (sources.io.read_table, read_pages_zip), never here, so building
+    this plan runs no Spark job.
 
     ``n_buckets`` (writers only) buckets each branch for
     sources.io.write_extracted BELOW the union — see union_branches.
     """
-    from paraocr_spark.operators.skew import ensure_min_parallelism, salt_pages
+    from paraocr_spark.operators.skew import salt_pages
 
     if salt:
         normal, giant_pages = split_normal_giants(pages)
     else:
         normal, giant_pages = _unsharded(pages), None
     branches = [
-        extract_kernel(ensure_min_parallelism(normal), backend, backend_kwargs,
+        extract_kernel(normal, backend, backend_kwargs,
                        lineage_acc).drop("shard_id", "n_shards")
     ]
     if giant_pages is not None:

@@ -49,7 +49,10 @@ def _norm(a):
 
 
 def cosine_col(a, b):
-    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), 4)
+    """4dp cosine; null when either side is a zero vector, under ANSI on
+    and off alike (try_divide: a plain divide is null with ANSI off and
+    raises DIVIDE_BY_ZERO with it on)."""
+    return F.round(F.try_divide(_dot(a, b), _norm(a) * _norm(b)), 4)
 
 
 def neardup_pairs(emb: DataFrame, threshold: float,
@@ -393,13 +396,6 @@ def lsh_signatures(emb: DataFrame, dim: int = _DIM_DEFAULT, bits: int = _BITS,
         M = np.stack(v.to_numpy())  # (n, dim) float32
         return pd.Series(list(_bucket_matrix(M, dim, bits, tables)))
 
-    # NOT fanned out (skew.ensure_min_parallelism): a signature is one row
-    # of a per-batch matmul — microseconds of work per row — so on a small
-    # scan the round-robin Exchange costs about what the 2-core matmul
-    # does (sub-second either way, unresolvable under host noise), and at
-    # scale the embedding scan is already wide, making the fanout a
-    # no-op. Keeping the r5 plan shape avoids an Exchange that buys
-    # nothing at either end.
     ex = emb.select(
         F.col(id_col).alias("id"),
         F.posexplode(buckets(F.col(vec_col))).alias("table", "bucket"),
@@ -490,10 +486,14 @@ def neardup_pairs_lsh(emb: DataFrame, threshold: float,
     # whose 4dp-rounded value is what filters and is emitted — so results
     # are identical (the margin covers the 4dp round-up; numpy-vs-JVM
     # summation-order ulps are ~1e-15, far inside it).
+    # The hint only decides whether to try: the collect itself stops at
+    # cap + 1 rows, so an understated hint cannot pull an oversized table
+    # onto the driver — it falls back to the join-only path instead.
+    cap = _PREFILTER_BROADCAST_MAX_BYTES // (dim * 8)
     if n_rows is None:  # callers with table stats pass the hint instead
         n_rows = emb.count()
-    if n_rows * dim * 8 <= _PREFILTER_BROADCAST_MAX_BYTES:
-        rows = emb.select(id_col, vec_col).collect()
+    rows = emb.select(id_col, vec_col).limit(cap + 1).collect() if n_rows <= cap else []
+    if 0 < len(rows) <= cap:
         ids = np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows))
         M = np.array([list(r[1]) for r in rows], dtype=np.float64)
         with np.errstate(invalid="ignore"):  # zero-norm rows become NaN
@@ -515,8 +515,8 @@ def neardup_pairs_lsh(emb: DataFrame, threshold: float,
                                  count=len(b))
                 cos = np.einsum("ij,ij->i", M_[ra], M_[rb])
                 # NaN (a zero-norm side) is not pruned: the rerank decides
-                # it exactly as on the join-only path — a null cosine, or
-                # DIVIDE_BY_ZERO under ANSI
+                # it exactly as on the join-only path — a null cosine,
+                # which drops the pair
                 keep = ~(cos < tmin)
                 yield pdf[["a", "b"]][keep]
 

@@ -10,7 +10,7 @@ and reassembled deterministically by ``groupBy(url)`` +
 shuffle order (SURVEY.md §7 step 5).
 
 HTML documents are single parse units and are not split; their skew is
-absorbed by round-robin repartitioning upstream plus AQE.
+absorbed by the scan's fan-out (sources.io.read_table) plus AQE.
 """
 
 from __future__ import annotations
@@ -29,42 +29,6 @@ GIANT_BYTES_THRESHOLD = 64 * 1024
 PAGES_PER_SHARD = 64
 
 _SHARD_COLS = "url string, warc_ts timestamp, html binary, text string, lang string, shard_id int, n_shards int"
-
-
-def ensure_min_parallelism(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Round-robin fan-out of a too-coarse input; NO-OP when the plan
-    already has >= target partitions.
-
-    Why (guide §2, scale-adaptive partitioning): a small parquet input is
-    one row group and one or two scan splits, so every downstream map
-    stage — a Python kernel, a regex tokenize, an n-gram explode, an md5
-    pass — runs on 1-2 of the cluster's cores while the rest idle
-    (measured at 50k docs/local[32]: the extraction kernel ran 4.6 s on a
-    2-split scan vs 1.0 s fanned out). At production scale a corpus scan
-    yields thousands of splits >= defaultParallelism, so this adds NO
-    Exchange there — the condition is evaluated from the actual plan
-    partitioning, not a constant tuned to either environment.
-
-    ``target`` defaults to sparkContext.defaultParallelism (the total core
-    count of the app, any master). The keyless repartition round-robins
-    whole rows; Spark's sort-before-repartition (SPARK-23207, on by
-    default) keeps the row-to-partition assignment deterministic under
-    task retry.
-
-    Cost: the probe is NOT free. ``df.rdd.getNumPartitions()`` builds the
-    RDD, and under AQE that plans the query and RUNS its shuffle stages to
-    learn the final partitioning — Spark jobs at plan-build time, before
-    the caller's action. Traced at local[4] (perfbench, seed 1): 2 jobs
-    and 0.27-0.34 s on the extract_incremental workload's resume plan (the
-    anti-join's stages), 12 jobs and 3.0 s in one clean_corpus call, and
-    none over a plain scan. Deciding the fan-out once at the source
-    instead is ROADMAP direction 2.
-    """
-    sc = df.sparkSession.sparkContext
-    t = int(target or sc.defaultParallelism)
-    if df.rdd.getNumPartitions() < t:
-        return df.repartition(t)
-    return df
 
 
 def _is_layout_col():

@@ -55,9 +55,9 @@ class PipelineConfig:
     ``ignore_url_keywords``: documents whose url matches any keyword
     (case-insensitive substring) are skipped BEFORE extraction — the
     --ignore-keywords analog (cli.py:249-251), pushed into the source scan.
-    Input parallelism is not a knob: the kernel input is fanned out to the
-    core count only when the scan is coarser than that
-    (skew.ensure_min_parallelism).
+    Input parallelism is not a knob: the kernel runs with the partitioning
+    of ``pages``, which sources.io.read_table / read_pages_zip already fan
+    out to the core count when the source is coarser than that.
     """
     run_id: str = "run0"
     salt: bool = True

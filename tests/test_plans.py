@@ -22,6 +22,13 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def _exchanges(p: str) -> list:
+    import re
+
+    return [m.group(0) for m in
+            re.finditer(r"\(\d+\) Exchange[^(]*(?:\n(?!\(\d+\)).*)*", p)]
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -54,20 +61,13 @@ def test_ann_topk_two_phase(spark):
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     p = plan_of(ann_topk_bruteforce(emb, k=5, n_queries=10))
-    import re
-
     assert "MapInPandas" in p
     assert "Join" not in p  # no crossjoin of candidates x queries
-    # the window's hashpartition(q) is the ONLY keyed Exchange; the input
-    # fanout (skew.ensure_min_parallelism — fires only on a coarse scan,
-    # i.e. at test SFs, never at scale) may add one round-robin Exchange
-    exchanges = [
-        m.group(0)
-        for m in re.finditer(r"\(\d+\) Exchange[^(]*(?:\n(?!\(\d+\)).*)*", p)
-    ]
-    keyed = [e for e in exchanges if "hashpartitioning" in e]
-    rr = [e for e in exchanges if "RoundRobinPartitioning" in e]
-    assert len(keyed) == 1 and len(exchanges) == len(keyed) + len(rr)
+    # the window's hashpartition(q) is the ONLY Exchange: the operator adds
+    # no input fan-out of its own (a coarse table is fanned out where it is
+    # read, sources.io.read_table, and this plain scan is not)
+    exchanges = _exchanges(p)
+    assert len(exchanges) == 1 and "hashpartitioning" in exchanges[0]
 
 
 def test_dedup_exact_partial_agg(spark, docs):
@@ -101,9 +101,9 @@ def test_simhash_no_python(spark, docs):
 def test_kernel_no_shuffle_for_normal_docs(spark, tmp_path):
     """The extraction kernel on non-giant docs is shuffle-free: scan ->
     ArrowEvalPython/MapInPandas -> project. Any Exchange here would shuffle
-    the full corpus at 100 TB. The input is the at-scale shape — a scan
-    with >= defaultParallelism splits — where the kernel-input fan-out
-    (tested below on a coarse input) adds nothing."""
+    the full corpus at 100 TB. The operator never fans out its input (a
+    coarse source is fanned out at the scan, tested below); the input here
+    is the at-scale shape, a scan with >= defaultParallelism splits."""
     from paraocr_spark.operators.extract import extract_pages
     from paraocr_spark.sources.pages import pages_from_documents
 
@@ -118,28 +118,96 @@ def test_kernel_no_shuffle_for_normal_docs(spark, tmp_path):
     assert "MapInPandas" in p
 
 
-def test_fanout_conditional_on_scan_parallelism(spark):
-    """ensure_min_parallelism (guide §2: scale-adaptive partitioning) must
-    round-robin a too-coarse input up to defaultParallelism — a one-row-
-    group parquet file otherwise runs every map stage on 1-2 cores — and
-    must be a NO-OP (no added Exchange) once the input already has enough
-    partitions, which is the 100 TB case."""
-    from paraocr_spark.operators.extract import extract_pages
-    from paraocr_spark.operators.skew import ensure_min_parallelism
+def _jobs_in(sc, group: str, fn):
+    """(fn(), ids of the Spark jobs fn ran), via a job group."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fanout_conditional_on_scan_parallelism(spark, tmp_path):
+    """The scan decides input fan-out once (guide §2: scale-adaptive
+    partitioning). A parquet table with fewer row groups than
+    defaultParallelism — a one-row-group file would run every map stage on
+    one core — gets exactly one round-robin Exchange to defaultParallelism;
+    a table with >= defaultParallelism row groups (the 100 TB case) gets
+    none. The decision reads only the footers: read_table runs no job
+    beyond spark.read.parquet's own schema inference. A zip source decides
+    the same way from its archive count."""
+    import zipfile
+
+    import pyarrow.parquet as pq
+
+    from paraocr_spark.sources import io as pio
+
+    sc = spark.sparkContext
+    target = sc.defaultParallelism
+    coarse_path = f"{SF_DIR}/documents.parquet"
+    assert pq.read_metadata(coarse_path).num_row_groups == 1
+    wide_path = str(tmp_path / "wide")
+    spark.read.parquet(coarse_path).repartition(target).write.parquet(wide_path)
+    assert sum(pq.read_metadata(f).num_row_groups
+               for f in (tmp_path / "wide").glob("*.parquet")) >= target
+
+    for path, n_rr in ((coarse_path, 1), (wide_path, 0)):
+        _, read_jobs = _jobs_in(sc, f"read_{n_rr}", lambda: spark.read.parquet(path))
+        df, jobs = _jobs_in(sc, f"read_table_{n_rr}",
+                            lambda: pio.read_table(spark, path))
+        assert len(jobs) == len(read_jobs), path
+        p = plan_of(df)
+        assert len(_exchanges(p)) == n_rr, path
+        assert p.count(f"RoundRobinPartitioning({target})") == n_rr, path
+
+    def zips(n: int) -> str:
+        d = tmp_path / f"zips{n}"
+        d.mkdir()
+        for z in range(n):
+            with zipfile.ZipFile(d / f"a{z}.zip", "w") as zf:
+                zf.writestr("p.txt", "hello")
+        return str(d)
+
+    one = plan_of(pio.read_pages_zip(spark, zips(1)))
+    assert len(_exchanges(one)) == 1
+    assert f"RoundRobinPartitioning({target})" in one
+    assert not _exchanges(plan_of(pio.read_pages_zip(spark, zips(target))))
+
+
+def test_no_spark_job_while_building_plans(spark):
+    """Building a plan runs no Spark job. A probe such as
+    ``df.rdd.getNumPartitions()`` would: under AQE it plans the query and
+    runs its shuffle stages. Covered: the resume anti-join as a sort-merge
+    join (broadcast off, no shard cache) and the corpus operators over a
+    post-shuffle input."""
+    from paraocr_spark.operators.corpus import span_dedup, tfidf_top_terms
+    from paraocr_spark.operators.dedup import simhash64, with_shingles
+    from paraocr_spark.pipeline import PipelineConfig, run_extraction
     from paraocr_spark.sources.pages import pages_from_documents
 
-    target = spark.sparkContext.defaultParallelism
+    sc = spark.sparkContext
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    shuffled = docs.join(docs.select("doc_id").distinct(), "doc_id")
     pages = pages_from_documents(docs, "html")
-    coarse = pages.coalesce(1)
-    assert ensure_min_parallelism(coarse).rdd.getNumPartitions() == target
-    wide = pages.repartition(target + 1)
-    # already-parallel input: returned UNCHANGED (same plan object, so the
-    # kernel plan stays Exchange-free beyond the caller's own repartition)
-    assert ensure_min_parallelism(wide) is wide
-    # and the fanout default routes the kernel input through it
-    p = plan_of(extract_pages(coarse, salt=False))
-    assert "MapInPandas" in p and "Exchange" in p
+    done = pages_from_documents(docs.where(F.col("doc_id") % 3 == 0), "html")
+    builds = {
+        "run_extraction": lambda: run_extraction(spark, pages, PipelineConfig(),
+                                                 done=done),
+        "with_shingles": lambda: with_shingles(shuffled),
+        "simhash64": lambda: simhash64(shuffled),
+        "tfidf_top_terms": lambda: tfidf_top_terms(shuffled),
+        "span_dedup": lambda: span_dedup(shuffled),
+    }
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        ran = {name: len(_jobs_in(sc, f"build_{name}", build)[1])
+               for name, build in builds.items()}
+    finally:
+        spark.conf.set(key, prior)
+    assert ran == {name: 0 for name in builds}
 
 
 def test_lineage_rollup_partial_agg(spark):

@@ -160,11 +160,11 @@ def test_neardup_auto_row_count_hint_skips_probe(spark):
 def test_neardup_lsh_prefilter_matches_join_only_on_zero_norm_rows(
         spark, monkeypatch, ansi):
     """A zero vector has no cosine. The exact rerank (cosine_col) gives it
-    a null cosine with ANSI off and raises DIVIDE_BY_ZERO with ANSI on; the
+    a null cosine — dropping its pairs — under ANSI on and off alike; the
     numpy prefilter normalizes it to NaN. The prefilter may only drop pairs
     the rerank would drop, so with the embedding broadcast (prefilter) and
-    without it (join-only) the outcome must be the same rows or the same
-    error."""
+    without it (join-only) the rows must be the same, and the same under
+    either ANSI setting."""
     H0 = similarity._hyperplanes(64, similarity._BITS, similarity._TABLES)[0]
     # every table-0 projection negative: bucket 0, the zero vector's bucket
     w = -H0.T @ np.linalg.solve(H0 @ H0.T, np.ones(len(H0)))
@@ -176,11 +176,8 @@ def test_neardup_lsh_prefilter_matches_join_only_on_zero_norm_rows(
     )
 
     def outcome():
-        try:
-            return sorted(tuple(r) for r in
-                          similarity.neardup_pairs_lsh(emb, 0.5).collect())
-        except Exception as e:  # noqa: BLE001 - the error IS the outcome
-            return "DIVIDE_BY_ZERO" if "DIVIDE_BY_ZERO" in str(e) else repr(e)
+        return sorted(tuple(r) for r in
+                      similarity.neardup_pairs_lsh(emb, 0.5).collect())
 
     prior = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", ansi)
@@ -190,6 +187,31 @@ def test_neardup_lsh_prefilter_matches_join_only_on_zero_norm_rows(
         join_only = outcome()
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prior)
-    assert prefilter == join_only
-    if ansi == "false":
-        assert join_only == [(1, 2, 1.0)]
+    assert prefilter == join_only == [(1, 2, 1.0)]
+
+
+def test_neardup_lsh_understated_hint_cannot_oversize_the_prefilter(
+        spark, monkeypatch):
+    """The ``n_rows`` hint only decides whether to try the broadcast
+    prefilter: the driver collect stops at the byte cap + 1 row, so a hint
+    of 1 over a table above the cap takes the join-only path (no prefilter
+    MapInPandas) with the join-only rows."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    n = emb.count()
+    row_bytes = similarity._DIM_DEFAULT * 8
+
+    def run(hint):
+        q = similarity.neardup_pairs_lsh(emb, 0.3, n_rows=hint)
+        plan = q._jdf.queryExecution().optimizedPlan().toString()
+        return sorted(tuple(r) for r in q.collect()), "MapInPandas" in plan
+
+    monkeypatch.setattr(similarity, "_PREFILTER_BROADCAST_MAX_BYTES", 0)
+    join_only, prefiltered = run(None)
+    assert not prefiltered
+    # the table fits: the hint of 1 is honest enough, the prefilter runs
+    monkeypatch.setattr(similarity, "_PREFILTER_BROADCAST_MAX_BYTES", n * row_bytes)
+    assert run(1) == (join_only, True)
+    # one row over the cap: the same hint now falls back to the join-only path
+    monkeypatch.setattr(similarity, "_PREFILTER_BROADCAST_MAX_BYTES",
+                        (n - 1) * row_bytes)
+    assert run(1) == (join_only, False)

@@ -34,8 +34,9 @@ COMMENT = {
         "exactly once per row; the normal branch is Exchange-free end to "
         "end, the giant branch shuffles only the rare >64KB layout docs and "
         "reassembles with one keyed groupBy (JVM-side span shifting). The "
-        "round-robin Exchange under the normal kernel is the small-input "
-        "fan-out (skew.ensure_min_parallelism); at scale it is absent."
+        "operator adds no input fan-out: a coarse table is round-robined "
+        "to the cores where it is read (sources.io.read_table), so this "
+        "plain scan, like any scan at scale, feeds the kernel directly."
     ),
     "extraction pipeline (salted, bucketed for the write)": (
         "The plan run_and_write, the shard-cache path and the streaming "
