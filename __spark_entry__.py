@@ -501,15 +501,15 @@ def _q_gopher_quality(spark, sf_dir):
 
 def _q_media_stats(spark, sf_dir):
     """Multimodal lane rollup (VERDICT r4 #2): deterministic synthetic media
-    derived from doc_id -> header decode (with_media_meta) -> frame decode +
-    mean-pixel feature (mean_pixel_features, errors in-band) -> per
-    (kind, valid) rollup. One linear chain of three Arrow kernels, no
-    diamond; the DuckDB twin predicts every value from the id rules in
+    derived from doc_id -> header decode + frame decode + mean-pixel feature
+    in one pass (mean_pixel_features, errors in-band) -> per (kind, valid)
+    rollup. One linear chain of two Arrow kernels, no diamond; the DuckDB
+    twin predicts every value from the id rules in
     multimodal.synthetic_media."""
     from paraocr_spark import multimodal as mm
 
     media = mm.synthetic_media(_docs(spark, sf_dir).select("doc_id"))
-    feats = mm.mean_pixel_features(mm.with_media_meta(media))
+    feats = mm.mean_pixel_features(media)
     return (
         feats.groupBy(
             F.col("meta.kind").alias("kind"), F.col("meta.valid").alias("valid")

@@ -66,8 +66,10 @@ def _decode_frame_pillow(payload: bytes, frame: int = 0) -> np.ndarray:
     return np.asarray(im.convert("RGB"))
 
 
-def decode_frame(payload: bytes, frame: int = 0) -> np.ndarray:
-    """Decode one frame to an HxWxC uint8 array.
+def decode_frame(payload: bytes, frame: int = 0,
+                 meta: dict | None = None) -> np.ndarray:
+    """Decode one frame to an HxWxC uint8 array. ``meta`` is the payload's
+    decode_image_meta when the caller has already parsed the header.
 
     Synthetic-format payloads decode natively; anything else goes to the
     Pillow path when the library exists, else raises NotImplementedError —
@@ -78,7 +80,7 @@ def decode_frame(payload: bytes, frame: int = 0) -> np.ndarray:
     """
     if not payload:
         raise ValueError("empty payload")
-    meta = decode_image_meta(payload)
+    meta = meta or decode_image_meta(payload)
     if not meta["valid"]:
         try:
             return _decode_frame_pillow(bytes(payload), frame)
@@ -100,59 +102,42 @@ def decode_frame(payload: bytes, frame: int = 0) -> np.ndarray:
     return np.frombuffer(buf, dtype=np.uint8).reshape(h, w, c)
 
 
-def with_media_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Attach the typed metadata struct via one vectorized pass.
+def mean_pixel_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """Attach the typed metadata struct and the per-media mean pixel value
+    of frame 0 (the feature-extraction stub) in one vectorized pass.
 
     mapInPandas (not a per-row UDF): one Python call per Arrow batch, the
-    same kernel pattern as extraction (operators/extract.py).
-    """
-    in_cols = df.columns
-    out_ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema = out_ddl + f", meta {MEDIA_META_DDL}"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if not len(b):
-                continue
-            b = b.copy()
-            b["meta"] = [
-                decode_image_meta(None if p is None else bytes(p))
-                for p in b[payload_col]
-            ]
-            yield b[in_cols + ["meta"]]
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def mean_pixel_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Per-media mean pixel value of frame 0 — the feature-extraction stub.
-
-    Real feature extractors (CLIP embeddings, mel spectrograms) drop into
-    the same batch loop; errors stay in-band like the text kernel. Every
-    input column except the payload passes through, so a decode -> meta ->
-    feature chain stays ONE linear plan (no diamond re-reading the payload
-    source per derived column).
+    same kernel pattern as extraction (operators/extract.py), and each
+    header is parsed once for both columns. Real feature extractors (CLIP
+    embeddings, mel spectrograms) drop into the same batch loop; errors stay
+    in-band like the text kernel. Every input column except the payload
+    passes through, so a decode -> meta -> feature chain stays ONE linear
+    plan (no diamond re-reading the payload source per derived column).
     """
     keep = [f.name for f in df.schema.fields if f.name != payload_col]
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in df.schema.fields if f.name != payload_col
-    ) + ", mean_pixel double, error string"
+    ) + f", meta {MEDIA_META_DDL}, mean_pixel double, error string"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             if not len(b):
                 continue
-            means, errs = [], []
+            metas, means, errs = [], [], []
             for p in b[payload_col]:
+                p = None if p is None else bytes(p)
+                meta = decode_image_meta(p)
+                metas.append(meta)
                 try:
-                    arr = decode_frame(None if p is None else bytes(p))
+                    arr = decode_frame(p, meta=meta)
                     means.append(float(arr.mean()))
                     errs.append(None)
                 except (NotImplementedError, ValueError) as e:
                     means.append(None)
                     errs.append(str(e))
             out = b[keep].copy()
+            out["meta"] = metas
             out["mean_pixel"] = means
             out["error"] = errs
             yield out

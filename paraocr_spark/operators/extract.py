@@ -45,6 +45,7 @@ from paraocr_spark.core.reference import METHOD_ERROR, METHOD_LAYOUT
 
 from paraocr_spark.core.features import (FEATURE_CAP, FEATURES_DDL,
                                           compute_features_batch)
+from paraocr_spark.operators.lineage import report, tally
 
 EXTRACTED_SCHEMA_DDL = (
     "url string, warc_ts timestamp, lang string, extracted_text string, "
@@ -128,49 +129,50 @@ def extract_kernel(df: DataFrame, backend: str = "default",
     registry name or dotted module.Class path (backends.py); only the
     strings travel in the closure — workers resolve them locally.
 
-    ``lineage_acc`` (a LineageAccParam accumulator) fuses the per-partition
-    lineage rollup into THIS action: each task sends one
-    {(stage, pid): (docs, bytes, kernel_wall)} update at completion, so the
-    caller gets lineage without a second read-back job over the written
-    table — the Amdahl fixed cost that capped 1x2->4x2 scaling (r4 ladder:
-    f≈27.5 s/run). Docs are counted on shard_id==0 rows only, so a salted
-    giant counts once (its reassembled output row), matching the read-back
-    rollup's row count exactly.
+    ``lineage_acc`` (a LineageAccParam accumulator) fuses the lineage
+    rollup into THIS action: the task counts every row it outputs under its
+    _pid and sends one update at completion (operators/lineage.py), so the
+    caller gets lineage without a second job over the written table. Pass
+    it only where every output row is a written row — the normal branch;
+    shard rows are counted after reassembly (_merge_shards_relational).
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
-        t_docs = t_bytes = 0
-        t_wall = 0.0
+        totals: dict = {}
         for b in batches:
             if len(b):
                 out = _extract_batch(b, pid, backend, backend_kwargs)
                 if lineage_acc is not None:
-                    t_docs += int((out["shard_id"].to_numpy() == 0).sum())
-                    t_bytes += int(out["_doc_bytes"].sum())
-                    t_wall += float(out["_wall_s"].sum())
+                    tally(totals, out["_pid"], out["_doc_bytes"],
+                          out["_wall_s"])
                 yield out
-        if lineage_acc is not None and ctx is not None:
-            lineage_acc.add({(ctx.stageId(), pid): (t_docs, t_bytes, t_wall)})
+        report(lineage_acc, totals)
 
     return df.mapInPandas(run, schema=_KERNEL_SCHEMA_DDL)
 
 
-def _merge_shards_relational(kernel_out: DataFrame) -> DataFrame:
+def _merge_shards_relational(kernel_out: DataFrame,
+                             lineage_acc=None) -> DataFrame:
     """Reassemble giant-doc shards WITHOUT moving bytes through Python.
 
     groupBy(url) + array_sort(collect_list(struct(shard_id, ...))) gives a
     deterministic shard order (never shuffle order — SURVEY.md §7); the
     merged text is a JVM-side concat_ws, and span offsets shift via a
     higher-order aggregate() that carries a running offset. Only the final
-    per-doc feature computation touches Python — as a scalar pandas_udf fed
+    per-doc feature computation touches Python — as an iterator pandas_udf fed
     the JVM-side substring(text, 1, FEATURE_CAP) prefix plus length(text),
     so the merged giant text itself (tens of MB per doc) NEVER crosses
     Arrow: every feature field except n_chars derives from the capped
     prefix by construction (core/features.py docstring), and n_chars rides
     in as the JVM length. The previous mapInPandas form round-tripped the
     full merged text through Python twice per giant.
+
+    That UDF is also the Python task that finishes each merged row, so with
+    ``lineage_acc`` it counts the row under its merged _pid, _doc_bytes and
+    _wall_s (sums over the shards, cached or fresh) and sends one update at
+    task end (operators/lineage.py).
     """
     pb = F.lit(PAGE_BREAK)
     grouped = kernel_out.groupBy("url").agg(
@@ -221,23 +223,31 @@ def _merge_shards_relational(kernel_out: DataFrame) -> DataFrame:
     )
 
     @F.pandas_udf(FEATURES_DDL)
-    def giant_features(prefix: pd.Series, n_chars: pd.Series) -> pd.DataFrame:
+    def giant_features(
+        batches: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series,
+                                pd.Series]],
+    ) -> Iterator[pd.DataFrame]:
         # prefix is already text[:FEATURE_CAP] (JVM substring; both count
         # code points) — compute_features_batch re-caps it, a no-op. Its
         # n_chars is len(prefix); override with the uncapped JVM length
         # (null text -> null length -> keep the zero-features 0).
-        feats = compute_features_batch(list(prefix))
-        for f, n in zip(feats, n_chars):
-            if not pd.isna(n):
-                f["n_chars"] = int(n)
-        return pd.DataFrame(feats)
+        totals: dict = {}
+        for prefix, n_chars, pid, doc_bytes, wall_s in batches:
+            feats = compute_features_batch(list(prefix))
+            for f, n in zip(feats, n_chars):
+                if not pd.isna(n):
+                    f["n_chars"] = int(n)
+            if lineage_acc is not None:
+                tally(totals, pid, doc_bytes, wall_s)
+            yield pd.DataFrame(feats)
+        report(lineage_acc, totals)
 
     return merged.select(
         "url", "warc_ts", "lang", "extracted_text", "spans", "method",
         "error",
         giant_features(
             F.substring("extracted_text", 1, FEATURE_CAP),
-            F.length("extracted_text"),
+            F.length("extracted_text"), "_pid", "_doc_bytes", "_wall_s",
         ).alias("features"),
         "_pid", "_doc_bytes", "_wall_s",
     )
@@ -270,6 +280,8 @@ def extract_pages(pages: DataFrame, *, salt: bool = True,
 
     ``n_buckets`` (writers only) buckets each branch for
     sources.io.write_extracted BELOW the union — see union_branches.
+    ``lineage_acc`` goes to the two tasks that finish written rows: the
+    normal kernel and the giant reassembly, never the shard kernel.
     """
     from paraocr_spark.operators.skew import salt_pages
 
@@ -283,8 +295,8 @@ def extract_pages(pages: DataFrame, *, salt: bool = True,
     ]
     if giant_pages is not None:
         branches.append(_merge_shards_relational(
-            extract_kernel(salt_pages(giant_pages), backend, backend_kwargs,
-                           lineage_acc)
+            extract_kernel(salt_pages(giant_pages), backend, backend_kwargs),
+            lineage_acc,
         ))
     return union_branches(branches, n_buckets)
 

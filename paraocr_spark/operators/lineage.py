@@ -3,9 +3,17 @@
 Analog of the reference's performance log (PerformanceTracker,
 parallel.py:33-61, sink parallel.py:124-137): wall time measured inside the
 kernel per Arrow batch, attributed evenly across the batch's rows
-(parallel.py:42-49), then rolled up per Spark partition with one tiny
-groupBy. The lineage table doubles as the resume checkpoint's audit trail
-(FIXTURES.md §3).
+(parallel.py:42-49), then rolled up per partition through one accumulator
+that rides the write action. The lineage table doubles as the resume
+checkpoint's audit trail (FIXTURES.md §3).
+
+Attribution rule: each written row is counted once, under its own ``_pid``,
+by the Python task that finishes it — the normal kernel for whole docs
+(operators/extract.extract_kernel), the reassembly's feature UDF for giant
+docs (operators/extract._merge_shards_relational), whose merged metrics are
+sums over the shards, so shards reused from the shard cache report exactly
+like fresh ones. The lineage rows therefore equal a groupBy(_pid) over the
+rows the invocation wrote.
 """
 
 from __future__ import annotations
@@ -13,27 +21,23 @@ from __future__ import annotations
 import hashlib
 import json
 
-from pyspark import AccumulatorParam
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-LINEAGE_SCHEMA_DDL = (
-    "run_id string, partition_id int, doc_count long, bytes long, "
-    "wall_time_s double, config_fp string, invocation_id string"
-)
+import numpy as np
+import pandas as pd
+from pyspark import AccumulatorParam, TaskContext
 
 
 class LineageAccParam(AccumulatorParam):
-    """Replace-merge dict accumulator: {(stage_id, partition_id): (docs,
-    bytes, kernel_wall_s)}.
+    """Replace-merge dict accumulator:
+    {(stage_id, task_partition_id): {row_pid: (docs, bytes, kernel_wall_s)}}.
 
-    Each kernel task sends exactly ONE update (its whole-partition totals)
-    keyed by (stage_id, partition_id) — unique per task within a stage, and
-    STABLE across task retries / speculative attempts / stage resubmission
-    (retries keep the stage id). Merging by key replacement therefore makes
-    the rollup idempotent under every re-execution mode, sidestepping the
-    classic "accumulators in transformations double-count on retry" hazard:
-    a retried task overwrites its own earlier entry instead of adding to it.
+    Each reporting task sends exactly ONE update (its whole-task totals per
+    row pid) keyed by (stage_id, task_partition_id) — unique per task within
+    a stage, and STABLE across task retries / speculative attempts / stage
+    resubmission (retries keep the stage id). Merging by key replacement
+    therefore makes the rollup idempotent under every re-execution mode,
+    sidestepping the classic "accumulators in transformations double-count
+    on retry" hazard: a retried task overwrites its own earlier entry
+    instead of adding to it.
     """
 
     def zero(self, value):  # noqa: D102 — AccumulatorParam contract
@@ -44,33 +48,38 @@ class LineageAccParam(AccumulatorParam):
         return a
 
 
+def tally(totals: dict, pids: pd.Series, nbytes: pd.Series,
+          wall: pd.Series) -> None:
+    """Fold one batch's per-row metric columns (_pid, _doc_bytes, _wall_s)
+    into a task's {row_pid: (docs, bytes, wall_s)} totals."""
+    pids, nbytes, wall = pids.to_numpy(), nbytes.to_numpy(), wall.to_numpy()
+    for pid in np.unique(pids):
+        rows = pids == pid
+        d0, b0, w0 = totals.get(int(pid), (0, 0, 0.0))
+        totals[int(pid)] = (d0 + int(rows.sum()), b0 + int(nbytes[rows].sum()),
+                            w0 + float(wall[rows].sum()))
+
+
+def report(lineage_acc, totals: dict) -> None:
+    """Send a finished task's totals as its one accumulator update."""
+    ctx = TaskContext.get()
+    if lineage_acc is not None and ctx is not None and totals:
+        lineage_acc.add({(ctx.stageId(), ctx.partitionId()): totals})
+
+
 def lineage_rows_from_acc(acc_value: dict, run_id: str, config_fp: str,
                           invocation_id: str) -> list[dict]:
-    """Driver-side rollup of the kernel accumulator into lineage rows.
-
-    Sums the (stage, pid) entries by pid — the normal and giant kernel
-    branches run in different stages but may share partition ids, and the
-    lineage contract is one row per kernel partition (matching the
-    read-back rollup's groupBy(_pid)).
-
-    PER-PID ATTRIBUTION CAVEAT (ADVICE r5): on runs with giant shards the
-    two lineage paths attribute rows differently — this accumulator path
-    emits a doc_count=0 row for a partition that processed only shards
-    (docs==0, bytes>0) and charges giants to the kernel-task pids that ran
-    the shards, while the shard-cache read-back rollup groups a giant
-    under its MERGED row's _pid and never emits bytes-only rows. Totals
-    (doc_count / bytes / wall sums) agree exactly; per-partition rows do
-    not. Consumers must treat partition_id as an attribution key, not a
-    stable identity across the two paths."""
+    """Driver-side rollup of the accumulator into lineage rows: the tasks'
+    inner {row_pid: totals} dicts summed by row pid (the normal kernel and
+    the giant reassembly run in different stages but may report the same
+    row pid), one row per pid that has written rows."""
     by_pid: dict[int, list] = {}
-    for (_stage, pid), (docs, nbytes, wall) in acc_value.items():
-        if docs == 0 and nbytes == 0:
-            continue  # empty partition (e.g. a fully-resumed run): no row,
-            # matching the read-back rollup over zero written rows
-        cur = by_pid.setdefault(pid, [0, 0, 0.0])
-        cur[0] += docs
-        cur[1] += nbytes
-        cur[2] += wall
+    for totals in acc_value.values():
+        for pid, (docs, nbytes, wall) in totals.items():
+            cur = by_pid.setdefault(pid, [0, 0, 0.0])
+            cur[0] += docs
+            cur[1] += nbytes
+            cur[2] += wall
     return [
         {
             "run_id": run_id,
@@ -93,27 +102,3 @@ def config_fingerprint(config: dict) -> str:
     """
     blob = json.dumps(config, sort_keys=True, default=str).encode("utf-8")
     return hashlib.sha1(blob).hexdigest()
-
-
-def lineage_rollup(extracted_with_metrics: DataFrame, run_id: str,
-                   config_fp: str, invocation_id: str = "") -> DataFrame:
-    """Roll kernel metric columns (_pid, _doc_bytes, _wall_s) into lineage rows.
-
-    ``run_id`` is the user-facing label; ``invocation_id`` (run_id + uuid,
-    stamped by run_and_write) uniquely scopes one invocation so resumed
-    runs never double-count prior appends."""
-    return (
-        extracted_with_metrics
-        .groupBy(F.col("_pid").alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.sum("_doc_bytes").alias("bytes"),
-            F.sum("_wall_s").alias("wall_time_s"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            "partition_id", "doc_count", "bytes", "wall_time_s",
-            F.lit(config_fp).alias("config_fp"),
-            F.lit(invocation_id).alias("invocation_id"),
-        )
-    )

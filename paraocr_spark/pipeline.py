@@ -27,7 +27,6 @@ from paraocr_spark.operators.extract import extract_pages
 from paraocr_spark.operators.lineage import (
     LineageAccParam,
     config_fingerprint,
-    lineage_rollup,
     lineage_rows_from_acc,
 )
 from paraocr_spark.operators.resume import filter_unprocessed
@@ -108,7 +107,7 @@ def ignore_keyword_filter(pages: DataFrame, keywords: list) -> DataFrame:
 
 def extract_with_shard_cache(
     spark: SparkSession, todo: DataFrame, cfg: PipelineConfig,
-    n_buckets: int | None = None,
+    n_buckets: int | None = None, lineage_acc=None,
 ) -> DataFrame:
     """Extraction with SHARD-granular partial-result reuse for giant docs.
 
@@ -125,12 +124,15 @@ def extract_with_shard_cache(
 
     NOTE eager: appending fresh shards to the cache is an ACTION (runs the
     giant kernel when called); the returned DataFrame is lazy only in the
-    normal-doc branch + reassembly. Reused shards keep their original
-    _pid/_doc_bytes/_wall_s, so a resumed run's lineage attributes cached
-    work to the invocation that actually did it.
+    normal-doc branch + reassembly. Reused shards keep the _pid/_doc_bytes/
+    _wall_s of the run that extracted them, and the merged giant row sums
+    them, so a giant whose shards were all cached still reports its
+    original bytes and kernel seconds in THIS invocation's lineage — the
+    lineage counts the rows an invocation wrote, not the kernel work it did.
 
     ``n_buckets`` (writers only) buckets both branches for
-    sources.io.write_extracted below their union, as in extract_pages.
+    sources.io.write_extracted below their union, and ``lineage_acc`` is
+    passed to the normal kernel and the reassembly, as in extract_pages.
     """
     from paraocr_spark.operators.extract import (
         _merge_shards_relational,
@@ -182,11 +184,11 @@ def extract_with_shard_cache(
         .dropDuplicates(["url", "shard_id"])
         .drop("config_fp")
     )
-    singles = extract_kernel(normal, cfg.backend, cfg.backend_kwargs).drop(
-        "shard_id", "n_shards"
+    singles = extract_kernel(normal, cfg.backend, cfg.backend_kwargs,
+                             lineage_acc).drop("shard_id", "n_shards")
+    return union_branches(
+        [singles, _merge_shards_relational(relevant, lineage_acc)], n_buckets
     )
-    return union_branches([singles, _merge_shards_relational(relevant)],
-                          n_buckets)
 
 
 def gc_shard_cache(spark: SparkSession, cache_path: str, keep_fp: str,
@@ -256,11 +258,11 @@ def _extraction_plan(
     Giant shards go through the shard cache whenever ``cfg`` names one
     (extract_with_shard_cache — eager: it runs the giant kernel), else
     through extract_pages. ``n_buckets`` makes the result write-ready
-    (union_branches). Returns (plan, acc): with ``lineage`` on the
-    extract_pages route, acc is a LineageAccParam accumulator the kernel
-    fills during the caller's action; it is None on the shard-cache route,
-    whose reused shards never run the kernel this invocation, and when
-    ``lineage`` is off.
+    (union_branches). Returns (plan, acc): with ``lineage``, acc is a
+    LineageAccParam accumulator that the normal kernel and the giant
+    reassembly fill during the caller's action, on either route, counting
+    each written row once under its _pid (operators/lineage.py); None
+    otherwise.
 
     extract_pages and filter_unprocessed are called through this module's
     names (and the fronts write through pio.write_extracted) so a profiler
@@ -270,12 +272,11 @@ def _extraction_plan(
     preflight_backend(cfg.backend, cfg.backend_kwargs)  # fail fast on driver
     pages = ignore_keyword_filter(pages, cfg.ignore_url_keywords)
     todo = filter_unprocessed(pages, done, cfg.fingerprint)
-    acc = None
+    acc = (spark.sparkContext.accumulator({}, LineageAccParam())
+           if lineage else None)
     if cfg.shard_cache_path and cfg.salt:
-        out = extract_with_shard_cache(spark, todo, cfg, n_buckets)
+        out = extract_with_shard_cache(spark, todo, cfg, n_buckets, acc)
     else:
-        if lineage:
-            acc = spark.sparkContext.accumulator({}, LineageAccParam())
         out = extract_pages(todo, salt=cfg.salt, backend=cfg.backend,
                             backend_kwargs=cfg.backend_kwargs,
                             lineage_acc=acc, n_buckets=n_buckets)
@@ -287,17 +288,16 @@ def run_extraction(
     pages: DataFrame,
     cfg: PipelineConfig | None = None,
     done: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (extracted, lineage) DataFrames — lazily, caller writes/acts
-    (except the shard-cache route's giant-shard append, which is eager).
+) -> DataFrame:
+    """Returns the extracted DataFrame — lazily, caller writes/acts (except
+    the shard-cache route's giant-shard append, which is eager). Lineage
+    belongs to a write: run_and_write reports it.
 
     ``done`` is the prior output for resume (None = fresh run).
     """
     cfg = cfg or PipelineConfig()
     out, _ = _extraction_plan(pages, cfg, done)
-    extracted = out.select(*EXTRACTED_COLS, "config_fp")
-    lineage = lineage_rollup(out, cfg.run_id, cfg.fingerprint)
-    return extracted, lineage
+    return out.select(*EXTRACTED_COLS, "config_fp")
 
 
 def run_and_write(
@@ -316,18 +316,13 @@ def run_and_write(
     # (the natural way to resume, and the default 'run0') must not roll
     # prior appends' rows into this invocation's lineage/metrics
     invocation_id = f"{cfg.run_id}-{uuid.uuid4().hex[:12]}"
-    # ONE kernel pass, ONE Spark job: the lineage rollup rides the write
-    # action itself via a replace-merge accumulator (each kernel task sends
-    # its partition totals once, idempotent under retries —
-    # operators/lineage.LineageAccParam), and the resulting handful of rows
-    # is appended to the lineage table from the driver with pyarrow. The
-    # previous shape (write job, then a read-back scan of the written table
-    # for the rollup, then a third job to write it) paid two extra
-    # scheduler/commit round-trips per run — the dominant share of the
-    # f≈27.5 s Amdahl fixed cost that capped 1x2->4x2 scaling in the r4
-    # ladder decomposition. The read-back path survives below for the
-    # shard-cache route, where reused shards never run the kernel this
-    # invocation and so never reach the accumulator.
+    # ONE kernel pass, ONE Spark job on both routes: the lineage rollup
+    # rides the write action itself via a replace-merge accumulator (the
+    # normal kernel and the giant reassembly each send one update per task,
+    # every written row counted once under its _pid, idempotent under
+    # retries — operators/lineage.py), and the resulting handful of rows is
+    # appended to the lineage table from the driver with pyarrow. A
+    # read-back scan of the written table would cost a second job per run.
     t0 = time.perf_counter()  # before plan build: the shard-cache path is eager
     # both routes bucket each branch below the union
     # (operators/extract.union_branches): write_extracted adds no exchange
@@ -341,23 +336,9 @@ def run_and_write(
     )
     pio.write_extracted(out, out_path, n_buckets=cfg.warc_buckets)
     t_write = time.perf_counter() - t0
-    if acc is not None:
-        lin_rows = lineage_rows_from_acc(
-            acc.value, cfg.run_id, cfg.fingerprint, invocation_id
-        )
-    else:
-        # shard-cache invocations: reused shards carry their ORIGINAL
-        # metric columns in the written table, so the exact rollup needs
-        # the read-back scan. run_id prunes to this run's partition dirs;
-        # invocation_id (constant per file) lets parquet stats skip earlier
-        # resumes' files without reading their pages.
-        written = pio.read_table(spark, out_path).where(
-            (F.col("run_id") == cfg.run_id)
-            & (F.col("invocation_id") == invocation_id)
-        )
-        lin = lineage_rollup(written, cfg.run_id, cfg.fingerprint,
-                             invocation_id)
-        lin_rows = [r.asDict() for r in lin.collect()]
+    lin_rows = lineage_rows_from_acc(
+        acc.value, cfg.run_id, cfg.fingerprint, invocation_id
+    )
     n = sum(r["doc_count"] for r in lin_rows)
     pio.write_lineage_rows(lin_rows, lineage_path)
     wall = time.perf_counter() - t0
@@ -365,9 +346,10 @@ def run_and_write(
         "rows": n,
         "wall_s": wall,
         "docs_per_sec": (n / wall if wall > 0 else 0.0),
-        # total Python-kernel seconds across all tasks — lets scaling
-        # harnesses decompose "did the KERNEL scale" from wall-clock
-        # effects (fixed tails, host walls)
+        # total Python-kernel seconds of the written rows (a reused
+        # cached shard's seconds included) — lets scaling harnesses
+        # decompose "did the KERNEL scale" from wall-clock effects (fixed
+        # tails, host walls)
         "kernel_cpu_s": sum(r["wall_time_s"] for r in lin_rows),
         "invocation_id": invocation_id,
         # phase decomposition: everything after the write action is

@@ -56,7 +56,7 @@ def write_extracted(df: DataFrame, path: str, mode: str = "append",
     """Append extracted rows partitioned by (run_id, bucket(warc_ts)).
 
     run_id (when present) is the OUTER partition so each run's appends land
-    in their own directories — the lineage read-back prunes to the current
+    in their own directories — ``job.py --errors`` prunes to the current
     run instead of scanning every prior append; within a run, a constant
     invocation_id column lets parquet file stats skip earlier resumes'
     files without reading their pages.

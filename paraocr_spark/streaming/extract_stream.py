@@ -10,8 +10,10 @@ extracts new files as they land:
     backend preflight, keyword filter, salting or the shard cache, kernel,
     reassembly, bucketed write) — one code path, tested once. Each row
     keeps its metric columns (_pid, _doc_bytes, _wall_s); no lineage table
-    is written. foreachBatch alone is at-least-once (a batch retried
-    after a mid-write failure would duplicate rows), so the batch write is
+    is written, but a groupBy(_pid) over a batch's rows gives exactly the
+    rows run_and_write's accumulator would report for it
+    (operators/lineage.py). foreachBatch alone is at-least-once (a batch
+    retried after a mid-write failure would duplicate rows), so the write is
     made IDEMPOTENT: each micro-batch lands in its own
     ``run_id=<run>-b<batch_id>`` partition via dynamic partition overwrite
     — a replay overwrites exactly its own partition, giving effective

@@ -47,7 +47,7 @@ def test_backend_change_invalidates_config_fp(custom_backend):
 
 
 def test_pipeline_runs_custom_backend(spark, custom_backend):
-    extracted, lineage = run_extraction(
+    extracted = run_extraction(
         spark, pages_df(spark, 40, 2),
         PipelineConfig(run_id="plug", salt=False, backend=custom_backend),
     )
@@ -66,7 +66,7 @@ def test_ignore_keyword_filter(spark):
         "site1.example" not in u and "site2.example" not in u for u in urls
     )
     # engine-level knob: extraction sees only the filtered rows
-    extracted, _ = run_extraction(
+    extracted = run_extraction(
         spark, pages,
         PipelineConfig(run_id="ign", salt=False,
                        ignore_url_keywords=["site1.example"]),

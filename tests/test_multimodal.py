@@ -20,7 +20,8 @@ def media_df(spark):
 
 
 def test_meta_extraction(spark, media_df):
-    got = {r.media_id: r.meta.asDict() for r in mm.with_media_meta(media_df).collect()}
+    got = {r.media_id: r.meta.asDict()
+           for r in mm.mean_pixel_features(media_df).collect()}
     assert got[0] == {"kind": "image", "width": 4, "height": 4, "channels": 3,
                       "n_frames": 1, "bytes": len(mm.encode_image(4, 4, 3)),
                       "valid": True}

@@ -2,6 +2,7 @@
 
 import pathlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from paraocr_spark.pipeline import PipelineConfig, run_and_write, run_extraction
@@ -31,10 +32,10 @@ def test_resume_partial(spark, tmp_path):
     """Delete half the output -> re-run processes exactly the missing half."""
     pages = pages_df(spark, 100, 4)
     cfg = PipelineConfig(run_id="r1")
-    extracted, _ = run_extraction(spark, pages, cfg)
+    extracted = run_extraction(spark, pages, cfg)
     half = extracted.where(F.hash("url") % 2 == 0).persist()
     n_half = half.count()
-    ext2, _ = run_extraction(spark, pages, PipelineConfig(run_id="r2"), done=half)
+    ext2 = run_extraction(spark, pages, PipelineConfig(run_id="r2"), done=half)
     assert ext2.count() == 100 - n_half
     # no overlap between the kept half and the reprocessed rest
     assert ext2.join(half, "url", "inner").count() == 0
@@ -43,8 +44,10 @@ def test_resume_partial(spark, tmp_path):
 
 def test_lineage_rollup(spark, tmp_path):
     pages = pages_df(spark, 200, 4)
-    extracted, lineage = run_extraction(spark, pages, PipelineConfig(run_id="rl"))
-    rows = lineage.collect()
+    lin = str(tmp_path / "lineage")
+    run_and_write(spark, pages, str(tmp_path / "out"), lin,
+                  PipelineConfig(run_id="rl"))
+    rows = spark.read.parquet(lin).collect()
     assert sum(r.doc_count for r in rows) == 200
     assert all(r.wall_time_s > 0 for r in rows)
     assert all(r.run_id == "rl" for r in rows)
@@ -54,9 +57,70 @@ def test_lineage_rollup(spark, tmp_path):
     assert total_bytes > 0
 
 
+@pytest.mark.parametrize("cached", ["fresh", "partly_cached", "fully_cached"])
+def test_written_lineage_equals_groupby_pid(spark, tmp_path, cached):
+    """Each written row is counted once, under its own _pid: the lineage
+    rows run_and_write appends equal a groupBy(_pid) over the rows that
+    invocation wrote — giants extracted fresh on the extract_pages route,
+    or reassembled from a shard cache holding one giant or both."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        pages = pages_df(spark, 200, 4)  # giants at /9 and /169
+        cache = None
+        if cached != "fresh":
+            cache = str(tmp_path / "cache")
+            warm = (pages if cached == "fully_cached"
+                    else pages.where(F.col("url").endswith("/9")))
+            run_and_write(spark, warm, str(tmp_path / "warm"),
+                          str(tmp_path / "warm_lin"),
+                          PipelineConfig(run_id="warm", shard_cache_path=cache))
+        out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+        m = run_and_write(spark, pages, out, lin,
+                          PipelineConfig(run_id="lg", shard_cache_path=cache))
+        this_inv = F.col("invocation_id") == m["invocation_id"]
+        lineage = {
+            r.partition_id: (r.doc_count, r.bytes, r.wall_time_s)
+            for r in spark.read.parquet(lin).where(this_inv).collect()
+        }
+        written = {
+            r._pid: (r.n, r.b, r.w)
+            for r in spark.read.parquet(out).where(this_inv).groupBy("_pid")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("_doc_bytes").alias("b"),
+                 F.sum("_wall_s").alias("w")).collect()
+        }
+    finally:
+        spark.conf.set(key, prev)
+    assert m["rows"] == 200
+    assert all(docs > 0 for docs, _, _ in lineage.values())
+    assert lineage.keys() == written.keys()
+    for pid, (n, b, w) in written.items():
+        assert lineage[pid][:2] == (n, b)
+        assert lineage[pid][2] == pytest.approx(w, abs=1e-9)
+
+
+def test_lineage_acc_keeps_a_retried_task_once():
+    """Replace-merge: a retried task resends its (stage, task) key and
+    overwrites its first update instead of adding to it; updates from
+    different tasks sum by row pid."""
+    from paraocr_spark.operators.lineage import (LineageAccParam,
+                                                 lineage_rows_from_acc)
+
+    param = LineageAccParam()
+    acc = param.zero({})
+    for update in ({(1, 0): {0: (2, 10, 0.5)}},
+                   {(1, 0): {0: (2, 10, 0.5)}},  # the retry
+                   {(2, 3): {0: (1, 5, 0.25), 3: (1, 7, 0.125)}}):
+        acc = param.addInPlace(acc, update)
+    rows = lineage_rows_from_acc(acc, "r", "fp", "inv")
+    assert [(r["partition_id"], r["doc_count"], r["bytes"], r["wall_time_s"])
+            for r in rows] == [(0, 3, 15, 0.75), (3, 1, 7, 0.125)]
+
+
 def test_warc_bucket_partitioning(spark, tmp_path):
     pages = pages_df(spark, 50, 2)
-    extracted, _ = run_extraction(spark, pages, PipelineConfig(run_id="rb"))
+    extracted = run_extraction(spark, pages, PipelineConfig(run_id="rb"))
     out = str(tmp_path / "bucketed")
     pio.write_extracted(extracted, out)
     dirs = [p.name for p in pathlib.Path(out).iterdir() if p.is_dir()]
@@ -94,7 +158,7 @@ def test_config_fingerprint_invalidates_resume(spark, tmp_path):
     cfg_a = PipelineConfig(run_id="a", extra={"v": 1})
     cfg_b = PipelineConfig(run_id="b", extra={"v": 2})
     assert cfg_a.fingerprint != cfg_b.fingerprint
-    ext_a, _ = run_extraction(spark, pages, cfg_a)
+    ext_a = run_extraction(spark, pages, cfg_a)
     done = ext_a.select("url", "config_fp")
     # same config: all skipped
     assert filter_unprocessed(pages, done, cfg_a.fingerprint).count() == 0
@@ -105,7 +169,8 @@ def test_config_fingerprint_invalidates_resume(spark, tmp_path):
 def test_lineage_scoped_to_invocation(spark, tmp_path):
     """A resume that REUSES the same run_id must not roll prior appends'
     rows into the new invocation's lineage (double-count bug class), and
-    the lineage read-back must partition-prune on run_id."""
+    a reader of one run's rows (job.py --errors) must partition-prune on
+    run_id."""
     out = str(tmp_path / "inv_out")
     lin = str(tmp_path / "inv_lin")
     m1 = run_and_write(spark, pages_df(spark, 80, 4), out, lin,
@@ -123,7 +188,7 @@ def test_lineage_scoped_to_invocation(spark, tmp_path):
     }
     assert per_inv[m1["invocation_id"]] == 80
     assert per_inv[m2["invocation_id"]] == 40
-    # run_id is a physical partition directory -> the read-back predicate
+    # run_id is a physical partition directory -> a one-run predicate
     # prunes instead of scanning every run's appends
     import pathlib as _pl
     dirs = [p.name for p in _pl.Path(out).iterdir() if p.is_dir()]
@@ -498,7 +563,7 @@ def test_three_fronts_build_the_same_extraction(spark, tmp_path):
             for r in df.select(*cols).collect()
         )
 
-    extracted, _ = run_extraction(spark, pages, cfg("batch"))
+    extracted = run_extraction(spark, pages, cfg("batch"))
     batch = rows(extracted)
     run_and_write(spark, pages, str(tmp_path / "out"), str(tmp_path / "lin"),
                   cfg("write"))

@@ -210,17 +210,6 @@ def test_no_spark_job_while_building_plans(spark):
     assert ran == {name: 0 for name in builds}
 
 
-def test_lineage_rollup_partial_agg(spark):
-    from paraocr_spark.operators.extract import extract_pages
-    from paraocr_spark.operators.lineage import lineage_rollup
-    from paraocr_spark.sources.pages import pages_from_documents
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    out = extract_pages(pages_from_documents(docs, "html"), salt=False)
-    p = plan_of(lineage_rollup(out, "r", "f"))
-    assert "partial_count" in p or "partial_sum" in p
-
-
 def test_relational_quality_gate_stays_jvm(spark, docs):
     from paraocr_spark.functions.text import quality_gate, quality_score
 
