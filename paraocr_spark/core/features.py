@@ -16,12 +16,17 @@ Fields:
     simhash       64-bit near-dup fingerprint (crc32-pair per token, +-1
                   bit votes) — deterministic, mergeable only pre-vote, so
                   it is computed on the capped prefix of the FINAL text
+    rolling_hash  Karp-Rabin fingerprint of the token-hash stream
+
+``compute_features`` is the serial oracle; ``compute_features_batch`` is
+the kernel, bit-identical to it over any batch.
 """
 
 from __future__ import annotations
 
 import re
 import zlib
+from itertools import repeat
 
 import numpy as np
 import pandas as pd
@@ -73,6 +78,10 @@ FEATURE_FIELDS = [
     ("simhash", "long"),
     ("rolling_hash", "long"),
 ]
+FEATURES_DDL = "struct<" + ",".join(f"{n}:{t}" for n, t in FEATURE_FIELDS) + ">"
+_ZERO_FEATURES = {"n_chars": 0, "n_tokens": 0, "alpha_ratio": 0.0,
+                  "stop_ratio": 0.0, "lang_pred": "und", "simhash": 0,
+                  "rolling_hash": 0}
 
 # Karp-Rabin polynomial fingerprint over the token-hash stream:
 # rolling_hash = sum(h_i * B^i) mod P — order-sensitive (unlike simhash/md5
@@ -83,10 +92,10 @@ _RK_B = 1_000_003
 _RK_POWERS: list[int] = [1]
 
 
-def _rk_fingerprint(hashes: list) -> int:
-    """sum(h_i * B^i) mod P over python-int token hashes (reference form;
-    the kernel uses _rk_fingerprint_premod with memoized h % P)."""
-    return _rk_fingerprint_premod([h % _RK_P for h in hashes])
+def _token_hash(token: str) -> int:
+    """64-bit token hash: two crc32s (plain and 0xDEADBEEF-seeded)."""
+    b = token.encode("utf-8")
+    return (zlib.crc32(b) << 32) | zlib.crc32(b, 0xDEADBEEF)
 
 
 def _rk_fingerprint_premod(hmods: list) -> int:
@@ -94,48 +103,13 @@ def _rk_fingerprint_premod(hmods: list) -> int:
 
     The mod is taken ONCE at the end: each term is < 2^122, so the
     accumulator stays a 2-3 limb bigint — one final C-level mod instead of
-    2n modmuls; and the sum-of-products runs as sum(map(mul, ...)), a
-    C-driven loop with no per-iteration interpreter frame (r4: ~2x on the
-    per-doc loop vs the explicit zip loop, identical result)."""
+    2n modmuls."""
     import operator
 
     powers = _RK_POWERS
     while len(powers) < len(hmods):
         powers.append((powers[-1] * _RK_B) % _RK_P)
     return sum(map(operator.mul, hmods, powers)) % _RK_P
-FEATURES_DDL = "struct<" + ",".join(f"{n}:{t}" for n, t in FEATURE_FIELDS) + ">"
-
-
-# token -> (hash, hash % P) memo, shared across documents in a worker
-# process (token distributions are Zipfian: most crc32 work repeats
-# otherwise). The premodded value feeds the rolling hash so the % P runs
-# once per DISTINCT token ever seen, not once per token occurrence.
-_HASH_MEMO: dict[str, tuple] = {}
-_HASH_MEMO_CAP = 1_000_000
-
-
-def _token_hash_pairs(uniq: list) -> tuple:
-    """(hashes, hashes % P) per distinct token, as python ints — the full
-    64-bit hash feeds the numpy simhash matrix, the premod the rolling
-    hash."""
-    memo = _HASH_MEMO
-    hs, hm = [], []
-    ah, am = hs.append, hm.append
-    for t in uniq:
-        pair = memo.get(t)
-        if pair is None:
-            b = t.encode("utf-8")
-            h = (zlib.crc32(b) << 32) | zlib.crc32(b, 0xDEADBEEF)
-            pair = (h, h % _RK_P)
-            if len(memo) < _HASH_MEMO_CAP:
-                memo[t] = pair
-        ah(pair[0])
-        am(pair[1])
-    return hs, hm
-
-
-def _token_hash_list(uniq: list) -> list:
-    return _token_hash_pairs(uniq)[0]
 
 
 def _simhash64_counted(hs: list, counts: list) -> int:
@@ -151,24 +125,12 @@ def _simhash64_counted(hs: list, counts: list) -> int:
     return out - (1 << 64) if out >= (1 << 63) else out  # to signed int64
 
 
-def _simhash64(tokens: list[str]) -> int:
-    if not tokens:
-        return 0
-    from collections import Counter
-
-    counter = Counter(tokens)
-    uniq = list(counter.keys())
-    return _simhash64_counted(_token_hash_list(uniq), list(counter.values()))
-
-
 def compute_features(text: str | None) -> dict:
     """Serial oracle — must match the vectorized kernel exactly."""
     from collections import Counter
 
     if text is None:
-        return {"n_chars": 0, "n_tokens": 0, "alpha_ratio": 0.0,
-                "stop_ratio": 0.0, "lang_pred": "und", "simhash": 0,
-                "rolling_hash": 0}
+        return dict(_ZERO_FEATURES)
     cap = text[:FEATURE_CAP]
     lower = cap.lower()
     tokens = _TOKEN_RE.findall(lower)
@@ -179,29 +141,21 @@ def compute_features(text: str | None) -> dict:
     alpha = len(cap.encode("utf-8").translate(None, _NON_ALPHA_BYTES))
     alpha_ratio = _round4(alpha / len(cap)) if cap else 0.0
     if n_tok:
-        # Counter = O(n) hashing; np.unique object-sorts the token array
-        # (O(n log n) string compares) for an order nothing downstream needs
         counter = Counter(tokens)
         # ONE pass over distinct tokens scores stopwords + all languages
         stop = 0
         scores = [0] * len(_LANG_ORDER)
-        markers = _MARKER_LANGS
-        stopwords = _STOPWORDS
         for t, c in counter.items():
-            if t in stopwords:
+            if t in _STOPWORDS:
                 stop += c
-            ls = markers.get(t)
-            if ls is not None:
-                for li in ls:
-                    scores[li] += c
+            for li in _MARKER_LANGS.get(t, ()):
+                scores[li] += c
         stop_ratio = _round4(stop / n_tok)
         best = max(scores)
         lang_pred = "und" if best == 0 else _LANG_ORDER[scores.index(best)]
-        uniq = list(counter.keys())
-        hs, hm = _token_hash_pairs(uniq)
-        simhash = _simhash64_counted(hs, list(counter.values()))
-        hdm = dict(zip(uniq, hm))  # reuse the uniq premods: no 2nd memo pass
-        rolling = _rk_fingerprint_premod([hdm[t] for t in tokens])
+        hashes = {t: _token_hash(t) for t in counter}
+        simhash = _simhash64_counted(list(hashes.values()), list(counter.values()))
+        rolling = _rk_fingerprint_premod([hashes[t] % _RK_P for t in tokens])
     else:
         stop_ratio, lang_pred, simhash, rolling = 0.0, "und", 0, 0
     return {
@@ -215,12 +169,73 @@ def compute_features(text: str | None) -> dict:
     }
 
 
+# ---------------------------------------------------------------- kernel
+
+# token -> marker bits: bit 0 stopword, bit 1 + li marks _LANG_ORDER[li]
+_TOKEN_MARKS: dict[str, int] = {}
+for _t in _STOPWORDS:
+    _TOKEN_MARKS[_t] = 1
+for _t, _ls in _MARKER_LANGS.items():
+    for _li in _ls:
+        _TOKEN_MARKS[_t] = _TOKEN_MARKS.get(_t, 0) | (2 << _li)
+# _BYTE_BITS[v, k] = bit k of byte value v: a (docs x 256) histogram of one
+# hash byte times this table is the per-doc count of each of its 8 bits
+_BYTE_BITS = ((np.arange(256)[:, None] >> np.arange(8)) & 1).astype(np.int64)
+
+# The vocabulary is a per-process cache: ids and per-id arrays never change
+# a result, so it is replaced by an empty one (at a batch boundary) once it
+# holds this many distinct tokens, bounding a long-lived worker's footprint.
+_VOCAB_CAP = 1_000_000
+
+
+class _TokenVocab(dict):
+    """token -> dense id, with per-id arrays of what the kernel needs.
+
+    A lookup miss (``__missing__``) assigns the next id and queues the
+    token, so ``map(vocab.__getitem__, tokens)`` runs as a C-level loop
+    and only first-seen tokens cost Python work. ``sync()`` hashes the
+    queued tokens into the per-id arrays, which grow by doubling."""
+
+    def __init__(self):
+        super().__init__()
+        self._new: list[str] = []
+        self.hbytes = np.empty((8, 0), np.uint8)  # hash byte j of each id
+        self.hmod = np.empty(0, np.uint64)        # hash % _RK_P
+        self.marks = np.empty(0, np.uint8)        # _TOKEN_MARKS bits
+
+    def __missing__(self, token: str) -> int:
+        self._new.append(token)
+        i = self[token] = len(self)
+        return i
+
+    def sync(self) -> None:
+        new = self._new
+        if not new:
+            return
+        n1 = len(self)
+        n0 = n1 - len(new)
+        if n1 > len(self.hmod):
+            cap = max(n1, 2 * len(self.hmod), 4096)
+            hbytes = np.empty((8, cap), np.uint8)
+            hmod = np.empty(cap, np.uint64)
+            marks = np.empty(cap, np.uint8)
+            hbytes[:, :n0] = self.hbytes[:, :n0]
+            hmod[:n0] = self.hmod[:n0]
+            marks[:n0] = self.marks[:n0]
+            self.hbytes, self.hmod, self.marks = hbytes, hmod, marks
+        h = np.fromiter(map(_token_hash, new), np.uint64, len(new))
+        for j in range(8):
+            self.hbytes[j, n0:n1] = h >> np.uint64(8 * j)  # keeps the low byte
+        self.hmod[n0:n1] = h % np.uint64(_RK_P)
+        self.marks[n0:n1] = np.fromiter(
+            map(_TOKEN_MARKS.get, new, repeat(0)), np.uint8, len(new))
+        new.clear()
+
+
+_VOCAB = _TokenVocab()
+_MODMUL_SLICE = 1 << 16   # token occurrences per _modmul61 call
 # numpy mirror of _RK_POWERS (B^i mod P as uint64), grown lazily
 _RK_POW_NP = np.array([1], dtype=np.uint64)
-_SH64 = np.arange(64, dtype=np.uint64)
-_ZERO_FEATURES = {"n_chars": 0, "n_tokens": 0, "alpha_ratio": 0.0,
-                  "stop_ratio": 0.0, "lang_pred": "und", "simhash": 0,
-                  "rolling_hash": 0}
 
 
 def _rk_powers_np(n: int) -> np.ndarray:
@@ -255,14 +270,15 @@ def _modmul61(a: np.ndarray, b: np.ndarray) -> np.ndarray:
 
 
 def compute_features_batch(texts: "pd.Series | list") -> list[dict]:
-    """Batch variant used inside the Arrow kernel. Per-doc work is only
-    what genuinely needs Python (regex tokenize, Counter, one pass over
-    distinct tokens for stop/lang scores); the two numeric kernels run as
-    ONE numpy pass over the concatenated batch:
+    """Batch variant used inside the Arrow kernel.
 
-      * simhash — all docs' (uniq-hash, count) pairs stack into one bit
-        matrix; per-doc votes come from np.add.reduceat segment sums
-        (r4's per-doc matrix paid numpy call overhead ~128x per batch);
+    Per doc, Python only tokenizes, counts alpha bytes and maps the tokens
+    to worker-vocabulary ids (a C-level dict lookup; the token strings die
+    with the doc). The rest is one numpy pass over the batch's id stream:
+
+      * stop / language scores — bincounts of the per-id marker flags;
+      * simhash — per hash byte, a (docs x 256) bincount histogram times
+        the 256 x 8 bit table gives each bit's positive votes exactly;
       * rolling_hash — per-occurrence h*B^pos runs through the vectorized
         Mersenne-61 modmul; per-doc sums split into 32-bit halves so
         reduceat never overflows, with one final % P per doc.
@@ -270,115 +286,87 @@ def compute_features_batch(texts: "pd.Series | list") -> list[dict]:
     Bit-for-bit equal to [compute_features(t) for t in texts] (the serial
     oracle) — pinned by tests/test_core.py property tests.
     """
-    from collections import Counter
-
-    n_docs = len(texts)
-    out: list = [None] * n_docs
-    live: list[int] = []          # out-index of docs with >= 1 token
-    hs_parts: list = []           # per-doc uniq-hash lists (python ints)
-    cnt_parts: list = []          # per-doc counts (aligned with hs_parts)
-    occ_parts: list = []          # per-doc per-occurrence premods
-    max_tok = 0
+    global _VOCAB
+    if len(_VOCAB) > _VOCAB_CAP:
+        _VOCAB = _TokenVocab()
+    vocab = _VOCAB
+    lookup = vocab.__getitem__
+    out: list = [None] * len(texts)
+    live: list[int] = []      # out-index of docs with >= 1 token
+    ids_parts: list = []      # per live doc: its token ids, in order
 
     for i, text in enumerate(texts):
         if text is None:
             out[i] = dict(_ZERO_FEATURES)
             continue
         cap = text[:FEATURE_CAP]
-        lower = cap.lower()
-        tokens = _TOKEN_RE.findall(lower)
-        n_tok = len(tokens)
         alpha = len(cap.encode("utf-8").translate(None, _NON_ALPHA_BYTES))
-        alpha_ratio = _round4(alpha / len(cap)) if cap else 0.0
-        if not n_tok:
-            out[i] = {**_ZERO_FEATURES, "n_chars": len(text),
-                      "alpha_ratio": alpha_ratio}
-            continue
-        counter = Counter(tokens)
-        stop = 0
-        scores = [0] * len(_LANG_ORDER)
-        markers = _MARKER_LANGS
-        stopwords = _STOPWORDS
-        for t, c in counter.items():
-            if t in stopwords:
-                stop += c
-            ls = markers.get(t)
-            if ls is not None:
-                for li in ls:
-                    scores[li] += c
-        best = max(scores)
-        uniq = list(counter.keys())
-        hs, hm = _token_hash_pairs(uniq)
-        hdm = dict(zip(uniq, hm))
-        out[i] = {
-            "n_chars": len(text),
-            "n_tokens": n_tok,
-            "alpha_ratio": alpha_ratio,
-            "stop_ratio": _round4(stop / n_tok),
-            "lang_pred": "und" if best == 0 else _LANG_ORDER[scores.index(best)],
-            "simhash": 0,        # filled by the batched pass below
-            "rolling_hash": 0,
-        }
-        live.append(i)
-        hs_parts.append(hs)
-        cnt_parts.append(list(counter.values()))
-        occ_parts.append(np.fromiter(
-            map(hdm.__getitem__, tokens), dtype=np.uint64, count=n_tok,
-        ))
-        max_tok = max(max_tok, n_tok)
-
+        out[i] = {**_ZERO_FEATURES, "n_chars": len(text),
+                  "alpha_ratio": _round4(alpha / len(cap)) if cap else 0.0}
+        tokens = _TOKEN_RE.findall(cap.lower())
+        if tokens:
+            live.append(i)
+            ids_parts.append(
+                np.fromiter(map(lookup, tokens), np.intp, len(tokens)))
     if not live:
         return out
+    vocab.sync()
 
-    # ---- batched simhash over all docs' distinct tokens
-    seg_u = np.fromiter((len(h) for h in hs_parts), dtype=np.int64,
-                        count=len(live))
-    starts_u = np.zeros(len(live), dtype=np.int64)
-    np.cumsum(seg_u[:-1], out=starts_u[1:])
-    H = np.fromiter(
-        (h for part in hs_parts for h in part), dtype=np.uint64,
-        count=int(seg_u.sum()),
-    )
-    C = np.fromiter(
-        (c for part in cnt_parts for c in part), dtype=np.int32,
-        count=len(H),
-    )
-    # bit matrix via unpackbits on the little-endian byte view: (n, 64)
-    # uint8, and votes in int32 — ~8x less temporary memory than an int64
-    # shift chain. Peak allocation size matters here: at 8 concurrent
-    # workers per host, tens of MB of per-batch temporaries hit the
-    # munmap/TLB-shootdown wall documented in BENCH/BASELINE.md (measured:
-    # kernel wall inflated +28% at the 4N scaling level with the int64
-    # form vs +7% kernel conservation without it).
-    bits = np.unpackbits(
-        H.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
-    )
-    # in-place weight: one (n,64) int32 temp instead of two (astype +
-    # product) — per-batch peak matters at 8+ concurrent workers (the
-    # munmap/TLB wall), and this pass is the batch's largest allocation
-    weighted = bits.astype(np.int32)
-    weighted *= C[:, None]
-    pos_votes = np.add.reduceat(weighted, starts_u, axis=0)
-    del weighted
-    tot = np.add.reduceat(C, starts_u)
-    votes = 2 * pos_votes - tot[:, None]  # == sum((2*bit - 1) * count)
-    sigs = ((votes > 0).astype(np.uint64) << _SH64).sum(
-        axis=1, dtype=np.uint64
-    ).astype(np.int64)  # wraps to signed, same as the serial 2^64 fold
+    n_live = len(live)
+    seg = np.fromiter(map(len, ids_parts), np.int64, n_live)
+    starts = np.zeros(n_live, dtype=np.int64)
+    np.cumsum(seg[:-1], out=starts[1:])
+    ids = np.concatenate(ids_parts)
+    del ids_parts
+    doc = np.repeat(np.arange(n_live, dtype=np.int64), seg)
 
-    # ---- batched Karp-Rabin over all docs' token occurrences
-    seg_o = np.fromiter((len(o) for o in occ_parts), dtype=np.int64,
-                        count=len(live))
-    starts_o = np.zeros(len(live), dtype=np.int64)
-    np.cumsum(seg_o[:-1], out=starts_o[1:])
-    occ = np.concatenate(occ_parts)
-    pow_np = _rk_powers_np(max_tok)
-    pos = np.arange(len(occ), dtype=np.int64) - np.repeat(starts_o, seg_o)
-    terms = _modmul61(occ, pow_np[pos])
-    lo = np.add.reduceat(terms & np.uint64(0xFFFFFFFF), starts_o)
-    hi = np.add.reduceat(terms >> np.uint64(32), starts_o)
+    # ---- stop / language scores: only marked occurrences contribute
+    marks = vocab.marks[ids]
+    hit = np.flatnonzero(marks)
+    hit_doc, hit_marks = doc[hit], marks[hit]
+    scores = np.stack([
+        np.bincount(hit_doc, weights=(hit_marks >> b) & 1, minlength=n_live)
+        for b in range(1 + len(_LANG_ORDER))
+    ], axis=1).astype(np.int64)
+    stop = scores[:, 0]
+    lang = scores[:, 1:]
+    best, best_at = lang.max(axis=1), lang.argmax(axis=1)  # first max wins
 
-    for k, i in enumerate(live):
-        out[i]["simhash"] = int(sigs[k])
-        out[i]["rolling_hash"] = ((int(hi[k]) << 32) + int(lo[k])) % _RK_P
+    # ---- simhash: bit 8j+k is set iff its positive votes outnumber the
+    # negative ones, i.e. 2 * (occurrences with the bit set) > n_tokens
+    pos = np.empty((n_live, 64), dtype=np.int64)
+    doc256 = doc * 256
+    for j in range(8):
+        hist = np.bincount(doc256 + vocab.hbytes[j][ids],
+                           minlength=256 * n_live)
+        pos[:, 8 * j:8 * j + 8] = hist.reshape(n_live, 256) @ _BYTE_BITS
+    del doc256
+    sigs = np.packbits(2 * pos > seg[:, None], axis=1, bitorder="little")
+    sigs = sigs.view("<i8")[:, 0]  # bits 0..63, wrapped to signed int64
+
+    # ---- rolling hash over each doc's token occurrences; the modmul runs
+    # in slices because its ~10 full-length temporaries would otherwise set
+    # the batch's peak allocation (measured: 114 MB vs 45 MB before it on
+    # an 857k-occurrence batch). Per-batch peaks matter at 8+ concurrent
+    # workers per host: the munmap/TLB-shootdown wall in BENCH/BASELINE.md
+    powers = _rk_powers_np(int(seg.max()))
+    terms = np.empty(len(ids), dtype=np.uint64)
+    for s in range(0, len(ids), _MODMUL_SLICE):
+        e = s + _MODMUL_SLICE
+        at = np.arange(s, min(e, len(ids)), dtype=np.int64) - starts[doc[s:e]]
+        terms[s:e] = _modmul61(vocab.hmod[ids[s:e]], powers[at])
+    del doc
+    lo = np.add.reduceat(terms & np.uint64(0xFFFFFFFF), starts)
+    hi = np.add.reduceat(terms >> np.uint64(32), starts)
+
+    for i, n_tok, n_stop, top, top_li, sig, h, l in zip(
+        live, seg.tolist(), stop.tolist(), best.tolist(), best_at.tolist(),
+        sigs.tolist(), hi.tolist(), lo.tolist(),
+    ):
+        f = out[i]
+        f["n_tokens"] = n_tok
+        f["stop_ratio"] = _round4(n_stop / n_tok)
+        f["lang_pred"] = "und" if top == 0 else _LANG_ORDER[top_li]
+        f["simhash"] = sig
+        f["rolling_hash"] = ((h << 32) + l) % _RK_P
     return out

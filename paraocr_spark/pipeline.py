@@ -73,7 +73,10 @@ class PipelineConfig:
     #: fewer for small tables. Each invocation writes one file per bucket;
     #: the write's task count is min(warc_buckets, cores), not warc_buckets
     #: (sources/io.bucket_for_write), so buckets above the core count cost
-    #: files, not tasks
+    #: files, not tasks. Each file also costs process spawns where Hadoop's
+    #: native IO is missing (see sources/io.write_extracted): ~430 spawns
+    #: and 1.2-1.3 s at 64 buckets vs ~55 and 0.7 s at 4, writing the
+    #: 3000-doc perfbench crawl output at local[4]
     warc_buckets: int = 64
     extra: dict = field(default_factory=dict)
 

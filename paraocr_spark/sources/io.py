@@ -64,7 +64,14 @@ def write_extracted(df: DataFrame, path: str, mode: str = "append",
     An input that already carries ``warc_bucket`` must have been bucketed
     by bucket_for_write with the same ``n_buckets`` (extract_pages does so
     per branch, below its union, when given n_buckets): it is written with
-    no further exchange. Any other input is bucketed here."""
+    no further exchange. Any other input is bucketed here.
+
+    Per-file cost: where ``NativeIO.isAvailable()`` is false (no
+    libhadoop), Hadoop's ``RawLocalFileSystem.setPermission`` runs a
+    ``chmod`` process for every file, ``.crc`` and partition directory it
+    creates. Measured writing the cached 3000-doc perfbench crawl output
+    (local[4], 4-core host): ~430 spawned processes and 1.2-1.3 s at 64
+    buckets, ~55 processes and 0.7 s at 4 buckets."""
     spark = df.sparkSession
     if _iceberg_available(spark) and path.count(".") >= 1 and "/" not in path:
         # Iceberg catalog table name, e.g. "cat.db.extracted"; the table's
