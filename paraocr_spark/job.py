@@ -31,6 +31,17 @@ WORKER_ALLOC_ENV = {
 }
 
 
+# Byte cap on every Arrow batch the JVM sends a Python task (Spark 4.1
+# honours it for mapInPandas input, next to maxRecordsPerBatch). Layout docs
+# up to a scan split ride the normal kernel whole, so a record cap alone
+# lets one batch hold several 0.7 MB giants and the worker's peak grows with
+# them: on the perfbench crawl (local[4], seed 4) a task's 750-row batch
+# peaked 23 MB above the worker's base with this cap, 39 MB without it.
+# Spark closes a batch at the first row that takes it to the cap, so a
+# batch exceeds the cap by at most its last row.
+ARROW_MAX_BYTES_PER_BATCH = 4 * 1024 * 1024
+
+
 def build_session(app: str = "paraocr_spark", master: str | None = None,
                   shuffle_partitions: int | None = None) -> SparkSession:
     import os
@@ -55,6 +66,8 @@ def build_session(app: str = "paraocr_spark", master: str | None = None,
         # the old hard-coded 1024. Env var = the submit-visible override.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 os.environ.get("PARAOCR_ARROW_BATCH", "1024"))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch",
+                str(ARROW_MAX_BYTES_PER_BATCH))
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
@@ -114,9 +127,11 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("WARN")
     try:
         if args.synthetic is not None:
-            # materialize to parquet first: the extraction plan scans its
-            # source twice (normal + giant branch) — scanning parquet twice
-            # is cheap, regenerating synthetic rows in Python twice is not
+            # materialize to parquet first: a generated frame has no
+            # footers to rule a giant out, so its plan would keep the giant
+            # branch and regenerate every synthetic row in Python for its
+            # second scan; parquet pages get the footer decision
+            # (sources.io.may_hold_giants) like any --input
             import tempfile
 
             parts = args.partitions or spark.sparkContext.defaultParallelism

@@ -21,11 +21,12 @@ merge/write) as ONE ``mapInPandas`` over Arrow batches:
     per partition into the lineage table required by the north rule.
 
 Scale notes (100 TB / 1000 executors): the kernel is embarrassingly
-parallel — no shuffle at all for non-giant docs; giant layout docs are
-salted into shards upstream (operators/skew.py) and reassembled with one
-small groupBy over only the giant urls. Input partitioning is whatever the
-scan gives (maxPartitionBytes); Arrow batch size is bounded by
-``spark.sql.execution.arrow.maxRecordsPerBatch``.
+parallel — no shuffle at all for non-giant docs; layout docs larger than
+one scan split are salted into shards upstream (operators/skew.py) and
+reassembled with one small groupBy over only the giant urls. Input
+partitioning is whatever the scan gives (maxPartitionBytes); Arrow batch
+size is bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` and
+``maxBytesPerBatch`` (job.build_session).
 """
 
 from __future__ import annotations
@@ -121,6 +122,48 @@ def _extract_batch(pdf: pd.DataFrame, pid: int, backend_spec: str,
     )
 
 
+_zip_directories_memoized = False
+
+
+def _memoize_zip_directories() -> None:
+    """Read each unchanged zip archive's directory once per worker process.
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task (worker_util.setup_spark_files). On Python 3.11 that
+    makes every cached ``zipimporter`` re-read its archive's whole central
+    directory; a worker holds 16 of them, over pyspark.zip, the py4j zip
+    and the spark-core jar. Measured at local[4] on the perfbench
+    incremental run: 0.13-0.26 s per task before its first row, and about
+    0.9 of the 1.4 Python CPU-s each repetition spent. It is also the
+    noisiest part of a short kernel stage. Memoized on (path, mtime, size),
+    so an archive that changed is still re-read. Called from the kernel,
+    so it runs in Python workers only; a reused worker keeps it for every
+    later task."""
+    global _zip_directories_memoized
+    if _zip_directories_memoized:
+        return
+    _zip_directories_memoized = True
+    import os
+    import zipimport
+
+    read = getattr(zipimport, "_read_directory", None)
+    if read is None:  # a zipimport without this private helper
+        return
+    memo: dict = {}
+
+    def read_directory(archive):
+        try:
+            st = os.stat(archive)
+        except OSError:
+            return read(archive)  # raises zipimport's own error
+        key = (archive, st.st_mtime_ns, st.st_size)
+        if key not in memo:
+            memo[key] = read(archive)
+        return memo[key]
+
+    zipimport._read_directory = read_directory
+
+
 def extract_kernel(df: DataFrame, backend: str = "default",
                    backend_kwargs: dict | None = None,
                    lineage_acc=None) -> DataFrame:
@@ -138,6 +181,7 @@ def extract_kernel(df: DataFrame, backend: str = "default",
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _memoize_zip_directories()
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         totals: dict = {}
@@ -267,11 +311,17 @@ def extract_pages(pages: DataFrame, *, salt: bool = True,
     Plan shape (scale-critical): the normal and giant branches split at the
     SOURCE, so the expensive kernel runs exactly once per row. Splitting
     after the kernel would re-execute the whole kernel DAG once per branch
-    (Spark does not auto-cache a diamond). Giants are rare (<3%), so the
-    second source scan — whose filter discards everything else before any
-    Python — is cheap; the alternative (persisting the kernel output) would
-    materialize the full corpus at 100 TB. ``salt=False`` sends every row
-    down the normal branch (no giant branch, no second scan).
+    (Spark does not auto-cache a diamond); persisting the kernel output
+    instead would materialize the full corpus at 100 TB. The giant branch
+    is not cheap, though, even when no row reaches it: it scans the source
+    a second time (and, under a resume, runs the anti-join a second time),
+    and the write waits on its one-task stages — measured at local[4] on
+    the perfbench crawl, 0.5-0.8 s wall and about 1.8 CPU-s per
+    repetition. ``salt=False`` sends every row down the normal branch (no
+    giant branch, no second scan); pipeline._extraction_plan passes it
+    whenever the input's parquet footers rule out a doc larger than a scan
+    split (sources.io.may_hold_giants). Unsalted extraction gives the same
+    bytes, so that decision only ever costs speed.
 
     The normal kernel runs with its input's partitioning: no Exchange, the
     shuffle-free kernel plan. A coarse input is fanned out where it is
@@ -324,7 +374,9 @@ def union_branches(branches: list[DataFrame],
 
 
 def split_normal_giants(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(normal_prepped, giant_pages): the gate-aware giant split.
+    """(normal_prepped, giant_pages): the gate-aware giant split. A giant
+    is a layout doc larger than one scan split (operators/skew.py), the
+    threshold read from the session when this is called.
 
     A giant layout payload accompanied by gate-PASSING native text must
     resolve native_text (the serial oracle checks fastpath_ok(text) FIRST,
@@ -335,12 +387,15 @@ def split_normal_giants(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
     exact gate and can still layout-extract the whole doc correctly, just
     unsalted."""
     from paraocr_spark.core.quality import MIN_NATIVE_TEXT_CHARS
-    from paraocr_spark.operators.skew import giant_condition
+    from paraocr_spark.operators.skew import giant_bytes, giant_condition
 
     text_cant_fastpath = F.col("text").isNull() | (
         F.length("text") < F.lit(MIN_NATIVE_TEXT_CHARS)
     )
-    giant_cond = F.coalesce(giant_condition() & text_cant_fastpath, F.lit(False))
+    giant_cond = F.coalesce(
+        giant_condition(giant_bytes(pages.sparkSession)) & text_cant_fastpath,
+        F.lit(False),
+    )
     normal = _unsharded(pages.where(~giant_cond))
     giants = pages.where(giant_cond).select(*_BASE_COLS)
     return normal, giants

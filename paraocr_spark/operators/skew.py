@@ -9,6 +9,17 @@ and reassembled deterministically by ``groupBy(url)`` +
 ``sort_array(collect_list(struct(shard_id, ...)))`` — never relying on
 shuffle order (SURVEY.md §7 step 5).
 
+Only a document the input partitioning cannot balance is salted
+(FP-Hadoop, VLDB'15): a layout doc is a giant when it is larger than one
+scan split, the session's ``spark.sql.files.maxPartitionBytes``, read when
+the plan is built (giant_bytes). A smaller doc cannot straggle its task
+whatever its cost per byte, and the normal kernel extracts it whole, byte
+for byte as the shards would. The salted chain is not free: it adds three
+Python stages and two shuffles, and its branch costs a second source scan
+even when no row reaches it (operators/extract.extract_pages), so
+pipeline._extraction_plan drops it when the input's parquet footers rule a
+giant out (sources.io.may_hold_giants).
+
 HTML documents are single parse units and are not split; their skew is
 absorbed by the scan's fan-out (sources.io.read_table) plus AQE.
 """
@@ -18,14 +29,12 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from paraocr_spark.core import layout
 
-# A layout doc whose payload exceeds this many bytes is split into shards of
-# at most PAGES_PER_SHARD pages. At cluster scale these become job params.
-GIANT_BYTES_THRESHOLD = 64 * 1024
+# A giant is split into shards of at most PAGES_PER_SHARD pages.
 PAGES_PER_SHARD = 64
 
 _SHARD_COLS = "url string, warc_ts timestamp, html binary, text string, lang string, shard_id int, n_shards int"
@@ -35,9 +44,18 @@ def _is_layout_col():
     return F.substring(F.col("html"), 1, len(layout.MAGIC)) == F.lit(layout.MAGIC)
 
 
-def giant_condition(giant_bytes: int = GIANT_BYTES_THRESHOLD):
-    """Catalyst-visible predicate selecting giant layout documents."""
-    return _is_layout_col() & (F.octet_length("html") > F.lit(giant_bytes))
+def giant_bytes(spark: SparkSession) -> int:
+    """The giant threshold: one scan split, the session's
+    ``spark.sql.files.maxPartitionBytes`` in bytes (Spark's own parse of
+    the setting, so "128MB" and "134217728" read the same)."""
+    return int(spark._jsparkSession.sessionState().conf()
+               .filesMaxPartitionBytes())
+
+
+def giant_condition(threshold: int):
+    """Catalyst-visible predicate selecting layout documents larger than
+    ``threshold`` bytes (giant_bytes)."""
+    return _is_layout_col() & (F.octet_length("html") > F.lit(threshold))
 
 
 def salt_pages(pages: DataFrame,

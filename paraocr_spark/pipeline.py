@@ -4,7 +4,7 @@ Spark re-expression of the reference's OCRRunner.run five-stage engine
 (parallel.py:214-597) as one declarative plan:
 
     read pages -> resume anti-join (cli.py:227-231 analog)
-               -> salt giant docs (skew; SURVEY.md §4.2 gap fix)
+               -> salt docs larger than a scan split (skew; SURVEY.md §4.2)
                -> mapInPandas extract kernel (stages 2-4 of the reference)
                -> shard reassembly (A1/A3 analog, deterministic ordering)
                -> append extracted (S5) + lineage (S7) tables
@@ -30,6 +30,7 @@ from paraocr_spark.operators.lineage import (
     lineage_rows_from_acc,
 )
 from paraocr_spark.operators.resume import filter_unprocessed
+from paraocr_spark.operators.skew import giant_bytes
 from paraocr_spark.sources import io as pio
 
 EXTRACTED_COLS = [
@@ -46,7 +47,10 @@ class PipelineConfig:
     builds its plan from this config in one place (_extraction_plan), so
     each field means the same thing on all three.
 
-    ``salt`` splits giant layout docs into shards (operators/skew.py).
+    ``salt`` splits giant layout docs — larger than one scan split,
+    ``spark.sql.files.maxPartitionBytes`` — into shards
+    (operators/skew.py); a run whose input footers rule a giant out builds
+    no giant branch either way (_extraction_plan).
     ``backend`` selects the extractor strategy by registry name or dotted
     module.Class path (backends.py) — the --ocr-backend analog
     (cli.py:101-123). It feeds the fingerprint, so swapping backends
@@ -66,7 +70,9 @@ class PipelineConfig:
     #: optional parquet path for SHARD-level partial-result reuse on giant
     #: docs — the analog of the reference's per-page txt cache
     #: (parallel.py:431-448): a killed run's finished shards are never
-    #: re-extracted on resume. Used only with ``salt`` (no shards otherwise)
+    #: re-extracted on resume. Used only when the run salts: with ``salt``
+    #: and an input that may hold a doc larger than a scan split (no shards
+    #: otherwise, and the cache is neither read nor written)
     shard_cache_path: str | None = None
     #: bucket(warc_ts) fan-out of the output layout (Iceberg bucket(N)
     #: analog): size to the table, not the cluster — hundreds at 100 TB,
@@ -258,10 +264,14 @@ def _extraction_plan(
     """The plan every front runs: driver-side backend preflight -> url
     keyword filter -> resume anti-join -> extract -> config_fp column.
 
-    Giant shards go through the shard cache whenever ``cfg`` names one
+    Whether to salt is decided here, once, on the input ``pages``: only
+    with ``cfg.salt`` and only when sources.io.may_hold_giants cannot rule
+    out a layout doc larger than one scan split. Salted, giant shards go
+    through the shard cache whenever ``cfg`` names one
     (extract_with_shard_cache — eager: it runs the giant kernel), else
-    through extract_pages. ``n_buckets`` makes the result write-ready
-    (union_branches). Returns (plan, acc): with ``lineage``, acc is a
+    through extract_pages; unsalted, every row takes extract_pages' normal
+    kernel, which gives the same bytes. ``n_buckets`` makes the result
+    write-ready (union_branches). Returns (plan, acc): with ``lineage``, acc is a
     LineageAccParam accumulator that the normal kernel and the giant
     reassembly fill during the caller's action, on either route, counting
     each written row once under its _pid (operators/lineage.py); None
@@ -273,14 +283,18 @@ def _extraction_plan(
     """
     spark = pages.sparkSession
     preflight_backend(cfg.backend, cfg.backend_kwargs)  # fail fast on driver
+    # decided once, from the input's footers: with no doc larger than a
+    # scan split there is nothing to salt, and the giant branch would only
+    # add a second source scan and anti-join (operators/skew.py)
+    salt = cfg.salt and pio.may_hold_giants(pages, giant_bytes(spark))
     pages = ignore_keyword_filter(pages, cfg.ignore_url_keywords)
     todo = filter_unprocessed(pages, done, cfg.fingerprint)
     acc = (spark.sparkContext.accumulator({}, LineageAccParam())
            if lineage else None)
-    if cfg.shard_cache_path and cfg.salt:
+    if cfg.shard_cache_path and salt:
         out = extract_with_shard_cache(spark, todo, cfg, n_buckets, acc)
     else:
-        out = extract_pages(todo, salt=cfg.salt, backend=cfg.backend,
+        out = extract_pages(todo, salt=salt, backend=cfg.backend,
                             backend_kwargs=cfg.backend_kwargs,
                             lineage_acc=acc, n_buckets=n_buckets)
     return out.withColumn("config_fp", F.lit(cfg.fingerprint)), acc

@@ -394,6 +394,39 @@ def parquet_footers(df: DataFrame):
         yield pq.read_metadata(path, filesystem=fs)
 
 
+def may_hold_giants(pages: DataFrame, giant_bytes: int) -> bool:
+    """False only when ``pages`` has input files, all of them parquet, and
+    every row group's ``html`` column chunk is at most ``giant_bytes``
+    uncompressed — then no single html value can be larger, so no giant
+    exists (operators/skew.py). True for an input with no files (a
+    generated frame, a stream micro-batch), a non-parquet file (JSON, zip
+    archives), a file without an ``html`` column, or a store pyarrow
+    cannot open. A False is wrong only when ``html`` is not the files'
+    own column (say, a union with a generated frame), and even then it
+    costs speed, not bytes: unsalted extraction gives the same output.
+
+    Footers only, read on the driver: no Spark job, and it stops at the
+    first chunk above ``giant_bytes``. Reading every footer of a large
+    table is still far cheaper than what a False answer saves: the giant
+    branch would read the whole ``html`` column a second time."""
+    import pyarrow as pa
+
+    files = 0
+    try:
+        for md in parquet_footers(pages):
+            files += 1
+            cols = [md.schema.column(k).path for k in range(md.num_columns)]
+            if "html" not in cols:
+                return True
+            j = cols.index("html")
+            for g in range(md.num_row_groups):
+                if md.row_group(g).column(j).total_uncompressed_size > giant_bytes:
+                    return True
+    except (pa.ArrowException, OSError):
+        return True
+    return files == 0
+
+
 def read_table(spark: SparkSession, path: str) -> DataFrame:
     """An Iceberg catalog table, or a parquet path fanned out to the cores
     when it is coarse.

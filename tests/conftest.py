@@ -1,5 +1,12 @@
+import contextlib
+
 import pytest
 from pyspark.sql import SparkSession
+
+#: A scan split below every fixture giant (gen_page's i % 40 == 9 layout
+#: docs are all > 64 KB): scoped as ``spark.sql.files.maxPartitionBytes``,
+#: it makes them docs larger than a split, the ones the engine salts.
+SPLIT_BELOW_GIANTS = 64 * 1024
 
 
 @pytest.fixture(scope="session")
@@ -18,6 +25,32 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def scoped_split(spark):
+    """``with scoped_split():`` sets the session's scan split to
+    SPLIT_BELOW_GIANTS and restores the prior setting on exit.
+    Session-scoped, so module-scoped fixtures can use it too."""
+
+    @contextlib.contextmanager
+    def scope():
+        key = "spark.sql.files.maxPartitionBytes"
+        prior = spark.conf.get(key)
+        spark.conf.set(key, str(SPLIT_BELOW_GIANTS))
+        try:
+            yield
+        finally:
+            spark.conf.set(key, prior)
+
+    return scope
+
+
+@pytest.fixture()
+def split_below_giants(scoped_split):
+    """The fixture giants are larger than the scan split for one test."""
+    with scoped_split():
+        yield
 
 
 import textwrap

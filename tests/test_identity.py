@@ -3,7 +3,10 @@
 The analog of the reference's vanilla-vs-parallel equivalence methodology
 (tests/bench_colab.py:207-226 in /root/reference): same corpus, the parallel
 engine must produce the same output. Here: byte-identical extracted_text +
-span arrays + method + error per url, at N=500 (FIXTURES.md golden scale).
+span arrays + method + error per url, at N=500 (FIXTURES.md golden scale),
+on both giant paths: salted (the scan split scoped below the fixture
+giants) and whole through the normal kernel (the default split, larger
+than every fixture doc).
 """
 
 import pytest
@@ -11,23 +14,38 @@ from pyspark.sql import functions as F
 
 from paraocr_spark.core.reference import extract_document
 from paraocr_spark.operators.extract import extract_pages
-from paraocr_spark.operators.skew import giant_condition, salt_pages
+from paraocr_spark.operators.skew import giant_bytes, giant_condition, salt_pages
 from paraocr_spark.sources.pages import gen_page, pages_df
 
 N = 500
 
 
 @pytest.fixture(scope="module")
-def result_rows(spark):
+def result_runs(spark, scoped_split):
+    """{giant path: the collected extract_pages rows}. The giant rule reads
+    the split when the plan is built, so the salted plan is built (and
+    run) inside the scope."""
+    from paraocr_spark.operators.extract import split_normal_giants
+
     pg = pages_df(spark, N, 8)
-    return extract_pages(pg).collect()
+    with scoped_split():
+        assert split_normal_giants(pg)[1].count() >= 1, "nothing salted"
+        salted = extract_pages(pg).collect()
+    return {"salted": salted, "unsalted": extract_pages(pg).collect()}
 
 
-def test_row_count_invariant(result_rows):
+@pytest.fixture(scope="module")
+def result_rows(result_runs):
+    """Both runs' rows: every check below holds row by row on each."""
+    return result_runs["salted"] + result_runs["unsalted"]
+
+
+def test_row_count_invariant(result_runs):
     # one output row per input url, errors in-band never dropped
     # (parallel.py:565-569 analog)
-    assert len(result_rows) == N
-    assert len({r.url for r in result_rows}) == N
+    for rows in result_runs.values():
+        assert len(rows) == N
+        assert len({r.url for r in rows}) == N
 
 
 def test_byte_identity_all_rows(result_rows):
@@ -56,34 +74,37 @@ def test_span_reconstruction(result_rows):
             assert seg == seg.strip() or seg == ""
 
 
-def test_salting_actually_triggers(spark):
+def test_salting_actually_triggers(spark, split_below_giants):
     # regression guard: giants must exceed the salt threshold
     import pyspark.sql.functions as F
 
     pg = pages_df(spark, 80, 8)  # includes i=9 (layout) and i=49 (giant)
-    giants = pg.where(F.coalesce(giant_condition(), F.lit(False)))
+    giants = pg.where(
+        F.coalesce(giant_condition(giant_bytes(spark)), F.lit(False)))
     assert giants.count() >= 1, "fixture must contain giant docs"
     counts = {r.n_shards: r["count"] for r in
               salt_pages(giants).groupBy("n_shards").count().collect()}
     assert any(k > 1 for k in counts), counts
 
 
-def test_all_methods_present(result_rows):
-    methods = {r.method for r in result_rows}
-    assert methods == {"native_text", "html_extract", "layout_extract", "error"}
+def test_all_methods_present(result_runs):
+    for rows in result_runs.values():
+        methods = {r.method for r in rows}
+        assert methods == {"native_text", "html_extract", "layout_extract", "error"}
 
 
-def test_error_rows_in_band(result_rows):
-    errs = [r for r in result_rows if r.method == "error"]
-    assert errs, "corrupt overlay rows must appear"
-    for r in errs:
-        assert r.error in ("no_content", "invalid_utf8") or r.error.startswith(
-            ("layout_error", "html_error")
-        )
-        assert r.extracted_text is None
+def test_error_rows_in_band(result_runs):
+    for rows in result_runs.values():
+        errs = [r for r in rows if r.method == "error"]
+        assert errs, "corrupt overlay rows must appear"
+        for r in errs:
+            assert r.error in ("no_content", "invalid_utf8") or r.error.startswith(
+                ("layout_error", "html_error")
+            )
+            assert r.extracted_text is None
 
 
-def test_giant_with_native_text_prefers_fastpath(spark):
+def test_giant_with_native_text_prefers_fastpath(spark, split_below_giants):
     """A giant layout payload accompanied by gate-PASSING native text must
     resolve native_text — the serial oracle checks fastpath_ok(text) FIRST
     (core/reference.py:43), so the salted shard path (which never applies

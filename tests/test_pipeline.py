@@ -58,7 +58,8 @@ def test_lineage_rollup(spark, tmp_path):
 
 
 @pytest.mark.parametrize("cached", ["fresh", "partly_cached", "fully_cached"])
-def test_written_lineage_equals_groupby_pid(spark, tmp_path, cached):
+def test_written_lineage_equals_groupby_pid(spark, tmp_path, cached,
+                                            split_below_giants):
     """Each written row is counted once, under its own _pid: the lineage
     rows run_and_write appends equal a groupBy(_pid) over the rows that
     invocation wrote — giants extracted fresh on the extract_pages route,
@@ -410,9 +411,9 @@ def _buckets_with_both_branches(spark, out: str) -> int:
     """Buckets holding a salted giant AND a normal doc: only there could a
     union that concatenates (instead of zipping) its children's
     partitions put one bucket in two write tasks, i.e. two files."""
-    from paraocr_spark.operators.skew import GIANT_BYTES_THRESHOLD
+    from paraocr_spark.operators.skew import giant_bytes
 
-    giant = (F.col("_doc_bytes") > GIANT_BYTES_THRESHOLD).cast("int")
+    giant = (F.col("_doc_bytes") > giant_bytes(spark)).cast("int")
     return (
         pio.read_table(spark, out).groupBy("warc_bucket")
         .agg(F.max(giant).alias("g"), F.min(giant).alias("n"))
@@ -460,7 +461,8 @@ def _bucket_exchanges_per_union_side(plan: str) -> tuple[str, list[int]]:
     return "\n".join(current[:u]), counts
 
 
-def test_run_and_write_buckets_each_branch_below_the_union(spark, tmp_path):
+def test_run_and_write_buckets_each_branch_below_the_union(
+        spark, tmp_path, split_below_giants):
     """The salted extract's two branches (normal kernel, merged giants) each
     get their own warc_bucket Exchange BELOW the union, and the union zips
     them with no Exchange above it — so the normal kernel's map stage never
@@ -517,7 +519,8 @@ def test_run_and_write_one_file_per_bucket_above_32_buckets_per_task(
     assert per_task > 32, per_task
 
 
-def test_bucketed_write_layout_holds_with_union_partitioning_off(spark, tmp_path):
+def test_bucketed_write_layout_holds_with_union_partitioning_off(
+        spark, tmp_path, split_below_giants):
     """A session that turned spark.sql.unionOutputPartitioning off still
     gets the zipped union (write_extracted scopes it on) — and gets its own
     setting back afterwards."""
@@ -540,7 +543,8 @@ def test_bucketed_write_layout_holds_with_union_partitioning_off(spark, tmp_path
         spark.conf.set(key, prev)
 
 
-def test_three_fronts_build_the_same_extraction(spark, tmp_path):
+def test_three_fronts_build_the_same_extraction(spark, tmp_path,
+                                               split_below_giants):
     """run_extraction, run_and_write and the stream's micro-batches build
     their plan in one place, so one config means the same on all three: the
     same keyword filter, the shard cache for giant shards (each front fills
@@ -578,3 +582,93 @@ def test_three_fronts_build_the_same_extraction(spark, tmp_path):
     for front in ("batch", "write", "stream"):
         cache = spark.read.parquet(str(tmp_path / f"cache_{front}"))
         assert cache.select("url").distinct().count() == 2  # both giants
+
+
+def test_build_session_caps_arrow_batch_bytes(monkeypatch):
+    """job.build_session sets the Arrow byte cap (read off the builder, no
+    session is created)."""
+    from pyspark.sql import SparkSession
+
+    from paraocr_spark import job
+
+    seen = {}
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate",
+                        lambda self: seen.update(self._options))
+    for k in job.WORKER_ALLOC_ENV:
+        monkeypatch.delenv(k, raising=False)  # restored after the test
+    job.build_session(master="local[1]")
+    assert (seen["spark.sql.execution.arrow.maxBytesPerBatch"]
+            == str(job.ARROW_MAX_BYTES_PER_BATCH))
+
+
+def test_arrow_byte_cap_bounds_kernel_input_batches(spark):
+    """Under the cap, a mapInPandas over pages holding giants (one in ten
+    rows 0.7 MB, as in the perfbench crawl, and one 5 MB row) gets no batch
+    whose rows before the last already reach the cap: Spark closes a batch
+    at the row that takes it there. Without the cap the record limit alone
+    puts every giant in one batch."""
+    import pandas as pd
+
+    from paraocr_spark.job import ARROW_MAX_BYTES_PER_BATCH as CAP
+
+    size = ("case when id = 5 then 5000000 "
+            "when id % 10 = 9 then 700000 else 4000 end")
+    pages = spark.range(0, 400, 1, 1).select(
+        F.col("id").cast("string").alias("url"),
+        F.expr(f"cast(repeat('x', {size}) as binary)").alias("html"),
+    )
+
+    def batches(it):
+        for b in it:
+            n = [len(h) for h in b["html"]]
+            yield pd.DataFrame({"rows": [len(n)], "before_last": [sum(n[:-1])]})
+
+    def seen():
+        return pages.mapInPandas(batches, "rows long, before_last long").collect()
+
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, str(CAP))
+    try:
+        capped = seen()
+    finally:
+        spark.conf.set(key, prior)
+    assert sum(r.rows for r in capped) == 400
+    assert len(capped) > 1
+    assert all(r.before_last < CAP for r in capped), capped
+    assert any(r.before_last >= CAP for r in seen())
+
+
+def test_zip_directory_read_once_per_unchanged_archive(tmp_path, monkeypatch):
+    """The kernel's worker-side zipimport memo: invalidate_caches() on an
+    unchanged archive (pyspark's worker calls it at every task start)
+    re-reads nothing, and a rewritten archive is read again."""
+    import zipfile
+    import zipimport
+
+    from paraocr_spark.operators import extract as ex
+
+    reads = []
+    orig = zipimport._read_directory
+
+    def counting(archive):
+        reads.append(archive)
+        return orig(archive)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    monkeypatch.setattr(ex, "_zip_directories_memoized", False)
+    z = tmp_path / "mods.zip"
+    with zipfile.ZipFile(z, "w") as f:
+        f.writestr("zmod_a.py", "X = 1\n")
+    ex._memoize_zip_directories()
+    imp = zipimport.zipimporter(str(z))
+    for _ in range(3):
+        imp.invalidate_caches()
+    assert imp.find_spec("zmod_a") is not None
+    assert reads.count(str(z)) == 1
+    with zipfile.ZipFile(z, "w") as f:  # a new size: read again
+        f.writestr("zmod_a.py", "X = 1\n")
+        f.writestr("zmod_b.py", "Y = 2\n")
+    imp.invalidate_caches()
+    assert imp.find_spec("zmod_b") is not None
+    assert reads.count(str(z)) == 2

@@ -210,6 +210,51 @@ def test_no_spark_job_while_building_plans(spark):
     assert ran == {name: 0 for name in builds}
 
 
+def _nodes(plan: str, name: str) -> int:
+    """How many operators named ``name`` a formatted plan lists."""
+    import re
+
+    return len(re.findall(rf"^\(\d+\) {name}\b", plan, re.M))
+
+
+def test_giant_branch_only_when_footers_allow_a_giant(spark, tmp_path,
+                                                      scoped_split):
+    """run_extraction salts only docs larger than one scan split, and
+    decides from the parquet footers whether one can exist. Parquet pages
+    whose html chunks all fit the (default) split build ONE branch: one
+    scan, one MapInPandas (the kernel), no giant filter — and reading the
+    footers runs no Spark job. The same files under a split smaller than
+    their giants get the salted giant branch back; so does a generated
+    input, which has no files to read."""
+    from paraocr_spark.pipeline import PipelineConfig, run_extraction
+    from paraocr_spark.sources.pages import pages_df
+
+    sc = spark.sparkContext
+    path = str(tmp_path / "pages")
+    pages_df(spark, 120, 4).write.parquet(path)  # three giants > 64 KB
+    pages = spark.read.parquet(path)
+
+    out, jobs = _jobs_in(sc, "build_footers",
+                         lambda: run_extraction(spark, pages, PipelineConfig()))
+    assert not jobs
+    p = plan_of(out)
+    assert _nodes(p, "Scan parquet") == 1, p
+    assert _nodes(p, "MapInPandas") == 1, p
+    assert "octet_length" not in p  # no giant filter
+
+    with scoped_split():
+        p = plan_of(run_extraction(spark, spark.read.parquet(path),
+                                   PipelineConfig()))
+    assert _nodes(p, "Scan parquet") == 2, p
+    assert _nodes(p, "MapInPandas") == 3, p  # kernel, salt split, shard kernel
+    assert "octet_length" in p
+
+    p = plan_of(run_extraction(spark, pages_df(spark, 40, 2), PipelineConfig()))
+    # + the generator, under each branch
+    assert _nodes(p, "MapInPandas") == 5, p
+    assert "octet_length" in p
+
+
 def test_relational_quality_gate_stays_jvm(spark, docs):
     from paraocr_spark.functions.text import quality_gate, quality_score
 

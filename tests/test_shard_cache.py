@@ -10,6 +10,10 @@ from paraocr_spark.sources.pages import pages_df
 
 N = 200  # includes giant layout docs at i=9 and i=169 (i%160==9)
 
+# the cache holds shards of docs larger than a scan split: scope the split
+# below the fixture giants for every test here
+pytestmark = pytest.mark.usefixtures("split_below_giants")
+
 
 def _result_map(df):
     return {

@@ -23,20 +23,35 @@ import argparse
 import contextlib
 import io
 import os
+import shutil
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = "/root/testdata/sf0.001"
 
 COMMENT = {
     "extraction pipeline (salted)": (
-        "Two source branches (normal filter / giant filter) feed the kernel "
+        "What extract_pages builds, and run_extraction whenever the input "
+        "may hold a layout doc larger than one scan split "
+        "(spark.sql.files.maxPartitionBytes): a generated input like this "
+        "one, or parquet footers with an html chunk above the split. Two "
+        "source branches (normal filter / giant filter) feed the kernel "
         "exactly once per row; the normal branch is Exchange-free end to "
-        "end, the giant branch shuffles only the rare >64KB layout docs and "
-        "reassembles with one keyed groupBy (JVM-side span shifting). The "
-        "operator adds no input fan-out: a coarse table is round-robined "
-        "to the cores where it is read (sources.io.read_table), so this "
-        "plain scan, like any scan at scale, feeds the kernel directly."
+        "end, the giant branch shuffles only the docs larger than a split "
+        "and reassembles with one keyed groupBy (JVM-side span shifting). "
+        "The operator adds no input fan-out: a coarse table is "
+        "round-robined to the cores where it is read "
+        "(sources.io.read_table), so this plain scan, like any scan at "
+        "scale, feeds the kernel directly."
+    ),
+    "extraction pipeline (no giant possible)": (
+        "What run_extraction builds over parquet pages whose footers show "
+        "every html column chunk within one scan split "
+        "(sources.io.may_hold_giants, no Spark job): one scan, one "
+        "MapInPandas, no giant filter and no second scan or anti-join. "
+        "The normal kernel extracts every doc whole, the same bytes the "
+        "salted path gives."
     ),
     "extraction pipeline (salted, bucketed for the write)": (
         "The plan run_and_write, the shard-cache path and the streaming "
@@ -137,8 +152,15 @@ def write_plans_md() -> None:
     pages = pages_from_documents(docs, "html")
     done = pages_from_documents(docs.where(F.col("doc_id") % 3 == 0), "html").select("url")
 
+    from paraocr_spark.pipeline import PipelineConfig, run_extraction
+
+    pages_dir = tempfile.mkdtemp(prefix="dump_plans_pages_")
+    pages.write.mode("overwrite").parquet(pages_dir)
     plans = {
         "extraction pipeline (salted)": extract_pages(pages),
+        "extraction pipeline (no giant possible)": run_extraction(
+            spark, spark.read.parquet(pages_dir), PipelineConfig()
+        ),
         "extraction pipeline (salted, bucketed for the write)": extract_pages(
             pages, n_buckets=WARC_BUCKETS
         ),
@@ -172,6 +194,7 @@ def write_plans_md() -> None:
         f.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()
+    shutil.rmtree(pages_dir, ignore_errors=True)
 
 
 def dump_queries(out_dir: str, suffix: str) -> None:
