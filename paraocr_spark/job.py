@@ -98,9 +98,12 @@ def main(argv: list[str] | None = None) -> int:
                    help="comma-separated url keywords to skip, "
                    "case-insensitive substring (cli.py:249-251 analog)")
     p.add_argument("--warc-buckets", type=int, default=64,
-                   help="bucket(warc_ts) fan-out of the output layout — "
-                   "size to the table (hundreds at 100 TB, ~2x cores for "
-                   "small runs)")
+                   help="cap on the run's bucket(warc_ts) count; the count "
+                   "itself is one bucket (one output file) per scan split "
+                   "of input bytes, read from the input's parquet footers, "
+                   "or this cap when there are none; above the cores it "
+                   "is rounded down to a multiple of them. The JSON "
+                   "line reports it as 'buckets'")
     p.add_argument("--shard-cache", default=None,
                    help="parquet path for shard-level partial-result reuse "
                    "on giant docs (the per-page txt cache analog, "
@@ -131,7 +134,7 @@ def main(argv: list[str] | None = None) -> int:
             # footers to rule a giant out, so its plan would keep the giant
             # branch and regenerate every synthetic row in Python for its
             # second scan; parquet pages get the footer decision
-            # (sources.io.may_hold_giants) like any --input
+            # (sources.io.input_footprint) like any --input
             import tempfile
 
             parts = args.partitions or spark.sparkContext.defaultParallelism

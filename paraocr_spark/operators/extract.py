@@ -320,7 +320,7 @@ def extract_pages(pages: DataFrame, *, salt: bool = True,
     repetition. ``salt=False`` sends every row down the normal branch (no
     giant branch, no second scan); pipeline._extraction_plan passes it
     whenever the input's parquet footers rule out a doc larger than a scan
-    split (sources.io.may_hold_giants). Unsalted extraction gives the same
+    split (sources.io.input_footprint). Unsalted extraction gives the same
     bytes, so that decision only ever costs speed.
 
     The normal kernel runs with its input's partitioning: no Exchange, the

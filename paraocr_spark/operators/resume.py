@@ -20,7 +20,10 @@ def filter_unprocessed(pages: DataFrame, done: DataFrame | None,
     """pages minus urls already extracted (left_anti on url [+config_fp]).
 
     ``done`` is the prior extracted/lineage output (needs ``url``; uses
-    ``config_fp`` column when both sides have one). None -> no-op.
+    ``config_fp`` column when both sides have one). None -> no-op. A url
+    repeated on the done side needs no dropDuplicates: a left-anti join
+    keeps the same rows either way, and the aggregate would add a shuffle
+    and a 1-task stage to every resume run.
     """
     if done is None:
         return pages
@@ -28,4 +31,4 @@ def filter_unprocessed(pages: DataFrame, done: DataFrame | None,
     d = done
     if config_fp is not None and "config_fp" in done.columns:
         d = done.where(F.col("config_fp") == config_fp)
-    return pages.join(d.select(*keys).dropDuplicates(keys), on=keys, how="left_anti")
+    return pages.join(d.select(*keys), on=keys, how="left_anti")

@@ -18,7 +18,7 @@ for byte as the shards would. The salted chain is not free: it adds three
 Python stages and two shuffles, and its branch costs a second source scan
 even when no row reaches it (operators/extract.extract_pages), so
 pipeline._extraction_plan drops it when the input's parquet footers rule a
-giant out (sources.io.may_hold_giants).
+giant out (sources.io.input_footprint).
 
 HTML documents are single parse units and are not split; their skew is
 absorbed by the scan's fan-out (sources.io.read_table) plus AQE.

@@ -16,8 +16,10 @@ scan, and AQE handles post-shuffle sizing at any scale.
 
 from __future__ import annotations
 
+import math
 import time
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,16 +76,17 @@ class PipelineConfig:
     #: and an input that may hold a doc larger than a scan split (no shards
     #: otherwise, and the cache is neither read nor written)
     shard_cache_path: str | None = None
-    #: bucket(warc_ts) fan-out of the output layout (Iceberg bucket(N)
-    #: analog): size to the table, not the cluster — hundreds at 100 TB,
-    #: fewer for small tables. Each invocation writes one file per bucket;
-    #: the write's task count is min(warc_buckets, cores), not warc_buckets
-    #: (sources/io.bucket_for_write), so buckets above the core count cost
-    #: files, not tasks. Each file also costs process spawns where Hadoop's
-    #: native IO is missing (see sources/io.write_extracted): ~430 spawns
-    #: and 1.2-1.3 s at 64 buckets vs ~55 and 0.7 s at 4, writing the
-    #: 3000-doc perfbench crawl output at local[4]
-    warc_buckets: int = 64
+    #: the cap on an invocation's bucket(warc_ts) count (Iceberg bucket(N)
+    #: analog). The count itself is decided per invocation from the input's
+    #: footers (write_bucket_count): one bucket per scan split of input
+    #: bytes, at least 1 and at most this cap, or the cap when the input
+    #: has no parquet footers to read (a generated frame, a stream
+    #: micro-batch, JSON or zip input); a count above the cores is rounded
+    #: down to a multiple of them. Each bucket is one output file, so a
+    #: small input writes few files, and an input of at least
+    #: ``warc_buckets`` x maxPartitionBytes writes ``warc_buckets`` (64 on
+    #: 1, 2, 4, ... 64 cores)
+    warc_buckets: int = pio.WARC_BUCKETS
     extra: dict = field(default_factory=dict)
 
     @property
@@ -253,25 +256,60 @@ def gc_shard_cache(spark: SparkSession, cache_path: str, keep_fp: str,
     }
 
 
+def write_bucket_count(spark: SparkSession, foot: pio.Footprint,
+                       cap: int) -> int:
+    """An invocation's bucket(warc_ts) count: one bucket per scan split of
+    the input's footer bytes, between 1 and ``cap``; ``cap`` when the
+    bytes are unknown. The split is the one Spark's scan sizes for those
+    bytes (sources.io.scan_split_bytes): one per core for an input between
+    cores x openCostInBytes and cores x maxPartitionBytes, so the write
+    runs on every core, while a smaller input writes one file per
+    openCostInBytes (4 MB). A count above the cores is rounded down to a
+    multiple of them, so the write's min(n, cores) tasks each hold the
+    same number of buckets (sources.io.bucket_for_write); the default cap,
+    64, is kept whole on 1, 2, 4, ... 64 cores."""
+    n = cap
+    if foot.bytes is not None:
+        split = pio.scan_split_bytes(spark, foot.bytes)
+        n = min(cap, max(1, math.ceil(foot.bytes / split)))
+    cores = spark.sparkContext.defaultParallelism
+    return n if n <= cores else n - n % cores
+
+
+class ExtractionPlan(NamedTuple):
+    """What _extraction_plan builds for a front."""
+    df: DataFrame
+    #: LineageAccParam accumulator filled by the caller's action, or None
+    acc: object
+    #: the bucket(warc_ts) count the write uses (write_bucket_count)
+    n_buckets: int
+
+
 def _extraction_plan(
     pages: DataFrame,
     cfg: PipelineConfig,
     done: DataFrame | None = None,
     *,
-    n_buckets: int | None = None,
+    write: bool = False,
     lineage: bool = False,
-):
+) -> ExtractionPlan:
     """The plan every front runs: driver-side backend preflight -> url
     keyword filter -> resume anti-join -> extract -> config_fp column.
 
-    Whether to salt is decided here, once, on the input ``pages``: only
-    with ``cfg.salt`` and only when sources.io.may_hold_giants cannot rule
-    out a layout doc larger than one scan split. Salted, giant shards go
-    through the shard cache whenever ``cfg`` names one
-    (extract_with_shard_cache — eager: it runs the giant kernel), else
-    through extract_pages; unsalted, every row takes extract_pages' normal
-    kernel, which gives the same bytes. ``n_buckets`` makes the result
-    write-ready (union_branches). Returns (plan, acc): with ``lineage``, acc is a
+    Two facts are decided here, once, from one walk over the input
+    ``pages``' parquet footers (sources.io.input_footprint):
+    - whether to salt: only with ``cfg.salt`` and only when the footers
+      cannot rule out a layout doc larger than one scan split. Salted,
+      giant shards go through the shard cache whenever ``cfg`` names one
+      (extract_with_shard_cache — eager: it runs the giant kernel), else
+      through extract_pages; unsalted, every row takes extract_pages'
+      normal kernel, which gives the same bytes;
+    - the write's bucket count, ``n_buckets`` (write_bucket_count, capped
+      by ``cfg.warc_buckets``). With ``write`` each branch is bucketed by
+      it below the union (union_branches), and the fronts hand the same
+      count to sources.io.write_extracted.
+
+    Returns an ExtractionPlan: with ``lineage``, its acc is a
     LineageAccParam accumulator that the normal kernel and the giant
     reassembly fill during the caller's action, on either route, counting
     each written row once under its _pid (operators/lineage.py); None
@@ -283,21 +321,28 @@ def _extraction_plan(
     """
     spark = pages.sparkSession
     preflight_backend(cfg.backend, cfg.backend_kwargs)  # fail fast on driver
-    # decided once, from the input's footers: with no doc larger than a
-    # scan split there is nothing to salt, and the giant branch would only
-    # add a second source scan and anti-join (operators/skew.py)
-    salt = cfg.salt and pio.may_hold_giants(pages, giant_bytes(spark))
+    split = giant_bytes(spark)
+    # no split is larger than maxPartitionBytes, so once the walk has
+    # counted cap x that many bytes the count is the cap
+    foot = pio.input_footprint(pages, split, cfg.warc_buckets * split)
+    # with no doc larger than a scan split there is nothing to salt, and
+    # the giant branch would only add a second source scan and anti-join
+    # (operators/skew.py)
+    salt = cfg.salt and foot.may_hold_giants
+    n_buckets = write_bucket_count(spark, foot, cfg.warc_buckets)
+    bucket_by = n_buckets if write else None
     pages = ignore_keyword_filter(pages, cfg.ignore_url_keywords)
     todo = filter_unprocessed(pages, done, cfg.fingerprint)
     acc = (spark.sparkContext.accumulator({}, LineageAccParam())
            if lineage else None)
     if cfg.shard_cache_path and salt:
-        out = extract_with_shard_cache(spark, todo, cfg, n_buckets, acc)
+        out = extract_with_shard_cache(spark, todo, cfg, bucket_by, acc)
     else:
         out = extract_pages(todo, salt=salt, backend=cfg.backend,
                             backend_kwargs=cfg.backend_kwargs,
-                            lineage_acc=acc, n_buckets=n_buckets)
-    return out.withColumn("config_fp", F.lit(cfg.fingerprint)), acc
+                            lineage_acc=acc, n_buckets=bucket_by)
+    return ExtractionPlan(out.withColumn("config_fp", F.lit(cfg.fingerprint)),
+                          acc, n_buckets)
 
 
 def run_extraction(
@@ -313,8 +358,8 @@ def run_extraction(
     ``done`` is the prior output for resume (None = fresh run).
     """
     cfg = cfg or PipelineConfig()
-    out, _ = _extraction_plan(pages, cfg, done)
-    return out.select(*EXTRACTED_COLS, "config_fp")
+    plan = _extraction_plan(pages, cfg, done)
+    return plan.df.select(*EXTRACTED_COLS, "config_fp")
 
 
 def run_and_write(
@@ -343,18 +388,16 @@ def run_and_write(
     t0 = time.perf_counter()  # before plan build: the shard-cache path is eager
     # both routes bucket each branch below the union
     # (operators/extract.union_branches): write_extracted adds no exchange
-    extracted_df, acc = _extraction_plan(
-        pages, cfg, done, n_buckets=cfg.warc_buckets, lineage=True
-    )
+    plan = _extraction_plan(pages, cfg, done, write=True, lineage=True)
     out = (
-        extracted_df
+        plan.df
         .withColumn("run_id", F.lit(cfg.run_id))
         .withColumn("invocation_id", F.lit(invocation_id))
     )
-    pio.write_extracted(out, out_path, n_buckets=cfg.warc_buckets)
+    pio.write_extracted(out, out_path, n_buckets=plan.n_buckets)
     t_write = time.perf_counter() - t0
     lin_rows = lineage_rows_from_acc(
-        acc.value, cfg.run_id, cfg.fingerprint, invocation_id
+        plan.acc.value, cfg.run_id, cfg.fingerprint, invocation_id
     )
     n = sum(r["doc_count"] for r in lin_rows)
     pio.write_lineage_rows(lin_rows, lineage_path)
@@ -369,6 +412,9 @@ def run_and_write(
         # tails, host walls)
         "kernel_cpu_s": sum(r["wall_time_s"] for r in lin_rows),
         "invocation_id": invocation_id,
+        # the invocation's bucket(warc_ts) count: one file per bucket
+        # that received rows
+        "buckets": plan.n_buckets,
         # phase decomposition: everything after the write action is
         # per-run fixed cost — watch it stay negligible
         "phase_s": {

@@ -9,46 +9,79 @@ natively (they replace the reference's manifest cache, parallel.py:85-96).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+#: the default cap on an invocation's bucket(warc_ts) count: a write gets
+#: one bucket per scan split of its input, at most this many
+#: (pipeline.write_bucket_count)
 WARC_BUCKETS = 64
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
+    """Whether the Iceberg runtime is on the classpath, probed once per
+    SparkContext and kept on it: the py4j ``Class.forName`` costs ~20 ms
+    per call when Iceberg is absent (it converts the
+    ClassNotFoundException), and every write_extracted and read_table
+    asks. A new context, which may ship other jars, is probed again."""
+    sc = spark.sparkContext
+    if getattr(sc, "_paraocr_iceberg", None) is None:
+        try:
+            spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
+                "org.apache.iceberg.spark.SparkCatalog"
+            )
+            sc._paraocr_iceberg = True
+        except Exception:
+            sc._paraocr_iceberg = False
+    return sc._paraocr_iceberg
+
+
+def _bucket_key():
+    """The key bucket(warc_ts) hashes; bucket_for_write's exchange hashes
+    the same one."""
+    return F.col("warc_ts").cast("long")
 
 
 def with_warc_bucket(df: DataFrame, n_buckets: int = WARC_BUCKETS) -> DataFrame:
     """Materialize the Iceberg-style bucket(warc_ts) partition column."""
     return df.withColumn(
-        "warc_bucket",
-        F.pmod(F.hash(F.col("warc_ts").cast("long")), F.lit(n_buckets)),
-    )
+        "warc_bucket", F.pmod(F.hash(_bucket_key()), F.lit(n_buckets)))
+
+
+def write_tasks(n_buckets: int, cores: int) -> int:
+    """The write's partition count P for ``n_buckets``: the largest divisor
+    of ``n_buckets`` that is at most ``cores`` (bucket_for_write). That is
+    min(n_buckets, cores) for every count pipeline.write_bucket_count
+    gives; a caller's own count with no divisor near the cores (a prime
+    above them) writes on fewer tasks."""
+    return max(d for d in range(1, min(n_buckets, cores) + 1)
+               if n_buckets % d == 0)
 
 
 def bucket_for_write(df: DataFrame, n_buckets: int = WARC_BUCKETS) -> DataFrame:
-    """Add ``warc_bucket`` and hash-partition on it into
-    P = min(n_buckets, defaultParallelism) partitions: the write layout's
-    one exchange.
+    """Add ``warc_bucket`` and hash-partition into P partitions on the
+    bucket's own key, ``cast(warc_ts as bigint)``: the write layout's one
+    exchange. P = write_tasks(n_buckets, defaultParallelism).
 
-    Every bucket lands in exactly one partition, so the partitioned write
-    opens exactly one file per bucket. P is sized to the cores, not the
-    buckets: with 64 buckets on 4 cores the write runs 4 tasks holding
-    ~16 buckets each instead of 64 one-bucket tasks; at scale (cores >=
-    n_buckets) P = n_buckets, as before. The partition count is explicit,
+    The exchange's Murmur3 pmod P and with_warc_bucket's pmod n_buckets
+    hash the same key with the same seed, and P divides n_buckets, so
+    bucket b lands in partition b mod P: every bucket in exactly one
+    partition (the partitioned write opens exactly one file per bucket),
+    and every partition holds n_buckets / P buckets. Hashing the bucket
+    number itself would pile small counts onto few tasks: 4 buckets
+    hashed onto 4 partitions fill 2 of them, one with 3 buckets, so one
+    task would write three quarters of the rows. P is sized to the cores,
+    not the buckets: with 64 buckets on 4 cores the write runs 4 tasks
+    holding 16 buckets each instead of 64 one-bucket tasks; at scale
+    (cores >= n_buckets) P = n_buckets. The partition count is explicit,
     so AQE never coalesces it — two frames bucketed by this helper have
     identical partitioning and a Union of them zips partition i with
     partition i (``spark.sql.unionOutputPartitioning``, scoped on by
     write_extracted) instead of needing an exchange above it."""
-    p = min(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
-    return with_warc_bucket(df, n_buckets).repartition(p, F.col("warc_bucket"))
+    p = write_tasks(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
+    return with_warc_bucket(df, n_buckets).repartition(p, _bucket_key())
 
 
 def write_extracted(df: DataFrame, path: str, mode: str = "append",
@@ -66,6 +99,15 @@ def write_extracted(df: DataFrame, path: str, mode: str = "append",
     per branch, below its union, when given n_buckets): it is written with
     no further exchange. Any other input is bucketed here.
 
+    ``n_buckets`` is the invocation's file count, one per bucket. The
+    pipeline fronts pass the count pipeline._extraction_plan decided from
+    the input's footers (pipeline.write_bucket_count: one bucket per scan
+    split of input, at most ``PipelineConfig.warc_buckets``), so a small
+    input writes few files.
+    ``warc_bucket`` is a file-layout level of one invocation, not a stable
+    key -> bucket map: two invocations may hash the same warc_ts into
+    different buckets, and no reader relies on the number.
+
     Per-file cost: where ``NativeIO.isAvailable()`` is false (no
     libhadoop), Hadoop's ``RawLocalFileSystem.setPermission`` runs a
     ``chmod`` process for every file, ``.crc`` and partition directory it
@@ -78,9 +120,6 @@ def write_extracted(df: DataFrame, path: str, mode: str = "append",
         # own bucket(warc_ts) transform partitions it
         df.drop("warc_bucket").writeTo(path).append()
         return
-    # n_buckets is a LAYOUT knob (Iceberg bucket(N) analog): hundreds at
-    # 100 TB, small for small tables — 64 buckets on a 2.4 GB bench table
-    # is pure shuffle + tiny-file overhead
     parts = (["run_id"] if "run_id" in df.columns else []) + ["warc_bucket"]
     _check_partition_layout(path, parts[0])
     # co-locate each bucket in one task BEFORE the partitioned write:
@@ -109,8 +148,8 @@ def write_extracted(df: DataFrame, path: str, mode: str = "append",
     # executors: the write stage burned 312 CPU-s (4.8x its 1-executor
     # cost — 8 concurrent sorters hit the host memory-bandwidth wall);
     # scoped off, the task-side writer keeps one open file per bucket it
-    # holds. A task holds ~n_buckets/P buckets (64 hashed onto 4
-    # partitions: 11/16/16/21), so allow max(32, n_buckets) concurrent
+    # holds. A task holds n_buckets/P buckets (bucket_for_write: 16
+    # each for 64 on 4 cores), so allow max(32, n_buckets) concurrent
     # writers: above the cap FileFormatWriter falls back to sorting the
     # rest of the task's rows, the sort this scoping exists to avoid.
     # unionOutputPartitioning (Spark 4.1 default true) lets a Union of
@@ -394,37 +433,85 @@ def parquet_footers(df: DataFrame):
         yield pq.read_metadata(path, filesystem=fs)
 
 
-def may_hold_giants(pages: DataFrame, giant_bytes: int) -> bool:
-    """False only when ``pages`` has input files, all of them parquet, and
-    every row group's ``html`` column chunk is at most ``giant_bytes``
-    uncompressed — then no single html value can be larger, so no giant
-    exists (operators/skew.py). True for an input with no files (a
-    generated frame, a stream micro-batch), a non-parquet file (JSON, zip
-    archives), a file without an ``html`` column, or a store pyarrow
-    cannot open. A False is wrong only when ``html`` is not the files'
-    own column (say, a union with a generated frame), and even then it
-    costs speed, not bytes: unsalted extraction gives the same output.
+class Footprint(NamedTuple):
+    """What an input's parquet footers tell a plan (input_footprint)."""
+    #: False only when no html value can be larger than the giant threshold
+    may_hold_giants: bool
+    #: compressed bytes of the input's parquet files, counted up to the
+    #: caller's ``enough_bytes``; None when there are no footers to read
+    bytes: int | None
 
-    Footers only, read on the driver: no Spark job, and it stops at the
-    first chunk above ``giant_bytes``. Reading every footer of a large
-    table is still far cheaper than what a False answer saves: the giant
-    branch would read the whole ``html`` column a second time."""
+
+def input_footprint(pages: DataFrame, giant_bytes: int,
+                    enough_bytes: int) -> Footprint:
+    """One walk over the parquet footers of ``pages``' input files, read
+    on the driver: file listing and metadata only, no Spark job.
+
+    ``may_hold_giants`` is False only when ``pages`` has input files, all
+    of them parquet, and every row group's ``html`` column chunk is at
+    most ``giant_bytes`` uncompressed — then no single html value can be
+    larger, so no giant exists (operators/skew.py). It is True for a file
+    without an ``html`` column. A False is wrong only when ``html`` is not
+    the files' own column (say, a union with a generated frame), and even
+    then it costs speed, not bytes: unsalted extraction gives the same
+    output.
+
+    ``bytes`` sums the column chunks' compressed sizes; it counts only the
+    input's files, so it too undercounts a union with a generated frame.
+
+    An input with no files (a generated frame, a stream micro-batch), a
+    non-parquet file (JSON, zip archives) or a store pyarrow cannot open
+    gives ``Footprint(True, None)``: nothing is known. The walk stops once
+    a giant is possible and ``bytes`` has reached ``enough_bytes``, so a
+    large table is not read to its last footer for an answer already
+    settled; reading every footer of one is still far cheaper than what a
+    no-giant answer saves (the giant branch would read the whole ``html``
+    column a second time)."""
     import pyarrow as pa
 
-    files = 0
+    files, total, giants = 0, 0, False
     try:
         for md in parquet_footers(pages):
             files += 1
             cols = [md.schema.column(k).path for k in range(md.num_columns)]
-            if "html" not in cols:
-                return True
-            j = cols.index("html")
+            j = cols.index("html") if "html" in cols else None
+            giants = giants or j is None
             for g in range(md.num_row_groups):
-                if md.row_group(g).column(j).total_uncompressed_size > giant_bytes:
-                    return True
+                rg = md.row_group(g)
+                total += sum(rg.column(k).total_compressed_size
+                             for k in range(rg.num_columns))
+                if not giants:
+                    giants = rg.column(j).total_uncompressed_size > giant_bytes
+            if giants and total >= enough_bytes:
+                break
     except (pa.ArrowException, OSError):
-        return True
-    return files == 0
+        return Footprint(True, None)
+    if files == 0:
+        return Footprint(True, None)
+    return Footprint(giants, total)
+
+
+def scan_split_bytes(spark: SparkSession, input_bytes: int) -> int:
+    """The scan split for an input of ``input_bytes``, as Spark's file scan
+    sizes it (FilePartition.maxSplitBytes): the bytes spread over
+    ``spark.sql.files.minPartitionNum`` partitions (default: the
+    leaf-node parallelism, the cores), but no larger than
+    ``spark.sql.files.maxPartitionBytes`` and no smaller than
+    ``spark.sql.files.openCostInBytes``. So an input smaller than cores x
+    maxPartitionBytes gets a split per core. Spark also adds the open cost
+    of every file to the bytes; that is an estimate of a file open, not
+    data, and is left out here, so a small input of many files is not
+    given one split per file. Spark's own parse of each setting, read on
+    the driver."""
+    jspark = spark._jsparkSession
+    conf = jspark.sessionState().conf()
+    open_cost = int(conf.filesOpenCostInBytes())
+    min_parts = conf.filesMinPartitionNum()
+    parts = (int(min_parts.get()) if min_parts.isDefined()
+             else int(jspark.leafNodeDefaultParallelism()))
+    per_core = -(-input_bytes // max(1, parts))  # rounded up: <= parts splits
+    return max(1, min(int(conf.filesMaxPartitionBytes()),
+                      max(open_cost, per_core)))
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:

@@ -31,7 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from paraocr_spark.pipeline import EXTRACTED_COLS, PipelineConfig, _extraction_plan
+from paraocr_spark import pipeline
+from paraocr_spark.pipeline import EXTRACTED_COLS, PipelineConfig
 from paraocr_spark.sources import io as pio
 from paraocr_spark.sources.pages import PAGES_SCHEMA_DDL
 
@@ -55,16 +56,16 @@ def extract_stream(spark: SparkSession, input_path: str, output_path: str,
         # config_fp encodes backend + ignore keywords, so the batch MUST be
         # produced under exactly that config — otherwise resume would treat
         # default-backend rows as done under the custom config
-        out, _ = _extraction_plan(batch_df, cfg, n_buckets=cfg.warc_buckets)
+        plan = pipeline._extraction_plan(batch_df, cfg, write=True)
         # batch_id in the partition value + dynamic partition OVERWRITE
         # = idempotent replay (the retried batch replaces only its own
         # run_id=... directory, never touching other batches')
-        out = out.withColumn("run_id", F.lit(f"{cfg.run_id}-b{batch_id}"))
+        out = plan.df.withColumn("run_id", F.lit(f"{cfg.run_id}-b{batch_id}"))
         pio.write_extracted(out.select(*EXTRACTED_COLS, "config_fp", "run_id",
                                        "_pid", "_doc_bytes", "_wall_s",
                                        "warc_bucket"),
                             output_path, mode="overwrite",
-                            n_buckets=cfg.warc_buckets)
+                            n_buckets=plan.n_buckets)
 
     writer = (
         read_pages_stream(spark, input_path)

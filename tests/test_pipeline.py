@@ -436,8 +436,9 @@ def _executed_write_plan(spark, out: str) -> str:
 
 
 def _bucket_exchanges_per_union_side(plan: str) -> tuple[str, list[int]]:
-    """(the final plan tree above the Union, the number of
-    hashpartitioning(warc_bucket) Exchanges under each Union child)."""
+    """(the final plan tree above the Union, the number of bucket
+    Exchanges — hashpartitioning on the bucket's key, cast(warc_ts as
+    bigint) — under each Union child)."""
     import re
 
     tree = plan.split("\n\n")[0]
@@ -452,7 +453,7 @@ def _bucket_exchanges_per_union_side(plan: str) -> tuple[str, list[int]]:
         sides[-1].append(ln)
     bucket_ex = set(re.findall(
         r"\((\d+)\) Exchange\nInput[^\n]*\nArguments: "
-        r"hashpartitioning\(warc_bucket#\d+, \d+\)", plan))
+        r"hashpartitioning\(cast\(warc_ts#\d+ as bigint\), \d+\)", plan))
     counts = [
         sum(1 for ln in side for nid in re.findall(r"\((\d+)\)", ln)
             if nid in bucket_ex)
@@ -473,6 +474,7 @@ def test_run_and_write_buckets_each_branch_below_the_union(
     m = run_and_write(spark, pages, out, str(tmp_path / "lin"),
                       PipelineConfig(run_id="rb", warc_buckets=8))
     assert m["rows"] == 120
+    assert m["buckets"] == 8  # no footers to size from: the cap exactly
     files = _files_per_bucket_dir(out)
     assert len(files) == 8 and set(files.values()) == {1}, files
     assert all(d.startswith("run_id=rb/warc_bucket=") for d in files)
@@ -508,15 +510,55 @@ def test_run_and_write_one_file_per_bucket_above_32_buckets_per_task(
     assert seen == ["512"]
     files = _files_per_bucket_dir(out)
     assert set(files.values()) == {1}, files
-    # the scenario really happened: buckets hashed onto the write's tasks
-    # exactly as its Exchange does (Murmur3 pmod P)
-    p = min(512, spark.sparkContext.defaultParallelism)
+    # the scenario really happened: bucket b sits in the write's task
+    # b mod P, exactly as its Exchange places it (sources.io.bucket_for_write)
+    p = pio.write_tasks(512, spark.sparkContext.defaultParallelism)
     per_task = (
         pio.read_table(spark, out).select("warc_bucket").distinct()
-        .groupBy(F.pmod(F.hash("warc_bucket"), F.lit(p)).alias("task"))
+        .groupBy(F.pmod("warc_bucket", F.lit(p)).alias("task"))
         .count().agg(F.max("count")).first()[0]
     )
     assert per_task > 32, per_task
+
+
+@pytest.mark.parametrize("n_buckets", [1, 4, 5, 8, 12, 64])
+def test_bucket_for_write_spreads_buckets_evenly_over_its_tasks(spark,
+                                                                n_buckets):
+    """Bucket b lands in write task b mod P, and P divides n_buckets: every
+    bucket in one task, every task holding n_buckets / P buckets. Hashing
+    the bucket number itself put 4 buckets on 2 of 4 tasks (3 + 1)."""
+    from collections import Counter
+
+    cores = spark.sparkContext.defaultParallelism
+    p = pio.write_tasks(n_buckets, cores)
+    assert n_buckets % p == 0 and p <= cores
+    ts = spark.range(4000).select(
+        F.timestamp_seconds(F.col("id") * 3601).alias("warc_ts"))
+    df = pio.bucket_for_write(ts, n_buckets)
+    assert df.rdd.getNumPartitions() == p
+    placed = df.select(F.spark_partition_id().alias("task"),
+                       "warc_bucket").distinct().collect()
+    assert sorted(r.warc_bucket for r in placed) == list(range(n_buckets))
+    assert all(r.task == r.warc_bucket % p for r in placed)
+    assert set(Counter(r.task for r in placed).values()) == {n_buckets // p}
+
+
+def test_write_bucket_count_is_a_multiple_of_the_cores_above_them(spark):
+    """A count above the cores is rounded down to a multiple of them, so
+    the write's tasks hold equal bucket counts; at or below the cores, and
+    for a cap the cores divide, the count is kept. No Spark job."""
+    from paraocr_spark.pipeline import write_bucket_count
+
+    cores = spark.sparkContext.defaultParallelism
+    unknown = pio.Footprint(True, None)
+    assert write_bucket_count(spark, unknown, 8 * cores) == 8 * cores
+    assert write_bucket_count(spark, unknown, cores + 1) == cores
+    assert write_bucket_count(spark, unknown, cores - 1) == cores - 1
+    split = int(spark._jsparkSession.sessionState().conf()
+                .filesMaxPartitionBytes())
+    big = pio.Footprint(False, (2 * cores + 1) * split)
+    assert write_bucket_count(spark, big, 64) == 2 * cores
+    assert write_bucket_count(spark, big, cores + 1) == cores
 
 
 def test_bucketed_write_layout_holds_with_union_partitioning_off(
@@ -541,6 +583,169 @@ def test_bucketed_write_layout_holds_with_union_partitioning_off(
         assert per_side == [1, 1] and "Exchange" not in above
     finally:
         spark.conf.set(key, prev)
+
+
+def _balanced(n: int, cores: int) -> int:
+    """write_bucket_count's last step: a count above the cores becomes a
+    multiple of them."""
+    return n if n <= cores else n - n % cores
+
+
+def _compressed_bytes(path) -> int:
+    """The compressed column-chunk bytes of a parquet directory's files."""
+    import pyarrow.parquet as pq
+
+    total = 0
+    for f in pathlib.Path(path).glob("*.parquet"):
+        md = pq.read_metadata(f)
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            total += sum(rg.column(k).total_compressed_size
+                         for k in range(rg.num_columns))
+    return total
+
+
+@pytest.fixture()
+def pages_parquet(spark, tmp_path):
+    """120 fixture pages (three layout giants > 64 KB) as parquet files."""
+    path = str(tmp_path / "pages")
+    pages_df(spark, 120, 4).write.parquet(path)
+    return path
+
+
+def test_small_parquet_input_writes_one_bucket(spark, tmp_path, pages_parquet):
+    """Input far below one scan split: the write gets ONE bucket, so the
+    invocation leaves exactly one file under its run_id directory."""
+    out = str(tmp_path / "extracted")
+    m = run_and_write(spark, spark.read.parquet(pages_parquet), out,
+                      str(tmp_path / "lin"), PipelineConfig(run_id="one"))
+    assert m["rows"] == 120
+    assert m["buckets"] == 1
+    assert _files_per_bucket_dir(out) == {"run_id=one/warc_bucket=0": 1}
+
+
+def test_bucket_count_is_input_splits_capped_by_warc_buckets(
+        spark, tmp_path, pages_parquet, split_below_giants):
+    """Under a 64 KB split the same files span ceil(bytes / split) splits,
+    and that is the bucket count (above the cores, rounded down to a
+    multiple of them) — one file per bucket — unless an explicit
+    warc_buckets caps it lower."""
+    import math
+
+    from conftest import SPLIT_BELOW_GIANTS
+
+    want = _balanced(
+        math.ceil(_compressed_bytes(pages_parquet) / SPLIT_BELOW_GIANTS),
+        spark.sparkContext.defaultParallelism)
+    assert 3 < want < 64, want  # the rule, not a cap, decides below
+    for cap, expect in ((64, want), (3, 3)):
+        out = str(tmp_path / f"extracted_{cap}")
+        m = run_and_write(spark, spark.read.parquet(pages_parquet), out,
+                          str(tmp_path / f"lin_{cap}"),
+                          PipelineConfig(run_id="r", warc_buckets=cap))
+        assert m["rows"] == 120
+        assert m["buckets"] == expect
+        files = _files_per_bucket_dir(out)
+        assert set(files.values()) == {1}, files
+        assert {d.split("=")[-1] for d in files} <= {
+            str(b) for b in range(expect)}
+        assert len(files) > expect // 2  # the buckets really were used
+
+
+def test_bucket_count_keeps_the_scan_parallelism(spark, tmp_path,
+                                                 pages_parquet):
+    """An input smaller than cores x maxPartitionBytes is scanned in
+    smaller splits, about one per core (Spark's FilePartition.maxSplitBytes):
+    the bucket count follows that split, not maxPartitionBytes, so the
+    write runs on as many tasks as the scan. A 1 KB open cost makes the
+    fixture files span every core's split at the default 128 MB
+    maxPartitionBytes, which alone would give 1 bucket."""
+    key = "spark.sql.files.openCostInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        cores = spark.sparkContext.defaultParallelism
+        pages = spark.read.parquet(pages_parquet)
+        assert pages.rdd.getNumPartitions() >= cores
+        out = str(tmp_path / "extracted")
+        m = run_and_write(spark, pages, out, str(tmp_path / "lin"),
+                          PipelineConfig(run_id="mid"))
+    finally:
+        spark.conf.set(key, prev)
+    assert m["rows"] == 120
+    assert m["buckets"] == cores
+    files = _files_per_bucket_dir(out)
+    assert set(files.values()) == {1}, files
+    assert len(files) > cores // 2
+
+
+def test_every_front_decides_the_same_bucket_count(
+        spark, tmp_path, pages_parquet, split_below_giants, monkeypatch):
+    """The count is decided in _extraction_plan from the input: run_extraction,
+    the shard-cache route of run_and_write and the extract_pages route all
+    build the same one, and the written layout follows it."""
+    import math
+
+    from conftest import SPLIT_BELOW_GIANTS
+    from paraocr_spark import pipeline
+
+    seen = []
+    real = pipeline._extraction_plan
+
+    def spy(*a, **kw):
+        plan = real(*a, **kw)
+        seen.append(plan.n_buckets)
+        return plan
+
+    monkeypatch.setattr(pipeline, "_extraction_plan", spy)
+    want = _balanced(
+        math.ceil(_compressed_bytes(pages_parquet) / SPLIT_BELOW_GIANTS),
+        spark.sparkContext.defaultParallelism)
+    pages = spark.read.parquet(pages_parquet)
+    run_extraction(spark, pages, PipelineConfig())
+    metrics = []
+    for front, cache in (("cached", str(tmp_path / "cache")), ("plain", None)):
+        out = str(tmp_path / front)
+        metrics.append(run_and_write(
+            spark, pages, out, str(tmp_path / f"lin_{front}"),
+            PipelineConfig(run_id=front, shard_cache_path=cache)))
+        files = _files_per_bucket_dir(out)
+        assert set(files.values()) == {1}, files
+        assert len(files) <= want
+    assert seen == [want] * 3
+    assert [m["buckets"] for m in metrics] == [want] * 2
+    assert spark.read.parquet(str(tmp_path / "cache")).count() > 0
+
+
+def test_iceberg_probe_runs_once_per_spark_context(spark, tmp_path,
+                                                   monkeypatch):
+    """Two write_extracted calls and a read_table ask the JVM once: the
+    answer is kept on the SparkContext."""
+    import types
+
+    lookups = []
+    jvm = spark._jvm
+
+    def counting(name):
+        lookups.append(name)
+        return jvm.java.lang.Class.forName(name)
+
+    class CountingJvm:
+        """The session's JVM view with Class.forName counted."""
+        java = types.SimpleNamespace(lang=types.SimpleNamespace(
+            Class=types.SimpleNamespace(forName=counting)))
+
+        def __getattr__(self, name):
+            return getattr(jvm, name)
+
+    monkeypatch.delattr(spark.sparkContext, "_paraocr_iceberg", raising=False)
+    monkeypatch.setattr(spark, "_jvm", CountingJvm())
+    df = pages_df(spark, 8, 2).select("url", "warc_ts", "lang")
+    out = str(tmp_path / "t")
+    pio.write_extracted(df, out, n_buckets=2)
+    pio.write_extracted(df, out, n_buckets=2)
+    assert pio.read_table(spark, out).count() == 16
+    assert lookups == ["org.apache.iceberg.spark.SparkCatalog"]
 
 
 def test_three_fronts_build_the_same_extraction(spark, tmp_path,

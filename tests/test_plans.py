@@ -53,6 +53,27 @@ def test_resume_anti_join_prunes_and_pushes(spark, docs):
     assert "BroadcastHashJoin" in p and "LeftAnti" in p
 
 
+def test_resume_anti_join_needs_no_dedup_of_done_keys(spark):
+    """A done side that repeats a url (say, a url written by two
+    invocations) removes the same pages as a deduplicated one, and the
+    optimized plan aggregates nothing on the done side: the left-anti join
+    alone gives the rows, with no extra shuffle or 1-task stage."""
+    from paraocr_spark.operators.resume import filter_unprocessed
+
+    pages = spark.range(0, 40, 1, 4).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+        F.col("id"))
+    once = pages.where(F.col("id") % 3 == 0).select("url")
+    twice = once.unionAll(once).unionAll(
+        once.where(F.col("url") == "u3"))
+    out = filter_unprocessed(pages, twice)
+    rows = sorted(r.id for r in out.collect())
+    assert rows == [i for i in range(40) if i % 3]
+    assert rows == sorted(r.id for r in filter_unprocessed(pages, once).collect())
+    optimized = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Aggregate" not in optimized, optimized
+
+
 def test_ann_topk_two_phase(spark):
     """ANN brute force: queries broadcast as numpy, candidates matmul'd per
     batch with LOCAL top-k — the only Exchange is the tiny final window

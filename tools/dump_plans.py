@@ -48,7 +48,7 @@ COMMENT = {
     "extraction pipeline (no giant possible)": (
         "What run_extraction builds over parquet pages whose footers show "
         "every html column chunk within one scan split "
-        "(sources.io.may_hold_giants, no Spark job): one scan, one "
+        "(sources.io.input_footprint, no Spark job): one scan, one "
         "MapInPandas, no giant filter and no second scan or anti-join. "
         "The normal kernel extracts every doc whole, the same bytes the "
         "salted path gives."
@@ -56,8 +56,10 @@ COMMENT = {
     "extraction pipeline (salted, bucketed for the write)": (
         "The plan run_and_write, the shard-cache path and the streaming "
         "write execute: each branch gets its own "
-        "hashpartitioning(warc_bucket, P) Exchange BELOW the Union, with "
-        "P = min(n_buckets, defaultParallelism) on both sides, and "
+        "hashpartitioning(cast(warc_ts as bigint), P) Exchange BELOW the "
+        "Union: the bucket's own key, so bucket b is partition b mod P. "
+        "P = min(n_buckets, defaultParallelism), a divisor of n_buckets, "
+        "on both sides, and "
         "write_extracted adds none above it. With "
         "spark.sql.unionOutputPartitioning (scoped on by the write) the "
         "Union zips partition i of both sides, so each bucket is one task "
