@@ -87,7 +87,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--resume", action="store_true",
                    help="anti-join against existing --output before running")
     p.add_argument("--run-id", default="run0")
-    p.add_argument("--no-salt", action="store_true")
     p.add_argument("--backend", default="default",
                    help="extractor backend: registry name or dotted "
                    "module.Class path (the --ocr-backend analog, "
@@ -146,6 +145,8 @@ def main(argv: list[str] | None = None) -> int:
 
         done = None
         if args.resume:
+            # restore a table a compaction crashed mid-swap left at __old
+            pio.recover_swap(args.output)
             try:
                 done = pio.read_table(spark, args.output)
             except Exception:
@@ -164,7 +165,7 @@ def main(argv: list[str] | None = None) -> int:
             pages.select(F.sum(F.octet_length("html"))).collect()
 
         cfg = PipelineConfig(
-            run_id=args.run_id, salt=not args.no_salt,
+            run_id=args.run_id,
             backend=args.backend,
             backend_kwargs=json.loads(args.backend_kwargs) if args.backend_kwargs else {},
             ignore_url_keywords=(

@@ -47,6 +47,7 @@ from paraocr_spark.core.reference import METHOD_ERROR, METHOD_LAYOUT
 from paraocr_spark.core.features import (FEATURE_CAP, FEATURES_DDL,
                                           compute_features_batch)
 from paraocr_spark.operators.lineage import report, tally
+from paraocr_spark.operators.shard_cache import ShardCache, extract_shards
 
 EXTRACTED_SCHEMA_DDL = (
     "url string, warc_ts timestamp, lang string, extracted_text string, "
@@ -301,7 +302,8 @@ def extract_pages(pages: DataFrame, *, salt: bool = True,
                   backend: str = "default",
                   backend_kwargs: dict | None = None,
                   lineage_acc=None,
-                  n_buckets: int | None = None) -> DataFrame:
+                  n_buckets: int | None = None,
+                  shard_cache: ShardCache | None = None) -> DataFrame:
     """Full extraction: split -> kernel -> shard reassembly -> union.
 
     Returns EXTRACTED_SCHEMA plus metric cols (_pid, _doc_bytes, _wall_s);
@@ -326,12 +328,15 @@ def extract_pages(pages: DataFrame, *, salt: bool = True,
     The normal kernel runs with its input's partitioning: no Exchange, the
     shuffle-free kernel plan. A coarse input is fanned out where it is
     read (sources.io.read_table, read_pages_zip), never here, so building
-    this plan runs no Spark job.
+    this plan runs no Spark job (the shard cache's append aside).
 
     ``n_buckets`` (writers only) buckets each branch for
     sources.io.write_extracted BELOW the union — see union_branches.
     ``lineage_acc`` goes to the two tasks that finish written rows: the
     normal kernel and the giant reassembly, never the shard kernel.
+    ``shard_cache`` takes the giant branch's shards through that cache
+    (operators/shard_cache.extract_shards, EAGER: a Spark job while this
+    plan is built); with no giant branch it is neither read nor written.
     """
     from paraocr_spark.operators.skew import salt_pages
 
@@ -344,10 +349,14 @@ def extract_pages(pages: DataFrame, *, salt: bool = True,
                        lineage_acc).drop("shard_id", "n_shards")
     ]
     if giant_pages is not None:
-        branches.append(_merge_shards_relational(
-            extract_kernel(salt_pages(giant_pages), backend, backend_kwargs),
-            lineage_acc,
-        ))
+        shards = salt_pages(giant_pages)
+        if shard_cache is None:
+            shard_out = extract_kernel(shards, backend, backend_kwargs)
+        else:
+            shard_out = extract_shards(
+                shard_cache, shards, giant_pages,
+                lambda todo: extract_kernel(todo, backend, backend_kwargs))
+        branches.append(_merge_shards_relational(shard_out, lineage_acc))
     return union_branches(branches, n_buckets)
 
 

@@ -32,6 +32,7 @@ from paraocr_spark.operators.lineage import (
     lineage_rows_from_acc,
 )
 from paraocr_spark.operators.resume import filter_unprocessed
+from paraocr_spark.operators.shard_cache import ShardCache
 from paraocr_spark.operators.skew import giant_bytes
 from paraocr_spark.sources import io as pio
 
@@ -49,10 +50,7 @@ class PipelineConfig:
     builds its plan from this config in one place (_extraction_plan), so
     each field means the same thing on all three.
 
-    ``salt`` splits giant layout docs — larger than one scan split,
-    ``spark.sql.files.maxPartitionBytes`` — into shards
-    (operators/skew.py); a run whose input footers rule a giant out builds
-    no giant branch either way (_extraction_plan).
+    Salting is not a knob: the input's footers decide it (_extraction_plan).
     ``backend`` selects the extractor strategy by registry name or dotted
     module.Class path (backends.py) — the --ocr-backend analog
     (cli.py:101-123). It feeds the fingerprint, so swapping backends
@@ -65,15 +63,14 @@ class PipelineConfig:
     out to the core count when the source is coarser than that.
     """
     run_id: str = "run0"
-    salt: bool = True
     backend: str = "default"
     backend_kwargs: dict = field(default_factory=dict)
     ignore_url_keywords: list = field(default_factory=list)
     #: optional parquet path for SHARD-level partial-result reuse on giant
     #: docs — the analog of the reference's per-page txt cache
     #: (parallel.py:431-448): a killed run's finished shards are never
-    #: re-extracted on resume. Used only when the run salts: with ``salt``
-    #: and an input that may hold a doc larger than a scan split (no shards
+    #: re-extracted on resume (operators/shard_cache.py). Used only when
+    #: the input may hold a doc larger than a scan split (no shards
     #: otherwise, and the cache is neither read nor written)
     shard_cache_path: str | None = None
     #: the cap on an invocation's bucket(warc_ts) count (Iceberg bucket(N)
@@ -93,7 +90,9 @@ class PipelineConfig:
     def fingerprint(self) -> str:
         return config_fingerprint(
             {
-                "salt": self.salt,
+                # constant (the input decides salting), kept so existing
+                # done tables and shard caches keep their fingerprint
+                "salt": True,
                 "version": 1,
                 "backend": self.backend,
                 "backend_kwargs": self.backend_kwargs,
@@ -115,145 +114,6 @@ def ignore_keyword_filter(pages: DataFrame, keywords: list) -> DataFrame:
     for k in keywords:
         cond = cond | low.contains(k.lower())
     return pages.where(~cond)
-
-
-def extract_with_shard_cache(
-    spark: SparkSession, todo: DataFrame, cfg: PipelineConfig,
-    n_buckets: int | None = None, lineage_acc=None,
-) -> DataFrame:
-    """Extraction with SHARD-granular partial-result reuse for giant docs.
-
-    The reference resumes at page granularity via its txt cache
-    (parallel.py:431-448): pages finished before a crash are never redone.
-    Spark's parquet job commit is all-or-nothing per WRITE, so whole-doc
-    resume (the url anti-join) loses every finished shard of an interrupted
-    run. This path closes that gap for the expensive rows: giant-doc shards
-    are extracted first and appended to a cache table keyed by
-    (url, shard_id, config_fp); reassembly always reads from the cache, and
-    a resumed run anti-joins against it so only MISSING shards pay the
-    kernel. Normal docs keep whole-doc granularity — they are small, and a
-    per-doc cache write for 99% of the corpus would double the write volume.
-
-    NOTE eager: appending fresh shards to the cache is an ACTION (runs the
-    giant kernel when called); the returned DataFrame is lazy only in the
-    normal-doc branch + reassembly. Reused shards keep the _pid/_doc_bytes/
-    _wall_s of the run that extracted them, and the merged giant row sums
-    them, so a giant whose shards were all cached still reports its
-    original bytes and kernel seconds in THIS invocation's lineage — the
-    lineage counts the rows an invocation wrote, not the kernel work it did.
-
-    ``n_buckets`` (writers only) buckets both branches for
-    sources.io.write_extracted below their union, and ``lineage_acc`` is
-    passed to the normal kernel and the reassembly, as in extract_pages.
-    """
-    from paraocr_spark.operators.extract import (
-        _merge_shards_relational,
-        extract_kernel,
-        split_normal_giants,
-        union_branches,
-    )
-    from paraocr_spark.operators.skew import salt_pages
-
-    import os
-
-    # recover a gc_shard_cache swap that crashed between its two renames:
-    # the __old backup IS the pre-GC cache — restore it rather than
-    # silently re-extracting every giant shard
-    _backup = cfg.shard_cache_path.rstrip("/") + "__old"
-    if os.path.isdir(_backup) and not os.path.isdir(cfg.shard_cache_path):
-        os.rename(_backup, cfg.shard_cache_path)
-
-    normal, giant_pages = split_normal_giants(todo)
-    shards = salt_pages(giant_pages)
-    cache: DataFrame | None = None
-    try:
-        cache = spark.read.parquet(cfg.shard_cache_path)
-    except Exception:
-        cache = None  # first run: no cache yet
-    shards_todo = shards
-    if cache is not None:
-        done_keys = (
-            cache.where(F.col("config_fp") == cfg.fingerprint)
-            .select("url", "shard_id")
-        )
-        shards_todo = shards.join(done_keys, ["url", "shard_id"], "left_anti")
-    # skip the append entirely on a fully-cached resume: the emptiness probe
-    # runs only the (kernel-free) salt + anti-join plan, while an
-    # unconditional append would run a write job per resume and accumulate
-    # zero-row files the compactor never covers
-    if cache is None or not shards_todo.isEmpty():
-        fresh = extract_kernel(
-            shards_todo, cfg.backend, cfg.backend_kwargs
-        ).withColumn("config_fp", F.lit(cfg.fingerprint))
-        fresh.write.mode("append").parquet(cfg.shard_cache_path)
-
-    relevant = (
-        spark.read.parquet(cfg.shard_cache_path)
-        .where(F.col("config_fp") == cfg.fingerprint)
-        # this run's giants only (the cache may hold other runs' urls), and
-        # one row per shard even if an at-least-once append duplicated any
-        .join(giant_pages.select("url").distinct(), "url", "left_semi")
-        .dropDuplicates(["url", "shard_id"])
-        .drop("config_fp")
-    )
-    singles = extract_kernel(normal, cfg.backend, cfg.backend_kwargs,
-                             lineage_acc).drop("shard_id", "n_shards")
-    return union_branches(
-        [singles, _merge_shards_relational(relevant, lineage_acc)], n_buckets
-    )
-
-
-def gc_shard_cache(spark: SparkSession, cache_path: str, keep_fp: str,
-                   target_file_mb: int = 256) -> dict:
-    """Shard-cache maintenance: drop stale config_fp generations (rows whose
-    fingerprint no longer matches any live config) and compact the small
-    files that incremental appends accumulate. Staging-dir + rename swap,
-    same object-store caveat as sources/io.compact_table.
-
-    Crash safety: a prior run may have died between the two renames (cache
-    gone, data stranded at ``__old``) or left a stale ``__gc``/``__old``
-    dir. Both are reconciled up front: a leftover backup with no live cache
-    is renamed back (nothing is ever lost — the backup IS the pre-GC
-    cache), and stale staging/backup dirs are removed so this run's
-    renames cannot collide with them. MUST NOT run concurrently with
-    extract_with_shard_cache — the swap is not snapshot-isolated (use the
-    Iceberg branch for that)."""
-    import math
-    import os
-    import pathlib
-    import shutil
-
-    staging = cache_path.rstrip("/") + "__gc"
-    backup = cache_path.rstrip("/") + "__old"
-    if os.path.isdir(backup) and not os.path.isdir(cache_path):
-        os.rename(backup, cache_path)  # crashed mid-swap: restore backup
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(backup, ignore_errors=True)
-
-    try:
-        df = spark.read.parquet(cache_path)
-    except Exception:
-        return {"files_before": 0, "files_after": 0, "rows_kept": 0}
-    files_before = len(list(pathlib.Path(cache_path).rglob("*.parquet")))
-    keep = (
-        df.where(F.col("config_fp") == keep_fp)
-        .dropDuplicates(["url", "shard_id"])
-    )
-    total = sum(
-        f.stat().st_size for f in pathlib.Path(cache_path).rglob("*.parquet")
-    )
-    n_files = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-    keep.repartition(n_files).write.mode("overwrite").parquet(staging)
-    os.rename(cache_path, backup)
-    os.rename(staging, cache_path)
-    shutil.rmtree(backup, ignore_errors=True)
-    kept = spark.read.parquet(cache_path)
-    files_after = len(list(pathlib.Path(cache_path).rglob("*.parquet")))
-    return {
-        "files_before": files_before,
-        "files_after": files_after,
-        "rows_kept": kept.count(),
-    }
 
 
 def write_bucket_count(spark: SparkSession, foot: pio.Footprint,
@@ -298,12 +158,12 @@ def _extraction_plan(
 
     Two facts are decided here, once, from one walk over the input
     ``pages``' parquet footers (sources.io.input_footprint):
-    - whether to salt: only with ``cfg.salt`` and only when the footers
-      cannot rule out a layout doc larger than one scan split. Salted,
-      giant shards go through the shard cache whenever ``cfg`` names one
-      (extract_with_shard_cache — eager: it runs the giant kernel), else
-      through extract_pages; unsalted, every row takes extract_pages'
-      normal kernel, which gives the same bytes;
+    - whether to salt: only when the footers cannot rule out a layout doc
+      larger than one scan split. Salted, extract_pages' giant branch
+      takes its shards through the shard cache whenever ``cfg`` names one
+      (operators/shard_cache.py: eager, it runs the shard kernel while the
+      plan is built); unsalted, every row takes the normal kernel, which
+      gives the same bytes, and the cache is neither read nor written;
     - the write's bucket count, ``n_buckets`` (write_bucket_count, capped
       by ``cfg.warc_buckets``). With ``write`` each branch is bucketed by
       it below the union (union_branches), and the fronts hand the same
@@ -311,7 +171,7 @@ def _extraction_plan(
 
     Returns an ExtractionPlan: with ``lineage``, its acc is a
     LineageAccParam accumulator that the normal kernel and the giant
-    reassembly fill during the caller's action, on either route, counting
+    reassembly fill during the caller's action, cache or none, counting
     each written row once under its _pid (operators/lineage.py); None
     otherwise.
 
@@ -325,22 +185,20 @@ def _extraction_plan(
     # no split is larger than maxPartitionBytes, so once the walk has
     # counted cap x that many bytes the count is the cap
     foot = pio.input_footprint(pages, split, cfg.warc_buckets * split)
-    # with no doc larger than a scan split there is nothing to salt, and
-    # the giant branch would only add a second source scan and anti-join
-    # (operators/skew.py)
-    salt = cfg.salt and foot.may_hold_giants
     n_buckets = write_bucket_count(spark, foot, cfg.warc_buckets)
-    bucket_by = n_buckets if write else None
     pages = ignore_keyword_filter(pages, cfg.ignore_url_keywords)
     todo = filter_unprocessed(pages, done, cfg.fingerprint)
     acc = (spark.sparkContext.accumulator({}, LineageAccParam())
            if lineage else None)
-    if cfg.shard_cache_path and salt:
-        out = extract_with_shard_cache(spark, todo, cfg, bucket_by, acc)
-    else:
-        out = extract_pages(todo, salt=salt, backend=cfg.backend,
-                            backend_kwargs=cfg.backend_kwargs,
-                            lineage_acc=acc, n_buckets=bucket_by)
+    cache = (ShardCache(cfg.shard_cache_path, cfg.fingerprint)
+             if cfg.shard_cache_path else None)
+    # with no doc larger than a scan split there is nothing to salt, and
+    # the giant branch would only add a second source scan and anti-join
+    # (operators/skew.py)
+    out = extract_pages(todo, salt=foot.may_hold_giants, backend=cfg.backend,
+                        backend_kwargs=cfg.backend_kwargs, lineage_acc=acc,
+                        n_buckets=n_buckets if write else None,
+                        shard_cache=cache)
     return ExtractionPlan(out.withColumn("config_fp", F.lit(cfg.fingerprint)),
                           acc, n_buckets)
 
@@ -352,7 +210,7 @@ def run_extraction(
     done: DataFrame | None = None,
 ) -> DataFrame:
     """Returns the extracted DataFrame — lazily, caller writes/acts (except
-    the shard-cache route's giant-shard append, which is eager). Lineage
+    the shard cache's append of fresh giant shards, which is eager). Lineage
     belongs to a write: run_and_write reports it.
 
     ``done`` is the prior output for resume (None = fresh run).
@@ -378,15 +236,15 @@ def run_and_write(
     # (the natural way to resume, and the default 'run0') must not roll
     # prior appends' rows into this invocation's lineage/metrics
     invocation_id = f"{cfg.run_id}-{uuid.uuid4().hex[:12]}"
-    # ONE kernel pass, ONE Spark job on both routes: the lineage rollup
+    # ONE kernel pass, ONE Spark job, cache or none: the lineage rollup
     # rides the write action itself via a replace-merge accumulator (the
     # normal kernel and the giant reassembly each send one update per task,
     # every written row counted once under its _pid, idempotent under
     # retries — operators/lineage.py), and the resulting handful of rows is
     # appended to the lineage table from the driver with pyarrow. A
     # read-back scan of the written table would cost a second job per run.
-    t0 = time.perf_counter()  # before plan build: the shard-cache path is eager
-    # both routes bucket each branch below the union
+    t0 = time.perf_counter()  # before plan build: the shard cache is eager
+    # each branch is bucketed below the union
     # (operators/extract.union_branches): write_extracted adds no exchange
     plan = _extraction_plan(pages, cfg, done, write=True, lineage=True)
     out = (

@@ -9,6 +9,10 @@ natively (they replace the reference's manifest cache, parallel.py:85-96).
 
 from __future__ import annotations
 
+import math
+import os
+import pathlib
+import shutil
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -178,8 +182,6 @@ def _check_partition_layout(path: str, outer_col: str) -> None:
     level breaks Spark partition discovery for every subsequent read
     (including --resume of that same table). Filesystem paths only — the
     Iceberg branch evolves partition specs natively."""
-    import pathlib
-
     p = pathlib.Path(path)
     if not p.is_dir():
         return
@@ -237,8 +239,6 @@ def write_lineage_rows(rows: list, path: str) -> None:
           schema.names} for r in rows],
         schema=schema,
     )
-    import os
-
     fname = f"part-{uuid.uuid4().hex}.snappy.parquet"
     if "://" in path:  # remote URI: resolve the scheme's filesystem
         from pyarrow import fs as pafs
@@ -256,6 +256,36 @@ def write_lineage_rows(rows: list, path: str) -> None:
     )
 
 
+#: where swap_in parks the live table between its two renames
+SWAP_BACKUP = "__old"
+
+
+def recover_swap(path: str, staging: str | None = None) -> None:
+    """Reconcile what a crashed swap_in left beside ``path``: a crash
+    between its renames left the table at ``path + SWAP_BACKUP`` and none
+    at ``path``, so rename it back. With ``staging`` (a rewrite about to
+    swap), also remove a stale staging dir and a stale backup beside a
+    live table, so the rewrite's renames cannot collide with them."""
+    backup = path.rstrip("/") + SWAP_BACKUP
+    if os.path.isdir(backup) and not os.path.isdir(path):
+        os.rename(backup, path)
+    if staging is not None:
+        shutil.rmtree(staging, ignore_errors=True)
+        shutil.rmtree(backup, ignore_errors=True)
+
+
+def swap_in(staging: str, path: str) -> None:
+    """Replace the table at ``path`` with ``staging``: park it at
+    ``path + SWAP_BACKUP``, rename staging into place, drop the backup.
+    os.rename is atomic on POSIX filesystems only; object stores have no
+    rename, so a real deployment uses the Iceberg branch's
+    snapshot-isolated rewrite_data_files instead."""
+    backup = path.rstrip("/") + SWAP_BACKUP
+    os.rename(path, backup)
+    os.rename(staging, path)
+    shutil.rmtree(backup, ignore_errors=True)
+
+
 def compact_table(spark: SparkSession, path: str,
                   target_file_mb: int = 256) -> dict:
     """Small-files compaction for the extracted table (maintenance op).
@@ -264,34 +294,23 @@ def compact_table(spark: SparkSession, path: str,
     small parquet files; at 100 TB the scan cost is dominated by file-open
     overhead. Rewrite each warc_bucket partition into ~target_file_mb files
     — the parquet stand-in for Iceberg's rewrite_data_files compaction.
-    Writes to a staging dir then swaps, so readers never see a half state.
-
-    CAVEAT: the swap uses os.rename, which is atomic on POSIX filesystems
-    but does NOT exist on object stores (S3/GCS have no rename; "renames"
-    are copy+delete and non-atomic). On a real deployment use the Iceberg
-    branch (snapshot-isolated rewrite_data_files) — this fallback is only
-    for filesystem-backed tables like this sandbox.
+    Writes to a staging dir then swaps (swap_in), so readers never see a
+    half state, and first recovers what a crashed compaction left
+    (recover_swap).
     """
-    import math
-    import os
-    import shutil
-
+    staging = path.rstrip("/") + "__compacting"
+    recover_swap(path, staging)
     df = spark.read.parquet(path)
     total_bytes = sum(
-        f.stat().st_size
-        for f in __import__("pathlib").Path(path).rglob("*.parquet")
+        f.stat().st_size for f in pathlib.Path(path).rglob("*.parquet")
     )
     n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
-    staging = path.rstrip("/") + "__compacting"
     parts = (["run_id"] if "run_id" in df.columns else []) + ["warc_bucket"]
     (
         df.repartition(n_files, F.col("warc_bucket"))
         .write.mode("overwrite").partitionBy(*parts).parquet(staging)
     )
-    backup = path.rstrip("/") + "__old"
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup, ignore_errors=True)
+    swap_in(staging, path)
     return {"total_bytes": total_bytes, "target_files": n_files}
 
 

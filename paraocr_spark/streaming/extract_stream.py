@@ -7,7 +7,7 @@ extracts new files as they land:
 
   * ``extract_stream`` uses **foreachBatch**, so every micro-batch runs the
     exact same plan as the batch pipeline (pipeline._extraction_plan:
-    backend preflight, keyword filter, salting or the shard cache, kernel,
+    backend preflight, keyword filter, salting and the shard cache, kernel,
     reassembly, bucketed write) — one code path, tested once. Each row
     keeps its metric columns (_pid, _doc_bytes, _wall_s); no lineage table
     is written, but a groupBy(_pid) over a batch's rows gives exactly the

@@ -49,7 +49,7 @@ def test_backend_change_invalidates_config_fp(custom_backend):
 def test_pipeline_runs_custom_backend(spark, custom_backend):
     extracted = run_extraction(
         spark, pages_df(spark, 40, 2),
-        PipelineConfig(run_id="plug", salt=False, backend=custom_backend),
+        PipelineConfig(run_id="plug", backend=custom_backend),
     )
     got = extracted.collect()
     assert len(got) == 40
@@ -68,8 +68,7 @@ def test_ignore_keyword_filter(spark):
     # engine-level knob: extraction sees only the filtered rows
     extracted = run_extraction(
         spark, pages,
-        PipelineConfig(run_id="ign", salt=False,
-                       ignore_url_keywords=["site1.example"]),
+        PipelineConfig(run_id="ign", ignore_url_keywords=["site1.example"]),
     )
     out_urls = [r.url for r in extracted.select("url").collect()]
     assert out_urls and all("site1.example" not in u for u in out_urls)

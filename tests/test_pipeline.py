@@ -149,6 +149,39 @@ def test_compaction_preserves_rows(spark, tmp_path):
     assert after_files <= stats["target_files"] * 64  # bounded by buckets
 
 
+@pytest.mark.parametrize("leftover", ["crash_between_renames",
+                                      "stale_backup_beside_table"])
+def test_compaction_recovers_a_crashed_swap(spark, tmp_path, leftover):
+    """A compaction that crashed between its two renames left the table
+    at __old and none in place; one that crashed after the swap, before
+    its cleanup, left a stale __old beside the live table. The next
+    compaction restores the first and clears the second, keeping every
+    row and leaving no staging or backup dir behind."""
+    import os
+    import shutil
+
+    out = str(tmp_path / "t")
+    run_and_write(spark, pages_df(spark, 40, 4), out, str(tmp_path / "lin"),
+                  PipelineConfig(run_id="c"))
+    rows = pio.read_table(spark, out).count()
+    backup = out + "__old"
+    if leftover == "crash_between_renames":
+        os.rename(out, backup)
+    else:
+        shutil.copytree(out, backup)
+    pio.compact_table(spark, out)
+    assert pio.read_table(spark, out).count() == rows
+    assert not os.path.exists(backup)
+    assert not os.path.exists(out + "__compacting")
+
+
+def test_default_fingerprint_is_pinned():
+    """Every existing done table and shard cache is keyed by this value: a
+    config field deleted or renamed must not change it."""
+    assert (PipelineConfig().fingerprint
+            == "e6094ebc2996056c7f3e544ee62c362981dc5dd0")
+
+
 def test_config_fingerprint_invalidates_resume(spark, tmp_path):
     """A changed extraction config must reprocess everything even when urls
     match — the analog of the reference's cache_version bump
@@ -462,17 +495,22 @@ def _bucket_exchanges_per_union_side(plan: str) -> tuple[str, list[int]]:
     return "\n".join(current[:u]), counts
 
 
+@pytest.mark.parametrize("cached", [False, True],
+                         ids=["no_cache", "shard_cache"])
 def test_run_and_write_buckets_each_branch_below_the_union(
-        spark, tmp_path, split_below_giants):
+        spark, tmp_path, split_below_giants, cached):
     """The salted extract's two branches (normal kernel, merged giants) each
     get their own warc_bucket Exchange BELOW the union, and the union zips
     them with no Exchange above it — so the normal kernel's map stage never
     waits on the giant chain — while every bucket still gets exactly one
-    file for the invocation."""
+    file for the invocation. The same with giant shards read through a
+    shard cache."""
     out = str(tmp_path / "extracted")
     pages = pages_df(spark, 120, 4)  # i % 40 == 9: three giants
+    cache = str(tmp_path / "cache") if cached else None
     m = run_and_write(spark, pages, out, str(tmp_path / "lin"),
-                      PipelineConfig(run_id="rb", warc_buckets=8))
+                      PipelineConfig(run_id="rb", warc_buckets=8,
+                                     shard_cache_path=cache))
     assert m["rows"] == 120
     assert m["buckets"] == 8  # no footers to size from: the cap exactly
     files = _files_per_bucket_dir(out)

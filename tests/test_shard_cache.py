@@ -94,7 +94,7 @@ def test_fully_cached_resume_writes_nothing_and_gc_bounds_files(spark, paths):
     + compacts, so K resumes/config-bumps leave a bounded file count."""
     import pathlib
 
-    from paraocr_spark.pipeline import gc_shard_cache
+    from paraocr_spark.operators.shard_cache import gc_shard_cache
 
     def cache_files():
         return sorted(
@@ -133,7 +133,7 @@ def test_gc_crash_recovery_and_stale_dirs(spark, paths):
     import os
     import shutil
 
-    from paraocr_spark.pipeline import gc_shard_cache
+    from paraocr_spark.operators.shard_cache import gc_shard_cache
 
     pages = pages_df(spark, N, 4)
     cfg = PipelineConfig(run_id="sc", shard_cache_path=paths["cache"])

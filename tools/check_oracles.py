@@ -5,10 +5,12 @@ CORRECTNESS_r{N}.json so mismatches surface before the round gate."""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool lives in, not whatever copy is installed elsewhere
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd
@@ -21,8 +23,6 @@ ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 
 # oracle generators embed data-derived constants (IVF centroids, BPE corpus
 # vocab) from this dir — thread the harness SF through before oracle_sql()
-import os  # noqa: E402
-
 os.environ["PARAOCR_SF_DIR"] = SF_DIR
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()

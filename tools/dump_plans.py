@@ -54,8 +54,9 @@ COMMENT = {
         "salted path gives."
     ),
     "extraction pipeline (salted, bucketed for the write)": (
-        "The plan run_and_write, the shard-cache path and the streaming "
-        "write execute: each branch gets its own "
+        "The plan run_and_write and the streaming write execute, with or "
+        "without a shard cache (a cache only changes where the giant "
+        "branch's shard rows come from): each branch gets its own "
         "hashpartitioning(cast(warc_ts as bigint), P) Exchange BELOW the "
         "Union: the bucket's own key, so bucket b is partition b mod P. "
         "P = min(n_buckets, defaultParallelism), a divisor of n_buckets, "
