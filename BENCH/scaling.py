@@ -122,17 +122,20 @@ def noise_gauge() -> float:
     no Spark, ~7 s."""
     code = (
         "import sys, time; sys.path.insert(0, r'%s')\n"
+        "import pyarrow as pa\n"
         "from paraocr_spark.sources.pages import gen_pages_pdf\n"
         "from paraocr_spark.operators.extract import _extract_batch\n"
-        "pdf = gen_pages_pdf(0, 2000)\n"
-        "_extract_batch(pdf.iloc[:256].copy(), 0, 'default', None)\n"
+        "rb = pa.RecordBatch.from_pandas(\n"  # the kernel's input columns
+        "    gen_pages_pdf(0, 2000).assign(shard_id=0, n_shards=1),\n"
+        "    preserve_index=False)\n"
+        "_extract_batch(rb.slice(0, 256), 0, 'default', None)\n"
         "best = 1e9\n"
         "for _ in range(3):\n"  # min-of-3: additive noise, min = capacity
         "    t0 = time.perf_counter()\n"
-        "    for s in range(0, len(pdf), 1024):\n"
-        "        _extract_batch(pdf.iloc[s:s+1024].copy(), 0, 'default', None)\n"
+        "    for s in range(0, rb.num_rows, 1024):\n"
+        "        _extract_batch(rb.slice(s, 1024), 0, 'default', None)\n"
         "    best = min(best, time.perf_counter() - t0)\n"
-        "print(best / len(pdf) * 1000)\n" % REPO
+        "print(best / rb.num_rows * 1000)\n" % REPO
     )
     r = subprocess.run([sys.executable, "-c", code], capture_output=True,
                        text=True, timeout=300)

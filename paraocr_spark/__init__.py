@@ -3,8 +3,8 @@
 Re-expresses the capabilities of the reference (phuocnguyen90/paraOCR, a
 multiprocessing per-document OCR/extraction pipeline) as idiomatic Spark:
 declarative DataFrame plans for everything relational (scan, resume anti-join,
-lineage rollups, dedup joins) and one vectorized Arrow-batch kernel
-(``mapInPandas``) for the per-document heavy extract.
+lineage rollups, dedup joins) and one Arrow-batch kernel (``mapInArrow``)
+for the per-document heavy extract.
 
 Layout:
     core/        pure-Python extraction semantics (the serial oracle)

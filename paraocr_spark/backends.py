@@ -4,7 +4,7 @@ Spark-first analog of the reference's dotted-path OCR-backend plugin system
 (/root/reference/src/paraocr/cli.py:101-123 preflight import,
 gpu_worker.py:20-43 per-worker instantiation, contract
 ocr_backends/base.py:6-10): a backend is a class implementing
-``extract_batch(pd.DataFrame) -> pd.DataFrame`` over one Arrow batch,
+``extract_batch(batch) -> mapping`` over one Arrow batch's columns,
 selected by registry name or dotted ``module.Class`` path via
 ``PipelineConfig(backend=...)`` / ``--backend``.
 
@@ -22,27 +22,30 @@ from __future__ import annotations
 
 import importlib
 from abc import ABC, abstractmethod
+from collections.abc import Mapping
 
-import pandas as pd
-
-#: input columns every backend receives (plus shard_id/n_shards if salted)
+#: input columns every backend receives (the kernel adds shard_id/n_shards)
 BACKEND_INPUT_COLS = ("url", "html", "text", "lang")
 #: output columns every backend must return, row-aligned with its input
 BACKEND_OUTPUT_COLS = ("extracted_text", "spans", "method", "error")
 
 
 class ExtractorBackend(ABC):
-    """Contract: one vectorized Arrow batch in, aligned extraction out.
+    """Contract: one Arrow batch's columns in, aligned extraction out.
 
-    ``pdf`` carries at least BACKEND_INPUT_COLS (html is bytes|None, text is
-    str|None). Return a DataFrame with BACKEND_OUTPUT_COLS, same length and
-    order: ``spans`` is a list of (start, end) tuples per row, ``method`` a
-    short route label, ``error`` None or an in-band message — never raise
-    for a single bad document (easyocr_backend.py:260-263 semantics).
+    ``batch`` maps each column name to a row-aligned sequence and carries
+    at least BACKEND_INPUT_COLS (html is bytes|None, text is str|None).
+    The kernel passes Python lists (operators/extract._extract_batch); a
+    pandas DataFrame, also a mapping of columns, works the same. Return a
+    mapping with BACKEND_OUTPUT_COLS (a dict of lists, or a DataFrame),
+    same length and order: ``spans`` is a list of (start, end) tuples per
+    row, ``method`` a short route label, ``error`` None or an in-band
+    message — never raise for a single bad document
+    (easyocr_backend.py:260-263 semantics).
     """
 
     @abstractmethod
-    def extract_batch(self, pdf: pd.DataFrame) -> pd.DataFrame: ...
+    def extract_batch(self, batch: Mapping) -> Mapping: ...
 
 
 _REGISTRY: dict[str, str] = {

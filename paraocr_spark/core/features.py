@@ -29,7 +29,6 @@ import zlib
 from itertools import repeat
 
 import numpy as np
-import pandas as pd
 
 FEATURE_CAP = 50_000
 
@@ -43,6 +42,13 @@ def _round4(x: float) -> float:
     return math.floor(x * 10_000 + 0.5) / 10_000
 
 _TOKEN_RE = re.compile(r"[a-z0-9]+")
+# the kernel's tokenizer: lower, encode, map every byte outside [a-z0-9]
+# to a space and split. Every non-ASCII char encodes to bytes >= 0x80, so
+# the maximal runs are exactly _TOKEN_RE's tokens, as bytes — and the
+# byte pass is about 2x faster than the regex on crawl text.
+_TOKEN_BYTES = bytes(
+    i if (97 <= i <= 122 or 48 <= i <= 57) else 32 for i in range(256)
+)
 # alpha counting: delete every non-[A-Za-z] byte and take the length.
 # UTF-8 bytes of non-ASCII chars are all >= 0x80, so they land in the
 # delete set and the result length equals the regex-[A-Za-z] char count —
@@ -92,10 +98,10 @@ _RK_B = 1_000_003
 _RK_POWERS: list[int] = [1]
 
 
-def _token_hash(token: str) -> int:
-    """64-bit token hash: two crc32s (plain and 0xDEADBEEF-seeded)."""
-    b = token.encode("utf-8")
-    return (zlib.crc32(b) << 32) | zlib.crc32(b, 0xDEADBEEF)
+def _token_hash(token: bytes) -> int:
+    """64-bit hash of a token's bytes: two crc32s (plain and
+    0xDEADBEEF-seeded)."""
+    return (zlib.crc32(token) << 32) | zlib.crc32(token, 0xDEADBEEF)
 
 
 def _rk_fingerprint_premod(hmods: list) -> int:
@@ -153,7 +159,7 @@ def compute_features(text: str | None) -> dict:
         stop_ratio = _round4(stop / n_tok)
         best = max(scores)
         lang_pred = "und" if best == 0 else _LANG_ORDER[scores.index(best)]
-        hashes = {t: _token_hash(t) for t in counter}
+        hashes = {t: _token_hash(t.encode("utf-8")) for t in counter}
         simhash = _simhash64_counted(list(hashes.values()), list(counter.values()))
         rolling = _rk_fingerprint_premod([hashes[t] % _RK_P for t in tokens])
     else:
@@ -171,13 +177,15 @@ def compute_features(text: str | None) -> dict:
 
 # ---------------------------------------------------------------- kernel
 
-# token -> marker bits: bit 0 stopword, bit 1 + li marks _LANG_ORDER[li]
-_TOKEN_MARKS: dict[str, int] = {}
+# token bytes -> marker bits: bit 0 stopword, bit 1 + li marks
+# _LANG_ORDER[li]
+_TOKEN_MARKS: dict[bytes, int] = {}
 for _t in _STOPWORDS:
-    _TOKEN_MARKS[_t] = 1
+    _TOKEN_MARKS[_t.encode()] = 1
 for _t, _ls in _MARKER_LANGS.items():
+    _b = _t.encode()
     for _li in _ls:
-        _TOKEN_MARKS[_t] = _TOKEN_MARKS.get(_t, 0) | (2 << _li)
+        _TOKEN_MARKS[_b] = _TOKEN_MARKS.get(_b, 0) | (2 << _li)
 # _BYTE_BITS[v, k] = bit k of byte value v: a (docs x 256) histogram of one
 # hash byte times this table is the per-doc count of each of its 8 bits
 _BYTE_BITS = ((np.arange(256)[:, None] >> np.arange(8)) & 1).astype(np.int64)
@@ -189,7 +197,8 @@ _VOCAB_CAP = 1_000_000
 
 
 class _TokenVocab(dict):
-    """token -> dense id, with per-id arrays of what the kernel needs.
+    """token bytes -> dense id, with per-id arrays of what the kernel
+    needs.
 
     A lookup miss (``__missing__``) assigns the next id and queues the
     token, so ``map(vocab.__getitem__, tokens)`` runs as a C-level loop
@@ -198,12 +207,12 @@ class _TokenVocab(dict):
 
     def __init__(self):
         super().__init__()
-        self._new: list[str] = []
+        self._new: list[bytes] = []
         self.hbytes = np.empty((8, 0), np.uint8)  # hash byte j of each id
         self.hmod = np.empty(0, np.uint64)        # hash % _RK_P
         self.marks = np.empty(0, np.uint8)        # _TOKEN_MARKS bits
 
-    def __missing__(self, token: str) -> int:
+    def __missing__(self, token: bytes) -> int:
         self._new.append(token)
         i = self[token] = len(self)
         return i
@@ -269,12 +278,13 @@ def _modmul61(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return np.where(t >= p, t - p, t)
 
 
-def compute_features_batch(texts: "pd.Series | list") -> list[dict]:
+def compute_features_batch(texts: list) -> list[dict]:
     """Batch variant used inside the Arrow kernel.
 
-    Per doc, Python only tokenizes, counts alpha bytes and maps the tokens
-    to worker-vocabulary ids (a C-level dict lookup; the token strings die
-    with the doc). The rest is one numpy pass over the batch's id stream:
+    Per doc, Python only tokenizes (bytes-level, _TOKEN_BYTES), counts
+    alpha bytes and maps the tokens to worker-vocabulary ids (a C-level
+    dict lookup; the token bytes die with the doc). The rest is one numpy
+    pass over the batch's id stream:
 
       * stop / language scores — bincounts of the per-id marker flags;
       * simhash — per hash byte, a (docs x 256) bincount histogram times
@@ -303,7 +313,7 @@ def compute_features_batch(texts: "pd.Series | list") -> list[dict]:
         alpha = len(cap.encode("utf-8").translate(None, _NON_ALPHA_BYTES))
         out[i] = {**_ZERO_FEATURES, "n_chars": len(text),
                   "alpha_ratio": _round4(alpha / len(cap)) if cap else 0.0}
-        tokens = _TOKEN_RE.findall(cap.lower())
+        tokens = cap.lower().encode("utf-8").translate(_TOKEN_BYTES).split()
         if tokens:
             live.append(i)
             ids_parts.append(

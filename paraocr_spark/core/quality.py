@@ -7,17 +7,13 @@ tokens, short-circuiting when there are too few words. The thresholds
 mirror the reference defaults (``config.py:56-57``: min_native_text_chars=100,
 dictionary ratio 0.3; char-validity 0.85 at ``utils.py:125``).
 
-Both a serial implementation (the oracle) and a vectorized pandas
-implementation (used inside the Spark kernel) live here; tests assert they
-agree on every input.
+The default backend (core/routes.py) evaluates the same serial functions
+per row inside the Spark kernel, so the kernel's gate is the oracle's.
 """
 
 from __future__ import annotations
 
 import re
-
-import numpy as np
-import pandas as pd
 
 # Thresholds (reference: config.py:56-57, utils.py:125).
 MIN_NATIVE_TEXT_CHARS = 100
@@ -94,58 +90,3 @@ def fastpath_ok(text: str | None) -> bool:
     Analog of parallel.py:295-307.
     """
     return text is not None and len(text) >= MIN_NATIVE_TEXT_CHARS and quality_ok(text)
-
-
-# ---------------------------------------------------------------------------
-# Vectorized pandas implementations (used inside the Spark Arrow kernel).
-# ---------------------------------------------------------------------------
-
-def quality_ok_series(s: pd.Series) -> pd.Series:
-    """Vectorized quality_ok over a string Series (NaN/None -> False).
-
-    No per-row Python: character ratio via Series.str.count, dictionary hits
-    via findall + explode + isin + groupby mean.
-    """
-    out = pd.Series(False, index=s.index)
-    txt = s.dropna().astype(str)
-    if txt.empty:
-        return out
-    lengths = txt.str.len()
-    nonempty = lengths > 0
-    txt = txt[nonempty]
-    if txt.empty:
-        return out
-    ratio = txt.str.count(_VALID_CHAR_RE) / txt.str.len()
-    stage1 = ratio >= CHAR_VALID_RATIO
-    cand = txt[stage1]
-    if cand.empty:
-        return out
-    toks = cand.str.findall(TOKEN_RE)
-    n_tok = toks.str.len()
-    exploded = toks.explode().dropna()
-    if exploded.empty:
-        hit_ratio = pd.Series(0.0, index=cand.index)
-    else:
-        hits = exploded.str.lower().isin(DICTIONARY)
-        hit_counts = hits.groupby(level=0).sum()
-        hit_ratio = (hit_counts / n_tok).reindex(cand.index).fillna(0.0)
-    ok = (n_tok >= MIN_WORDS) & (hit_ratio >= DICT_HIT_RATIO)
-    out.loc[ok[ok].index] = True
-    return out
-
-
-def fastpath_ok_series(s: pd.Series) -> pd.Series:
-    """Vectorized fastpath_ok over a string Series."""
-    long_enough = s.notna() & (s.fillna("").astype(str).str.len() >= MIN_NATIVE_TEXT_CHARS)
-    ok = quality_ok_series(s)
-    return (long_enough & ok).astype(bool)
-
-
-def valid_char_ratio_series(s: pd.Series) -> pd.Series:
-    """Vectorized valid_char_ratio (NaN -> 0.0, empty -> 0.0)."""
-    txt = s.fillna("").astype(str)
-    lengths = txt.str.len()
-    counts = txt.str.count(_VALID_CHAR_RE)
-    return pd.Series(
-        np.where(lengths > 0, counts / lengths.replace(0, 1), 0.0), index=s.index
-    )

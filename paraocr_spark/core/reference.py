@@ -36,8 +36,11 @@ class ExtractResult:
     error: str | None = None
 
 
-def extract_document(html: bytes | None, text: str | None) -> ExtractResult:
-    """Extract one document. Never raises — errors come back in-band."""
+def extract_document(html: bytes | None, text: str | None,
+                     parse_html=htmlx.extract_html) -> ExtractResult:
+    """Extract one document. Never raises — errors come back in-band.
+    ``parse_html`` is the HTML parser of step 4 (markup -> (text, spans));
+    the default backend's C-path variant passes its own (core/routes.py)."""
     # 1. Fast path: trust pre-extracted native text when the gate passes
     #    (parallel.py:295-307; min chars config.py:56).
     if quality.fastpath_ok(text):
@@ -65,7 +68,7 @@ def extract_document(html: bytes | None, text: str | None) -> ExtractResult:
     except UnicodeDecodeError:
         return ExtractResult(None, [], METHOD_ERROR, "invalid_utf8")
     try:
-        merged, spans = htmlx.extract_html(markup)
+        merged, spans = parse_html(markup)
     except Exception as e:  # defensive: per-doc isolation (easyocr_backend.py:260-263 analog)
         return ExtractResult(None, [], METHOD_ERROR, f"html_error: {e!r}")
     return ExtractResult(merged, spans, METHOD_HTML)

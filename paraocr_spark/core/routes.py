@@ -1,4 +1,4 @@
-"""The default extraction backend: vectorized routing + per-route parsing.
+"""The default extraction backend: per-document routing + parsing.
 
 This is the route logic the reference hard-wires across worker_dispatcher
 (processors.py:24-59), the native-text gate (parallel.py:295-334) and the
@@ -10,108 +10,31 @@ with one config string, exactly like the reference swaps OCR engines.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+from collections.abc import Mapping
 
 from paraocr_spark.backends import ExtractorBackend
-from paraocr_spark.core import htmlx, layout, quality
-from paraocr_spark.core.reference import (
-    METHOD_ERROR,
-    METHOD_HTML,
-    METHOD_LAYOUT,
-    METHOD_NATIVE,
-)
-
-
-def assign_obj(target: np.ndarray, mask: np.ndarray, values: list) -> None:
-    """Assign a list of python objects into target[mask] without numpy
-    trying to broadcast list-of-lists into a 2-D array."""
-    tmp = np.empty(len(values), dtype=object)
-    tmp[:] = values
-    target[mask] = tmp
+from paraocr_spark.core import htmlx
+from paraocr_spark.core.reference import extract_document
 
 
 class RoutedExtractorBackend(ExtractorBackend):
-    """fast-path gate -> layout/html dispatch -> in-band errors."""
+    """fast-path gate -> layout/html dispatch -> in-band errors: the serial
+    oracle (core/reference.extract_document) per row, with this backend's
+    HTML parser. A shard of a giant (operators/skew.salt_pages) has text
+    None, so it never passes the native-text gate."""
 
     @staticmethod
     def _parse_html(markup: str) -> tuple[str, list[tuple[int, int]]]:
         """HTML-parser hook: the C-path backend overrides just this."""
         return htmlx.extract_html(markup)
 
-    def extract_batch(self, pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        html_vals = pdf["html"].to_numpy(dtype=object)
-        text_vals = pdf["text"]
-
-        ext = np.empty(n, dtype=object)
-        spans = np.empty(n, dtype=object)
-        method = np.empty(n, dtype=object)
-        error = np.full(n, None, dtype=object)
-
-        # --- vectorized routing masks (P2/P3/P4 analogs) ------------------
-        # fast path: pre-extracted text passes the two-stage gate; shard
-        # rows (text=None by construction) can never fast-path, the mask
-        # keeps that explicit
-        is_shard = (
-            (pdf["n_shards"].to_numpy() > 1) if "n_shards" in pdf
-            else np.zeros(n, bool)
-        )
-        fast = quality.fastpath_ok_series(text_vals).to_numpy() & ~is_shard
-        has_html = np.fromiter(
-            (isinstance(h, (bytes, bytearray)) and len(h) > 0 for h in html_vals),
-            dtype=bool, count=n,
-        )
-        magic = np.fromiter(
-            (isinstance(h, (bytes, bytearray)) and h[:8] == layout.MAGIC for h in html_vals),
-            dtype=bool, count=n,
-        )
-        no_content = ~fast & ~has_html
-        route_layout = ~fast & has_html & magic
-        route_html = ~fast & has_html & ~magic
-
-        # --- fast path (parallel.py:295-334) -------------------------------
-        if fast.any():
-            ftxt = text_vals.to_numpy(dtype=object)[fast]
-            ext[fast] = ftxt
-            assign_obj(spans, fast, [[(0, len(t))] for t in ftxt])
-            method[fast] = METHOD_NATIVE
-
-        # --- in-band errors (parallel.py:565-569) ---------------------------
-        if no_content.any():
-            ext[no_content] = None
-            assign_obj(spans, no_content, [[] for _ in range(int(no_content.sum()))])
-            method[no_content] = METHOD_ERROR
-            error[no_content] = "no_content"
-
-        # --- heavy per-document extract (the inner kernel) ------------------
-        for idx in np.flatnonzero(route_layout):
-            try:
-                merged, sp = layout.extract_layout(bytes(html_vals[idx]))
-                ext[idx], spans[idx], method[idx] = merged, sp, METHOD_LAYOUT
-            except ValueError as e:
-                ext[idx], spans[idx] = None, []
-                method[idx], error[idx] = METHOD_ERROR, f"layout_error: {e}"
-
-        for idx in np.flatnonzero(route_html):
-            raw = bytes(html_vals[idx])
-            try:
-                markup = raw.decode("utf-8")
-            except UnicodeDecodeError:
-                ext[idx], spans[idx] = None, []
-                method[idx], error[idx] = METHOD_ERROR, "invalid_utf8"
-                continue
-            try:
-                merged, sp = self._parse_html(markup)
-                ext[idx], spans[idx], method[idx] = merged, sp, METHOD_HTML
-            except Exception as e:  # per-doc isolation (easyocr_backend.py:260-263)
-                ext[idx], spans[idx] = None, []
-                method[idx], error[idx] = METHOD_ERROR, f"html_error: {e!r}"
-
-        return pd.DataFrame(
-            {"extracted_text": ext, "spans": spans, "method": method, "error": error},
-            index=pdf.index,
-        )
+    def extract_batch(self, batch: Mapping) -> dict:
+        res = [extract_document(h, t, self._parse_html)
+               for h, t in zip(batch["html"], batch["text"])]
+        return {"extracted_text": [r.extracted_text for r in res],
+                "spans": [r.spans for r in res],
+                "method": [r.method for r in res],
+                "error": [r.error for r in res]}
 
 
 class LxmlRoutedExtractorBackend(RoutedExtractorBackend):
@@ -122,7 +45,4 @@ class LxmlRoutedExtractorBackend(RoutedExtractorBackend):
     def __init__(self):
         from paraocr_spark.core import htmlx_lxml  # raises if lxml missing
 
-        self._extract = htmlx_lxml.extract_html_lxml
-
-    def _parse_html(self, markup: str) -> tuple[str, list[tuple[int, int]]]:
-        return self._extract(markup)
+        self._parse_html = htmlx_lxml.extract_html_lxml

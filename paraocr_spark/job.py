@@ -32,7 +32,8 @@ WORKER_ALLOC_ENV = {
 
 
 # Byte cap on every Arrow batch the JVM sends a Python task (Spark 4.1
-# honours it for mapInPandas input, next to maxRecordsPerBatch). Layout docs
+# honours it for the kernel's mapInArrow input, next to
+# maxRecordsPerBatch). Layout docs
 # up to a scan split ride the normal kernel whole, so a record cap alone
 # lets one batch hold several 0.7 MB giants and the worker's peak grows with
 # them: on the perfbench crawl (local[4], seed 4) a task's 750-row batch

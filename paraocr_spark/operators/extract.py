@@ -2,18 +2,21 @@
 
 Re-expresses the reference's five-stage multiprocessing engine
 (parallel.py:214-597: scan -> dispatch -> route -> render+OCR pools ->
-merge/write) as ONE ``mapInPandas`` over Arrow batches:
+merge/write) as ONE ``mapInArrow`` over Arrow batches:
 
-  * routing (fast-path gate, layout-vs-html dispatch, error tagging) is
-    fully vectorized — pandas ``.str`` ops and numpy masks, the analogs of
-    ``worker_dispatcher`` (processors.py:24-59) and the native-text gate
-    (parallel.py:295-334);
-  * the heavy per-document parse (DOM tokenize / layout decode) runs only on
-    the rows each mask selects — the analog of the reference's render+OCR
-    inner kernel (processors.py:63-115, gpu_worker.py:56-106). Parsing a
-    document is inherently a per-document operation; the win over the
-    reference is that batches stream through executors with no process
-    pools, no temp files, and no driver coordination;
+  * per document, the backend (core/routes.py by default) routes (the
+    native-text gate, layout-vs-html dispatch, error tagging: the analogs
+    of ``worker_dispatcher``, processors.py:24-59, and the gate,
+    parallel.py:295-334) and parses (DOM tokenize / layout decode: the
+    reference's render+OCR inner kernel, processors.py:63-115,
+    gpu_worker.py:56-106). Parsing a document is inherently a
+    per-document operation; the win over the reference is that batches
+    stream through executors with no process pools, no temp files, and no
+    driver coordination;
+  * the batch goes in and out as Arrow: input columns are read with
+    ``to_pylist()``, unchanged ones pass through as the input's own
+    arrays, and new ones are built from buffers (operators/arrow_cols.py),
+    so the worker never imports pandas;
   * errors stay in-band (``error`` column), never dropped or thrown —
     parallel.py:565-569 semantics;
   * per-batch wall time is attributed evenly across the batch's rows
@@ -36,7 +39,7 @@ import time
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -46,80 +49,77 @@ from paraocr_spark.core.reference import METHOD_ERROR, METHOD_LAYOUT
 
 from paraocr_spark.core.features import (FEATURE_CAP, FEATURES_DDL,
                                           compute_features_batch)
+from paraocr_spark.operators import arrow_cols as ac
 from paraocr_spark.operators.lineage import report, tally
 from paraocr_spark.operators.shard_cache import ShardCache, extract_shards
 
-EXTRACTED_SCHEMA_DDL = (
-    "url string, warc_ts timestamp, lang string, extracted_text string, "
-    "spans array<struct<start:long,end:long>>, method string, error string, "
-    f"features {FEATURES_DDL}"
-)
+#: (name, Spark DDL type) of every extracted column; the schema DDL strings
+#: and the kernel's output names both derive from these lists
+_EXTRACTED_FIELDS = [
+    ("url", "string"), ("warc_ts", "timestamp"), ("lang", "string"),
+    ("extracted_text", "string"),
+    ("spans", "array<struct<start:long,end:long>>"), ("method", "string"),
+    ("error", "string"), ("features", FEATURES_DDL),
+]
+_KERNEL_FIELDS = _EXTRACTED_FIELDS + [
+    ("shard_id", "int"), ("n_shards", "int"), ("_pid", "int"),
+    ("_doc_bytes", "long"), ("_wall_s", "double"),
+]
+EXTRACTED_SCHEMA_DDL = ac.ddl(_EXTRACTED_FIELDS)
+_KERNEL_SCHEMA_DDL = ac.ddl(_KERNEL_FIELDS)
+_KERNEL_COLS = [name for name, _ in _KERNEL_FIELDS]
 
 _BASE_COLS = ["url", "warc_ts", "html", "text", "lang"]
-
-_KERNEL_SCHEMA_DDL = (
-    EXTRACTED_SCHEMA_DDL
-    + ", shard_id int, n_shards int, _pid int, _doc_bytes long, _wall_s double"
-)
+_METRIC_COLS = ("_pid", "_doc_bytes", "_wall_s")
 
 
-def _spans_struct(spans: list[tuple[int, int]]) -> list[dict]:
-    return [{"start": s, "end": e} for s, e in spans]
-
-
-def _extract_batch(pdf: pd.DataFrame, pid: int, backend_spec: str,
-                   backend_kwargs: dict | None) -> pd.DataFrame:
+def _extract_batch(batch: pa.RecordBatch, pid: int, backend_spec: str,
+                   backend_kwargs: dict | None) -> pa.RecordBatch:
     """Backend extraction + engine-side bookkeeping (features, metrics).
 
     The route/parse logic lives in the backend (backends.py registry,
     default: core/routes.py:RoutedExtractorBackend — resolved ONCE per
-    Python worker); this wrapper owns what every backend shares: span
-    structification, per-doc features, shard passthrough, and the lineage
-    metric columns."""
-    from paraocr_spark.backends import get_backend
+    Python worker); this wrapper owns what every backend shares: Arrow
+    in and out, per-doc features, shard passthrough, and the lineage
+    metric columns. ``batch`` carries the kernel input (url, warc_ts,
+    html, text, lang, shard_id, n_shards); the backend gets its columns
+    as lists."""
+    from paraocr_spark.backends import BACKEND_INPUT_COLS, get_backend
 
     t0 = time.perf_counter()
-    n = len(pdf)
-    res = get_backend(backend_spec, backend_kwargs).extract_batch(pdf)
-    ext = res["extracted_text"].to_numpy(dtype=object)
-    spans = np.empty(n, dtype=object)
-    spans[:] = [_spans_struct(sp) for sp in res["spans"]]
-
-    html_vals = pdf["html"].to_numpy(dtype=object)
-    doc_bytes = np.fromiter(
-        (len(h) if isinstance(h, (bytes, bytearray)) else 0 for h in html_vals),
-        dtype=np.int64, count=n,
-    )
-    is_shard = (pdf["n_shards"].to_numpy() > 1) if "n_shards" in pdf else np.zeros(n, bool)
+    n = batch.num_rows
+    cols = {c: batch.column(c).to_pylist()
+            for c in (*BACKEND_INPUT_COLS, "shard_id", "n_shards")}
+    res = get_backend(backend_spec, backend_kwargs).extract_batch(cols)
+    ext = list(res["extracted_text"])
+    doc_bytes = np.fromiter((0 if h is None else len(h) for h in cols["html"]),
+                            np.int64, n)
 
     # per-doc training-data features, same pass (no second scan / job);
     # shards of giants get theirs after reassembly (_merge_shards_relational).
     # Batched kernel: simhash + rolling hash run as one numpy pass over the
     # whole Arrow batch (bit-identical to per-doc compute_features).
+    whole = [k <= 1 for k in cols["n_shards"]]
     feats = compute_features_batch(
-        [None if is_shard[i] else ext[i] for i in range(n)]
-    )
-    features = np.empty(n, dtype=object)
-    features[:] = [None if is_shard[i] else feats[i] for i in range(n)]
+        [t if w else None for t, w in zip(ext, whole)])
+    feats = [f if w else None for f, w in zip(feats, whole)]
 
     wall = time.perf_counter() - t0
-    return pd.DataFrame(
-        {
-            "url": pdf["url"].to_numpy(),
-            "warc_ts": pdf["warc_ts"].to_numpy(),
-            "lang": pdf["lang"].to_numpy(),
-            "extracted_text": ext,
-            "spans": spans,
-            "method": res["method"].to_numpy(dtype=object),
-            "error": res["error"].to_numpy(dtype=object),
-            "features": features,
-            "shard_id": pdf["shard_id"].to_numpy() if "shard_id" in pdf else 0,
-            "n_shards": pdf["n_shards"].to_numpy() if "n_shards" in pdf else 1,
-            "_pid": pid,
-            "_doc_bytes": doc_bytes,
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column("url"), batch.column("warc_ts"), batch.column("lang"),
+            ac.strings(ext),
+            ac.spans_array(res["spans"]),
+            ac.strings(res["method"]),
+            ac.strings(res["error"]),
+            ac.features_array(feats),
+            batch.column("shard_id"), batch.column("n_shards"),
+            ac.int32s(np.full(n, pid)),
+            ac.fixed(pa.int64(), doc_bytes, np.int64),
             # even attribution across the batch — parallel.py:42-49 analog
-            "_wall_s": wall / max(n, 1),
-        }
+            ac.fixed(pa.float64(), np.full(n, wall / max(n, 1)), np.float64),
+        ],
+        names=_KERNEL_COLS,
     )
 
 
@@ -168,8 +168,8 @@ def _memoize_zip_directories() -> None:
 def extract_kernel(df: DataFrame, backend: str = "default",
                    backend_kwargs: dict | None = None,
                    lineage_acc=None) -> DataFrame:
-    """mapInPandas wrapper. Input needs url/warc_ts/html/text/lang
-    (+optional shard_id/n_shards from salt_pages). ``backend`` is a
+    """mapInArrow wrapper. Input needs url/warc_ts/html/text/lang plus
+    shard_id/n_shards (_unsharded, or salt_pages' shards). ``backend`` is a
     registry name or dotted module.Class path (backends.py); only the
     strings travel in the closure — workers resolve them locally.
 
@@ -181,21 +181,43 @@ def extract_kernel(df: DataFrame, backend: str = "default",
     shard rows are counted after reassembly (_merge_shards_relational).
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _memoize_zip_directories()
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         totals: dict = {}
         for b in batches:
-            if len(b):
+            if b.num_rows:
                 out = _extract_batch(b, pid, backend, backend_kwargs)
                 if lineage_acc is not None:
-                    tally(totals, out["_pid"], out["_doc_bytes"],
-                          out["_wall_s"])
+                    tally(totals, *(out.column(c) for c in _METRIC_COLS))
                 yield out
         report(lineage_acc, totals)
 
-    return df.mapInPandas(run, schema=_KERNEL_SCHEMA_DDL)
+    return df.mapInArrow(run, schema=_KERNEL_SCHEMA_DDL)
+
+
+def _giant_features(batches: Iterator[tuple], lineage_acc=None
+                    ) -> Iterator[pa.Array]:
+    """The giant reassembly's features: one ``features`` array per batch of
+    (prefix, n_chars, _pid, _doc_bytes, _wall_s) arrays.
+
+    ``prefix`` is already text[:FEATURE_CAP] (JVM substring; both count
+    code points) — compute_features_batch re-caps it, a no-op. Its
+    n_chars is len(prefix); the uncapped JVM length overrides it (null
+    text -> null length -> keep the zero-features 0). With
+    ``lineage_acc``, each row counts under its merged metrics, sent as
+    one update at task end (operators/lineage.py)."""
+    totals: dict = {}
+    for prefix, n_chars, pid, doc_bytes, wall_s in batches:
+        feats = compute_features_batch(prefix.to_pylist())
+        for f, n in zip(feats, n_chars.to_pylist()):
+            if n is not None:
+                f["n_chars"] = n
+        if lineage_acc is not None:
+            tally(totals, pid, doc_bytes, wall_s)
+        yield ac.features_array(feats)
+    report(lineage_acc, totals)
 
 
 def _merge_shards_relational(kernel_out: DataFrame,
@@ -206,13 +228,12 @@ def _merge_shards_relational(kernel_out: DataFrame,
     deterministic shard order (never shuffle order — SURVEY.md §7); the
     merged text is a JVM-side concat_ws, and span offsets shift via a
     higher-order aggregate() that carries a running offset. Only the final
-    per-doc feature computation touches Python — as an iterator pandas_udf fed
+    per-doc feature computation touches Python — as an iterator arrow_udf fed
     the JVM-side substring(text, 1, FEATURE_CAP) prefix plus length(text),
     so the merged giant text itself (tens of MB per doc) NEVER crosses
     Arrow: every feature field except n_chars derives from the capped
     prefix by construction (core/features.py docstring), and n_chars rides
-    in as the JVM length. The previous mapInPandas form round-tripped the
-    full merged text through Python twice per giant.
+    in as the JVM length.
 
     That UDF is also the Python task that finishes each merged row, so with
     ``lineage_acc`` it counts the row under its merged _pid, _doc_bytes and
@@ -267,25 +288,12 @@ def _merge_shards_relational(kernel_out: DataFrame,
         "_pid", "_doc_bytes", "_wall_s",
     )
 
-    @F.pandas_udf(FEATURES_DDL)
+    @F.arrow_udf(FEATURES_DDL)
     def giant_features(
-        batches: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series,
-                                pd.Series]],
-    ) -> Iterator[pd.DataFrame]:
-        # prefix is already text[:FEATURE_CAP] (JVM substring; both count
-        # code points) — compute_features_batch re-caps it, a no-op. Its
-        # n_chars is len(prefix); override with the uncapped JVM length
-        # (null text -> null length -> keep the zero-features 0).
-        totals: dict = {}
-        for prefix, n_chars, pid, doc_bytes, wall_s in batches:
-            feats = compute_features_batch(list(prefix))
-            for f, n in zip(feats, n_chars):
-                if not pd.isna(n):
-                    f["n_chars"] = int(n)
-            if lineage_acc is not None:
-                tally(totals, pid, doc_bytes, wall_s)
-            yield pd.DataFrame(feats)
-        report(lineage_acc, totals)
+        batches: Iterator[tuple[pa.Array, pa.Array, pa.Array, pa.Array,
+                                pa.Array]],
+    ) -> Iterator[pa.Array]:
+        yield from _giant_features(batches, lineage_acc)
 
     return merged.select(
         "url", "warc_ts", "lang", "extracted_text", "spans", "method",

@@ -21,8 +21,7 @@ from __future__ import annotations
 import hashlib
 import json
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark import AccumulatorParam, TaskContext
 
 
@@ -48,16 +47,15 @@ class LineageAccParam(AccumulatorParam):
         return a
 
 
-def tally(totals: dict, pids: pd.Series, nbytes: pd.Series,
-          wall: pd.Series) -> None:
-    """Fold one batch's per-row metric columns (_pid, _doc_bytes, _wall_s)
-    into a task's {row_pid: (docs, bytes, wall_s)} totals."""
-    pids, nbytes, wall = pids.to_numpy(), nbytes.to_numpy(), wall.to_numpy()
-    for pid in np.unique(pids):
-        rows = pids == pid
-        d0, b0, w0 = totals.get(int(pid), (0, 0, 0.0))
-        totals[int(pid)] = (d0 + int(rows.sum()), b0 + int(nbytes[rows].sum()),
-                            w0 + float(wall[rows].sum()))
+def tally(totals: dict, pids: pa.Array, nbytes: pa.Array,
+          wall: pa.Array) -> None:
+    """Fold one batch's per-row metric columns (_pid, _doc_bytes, _wall_s,
+    as Arrow arrays) into a task's {row_pid: (docs, bytes, wall_s)}
+    totals."""
+    for pid, b, w in zip(pids.to_pylist(), nbytes.to_pylist(),
+                         wall.to_pylist()):
+        d0, b0, w0 = totals.get(pid, (0, 0, 0.0))
+        totals[pid] = (d0 + 1, b0 + b, w0 + w)
 
 
 def report(lineage_acc, totals: dict) -> None:

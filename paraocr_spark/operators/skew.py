@@ -28,16 +28,21 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from paraocr_spark.core import layout
+from paraocr_spark.operators import arrow_cols as ac
 
 # A giant is split into shards of at most PAGES_PER_SHARD pages.
 PAGES_PER_SHARD = 64
 
-_SHARD_COLS = "url string, warc_ts timestamp, html binary, text string, lang string, shard_id int, n_shards int"
+_SHARD_FIELDS = [("url", "string"), ("warc_ts", "timestamp"),
+                 ("html", "binary"), ("text", "string"), ("lang", "string"),
+                 ("shard_id", "int"), ("n_shards", "int")]
+_SHARD_COLS = ac.ddl(_SHARD_FIELDS)
+_SHARD_NAMES = [name for name, _ in _SHARD_FIELDS]
 
 
 def _is_layout_col():
@@ -58,35 +63,47 @@ def giant_condition(threshold: int):
     return _is_layout_col() & (F.octet_length("html") > F.lit(threshold))
 
 
+def split_batches(batches: Iterator[pa.RecordBatch],
+                  pages_per_shard: int = PAGES_PER_SHARD
+                  ) -> Iterator[pa.RecordBatch]:
+    """Giant page batches -> shard batches: each doc's layout payload split
+    into shards of at most ``pages_per_shard`` pages, url/warc_ts/lang
+    taken from the doc's own row, text None (a shard never fast-paths).
+    A corrupt payload stays one shard of one, for the kernel to error."""
+    for b in batches:
+        rows, payloads, shard_ids, n_shards = [], [], [], []
+        for i, html in enumerate(b.column("html").to_pylist()):
+            try:
+                shards = layout.split_layout_pages(html, pages_per_shard)
+            except ValueError:
+                shards = [html]  # corrupt: let the kernel error it
+            n = len(shards)
+            rows += [i] * n
+            payloads += shards
+            shard_ids += range(n)
+            n_shards += [n] * n
+        take = ac.int32s(rows)
+        yield pa.RecordBatch.from_arrays(
+            [b.column("url").take(take), b.column("warc_ts").take(take),
+             ac.binaries(payloads), pa.nulls(len(rows), pa.string()),
+             b.column("lang").take(take), ac.int32s(shard_ids),
+             ac.int32s(n_shards)],
+            names=_SHARD_NAMES,
+        )
+
+
 def salt_pages(pages: DataFrame,
                pages_per_shard: int = PAGES_PER_SHARD) -> DataFrame:
     """giant layout pages -> shard rows (shard_id, n_shards).
 
     Callers pre-filter with giant_condition(); every input row pays the
-    Python split pass, so only route giants here. Shards of one doc spread
-    across the cluster via repartition on (url, shard_id).
+    Python split pass (split_batches, a mapInArrow), so only route giants
+    here. Shards of one doc spread across the cluster via repartition on
+    (url, shard_id).
     """
-
-    def split_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out_rows = []
-            for row in b.itertuples(index=False):
-                try:
-                    shards = layout.split_layout_pages(bytes(row.html), pages_per_shard)
-                except ValueError:
-                    shards = [bytes(row.html)]  # corrupt: let the kernel error it
-                n = len(shards)
-                for sid, payload in enumerate(shards):
-                    out_rows.append(
-                        (row.url, row.warc_ts, payload, None, row.lang, sid, n)
-                    )
-            yield pd.DataFrame(
-                out_rows,
-                columns=["url", "warc_ts", "html", "text", "lang", "shard_id", "n_shards"],
-            )
-
     return (
-        pages.mapInPandas(split_batch, schema=_SHARD_COLS)
+        pages.mapInArrow(lambda it: split_batches(it, pages_per_shard),
+                         schema=_SHARD_COLS)
         # spread one doc's shards across the cluster instead of one task
         .repartition(F.col("url"), F.col("shard_id"))
     )

@@ -5,7 +5,7 @@ Spark re-expression of the reference's OCRRunner.run five-stage engine
 
     read pages -> resume anti-join (cli.py:227-231 analog)
                -> salt docs larger than a scan split (skew; SURVEY.md §4.2)
-               -> mapInPandas extract kernel (stages 2-4 of the reference)
+               -> mapInArrow extract kernel (stages 2-4 of the reference)
                -> shard reassembly (A1/A3 analog, deterministic ordering)
                -> append extracted (S5) + lineage (S7) tables
 

@@ -92,6 +92,10 @@ def write_extracted(df: DataFrame, path: str, mode: str = "append",
                     n_buckets: int = WARC_BUCKETS) -> None:
     """Append extracted rows partitioned by (run_id, bucket(warc_ts)).
 
+    ``mode="overwrite"`` needs a run_id column: it replaces, whole, each
+    ``run_id=...`` directory df writes (_replace_runs) and touches no
+    other run's, so a replayed stream micro-batch replaces its own run_id.
+
     run_id (when present) is the OUTER partition so each run's appends land
     in their own directories — ``job.py --errors`` prunes to the current
     run instead of scanning every prior append; within a run, a constant
@@ -125,6 +129,9 @@ def write_extracted(df: DataFrame, path: str, mode: str = "append",
         df.drop("warc_bucket").writeTo(path).append()
         return
     parts = (["run_id"] if "run_id" in df.columns else []) + ["warc_bucket"]
+    if mode == "overwrite" and parts[0] != "run_id":
+        raise ValueError("write_extracted(mode='overwrite') replaces run_id "
+                         "directories: df needs a run_id column")
     _check_partition_layout(path, parts[0])
     # co-locate each bucket in one task BEFORE the partitioned write:
     # without this every task holds an open writer per bucket (buckets x
@@ -132,11 +139,19 @@ def write_extracted(df: DataFrame, path: str, mode: str = "append",
     # 24k docs)
     if "warc_bucket" not in df.columns:
         df = bucket_for_write(df, n_buckets)
-    w = df.write.mode(mode).partitionBy(*parts)
+    target = path
     if mode == "overwrite":
-        # replace only the partitions present in df (idempotent micro-batch
-        # replay), never the whole table
-        w = w.option("partitionOverwriteMode", "dynamic")
+        # not a dynamic overwrite: that replaces only the (run_id,
+        # warc_bucket) leaves df writes, so a replay into fewer buckets
+        # (a restart on another core count) would keep the first
+        # attempt's extra buckets as duplicate rows. Write the runs to a
+        # hidden staging dir, then swap each run_id dir in whole.
+        import uuid
+
+        _drop_stale_staging(spark, path)
+        target = os.path.join(path, f"{_REPLACING}{uuid.uuid4().hex}")
+        mode = "errorifexists"
+    w = df.write.mode(mode).partitionBy(*parts)
     # url/extracted_text/spans are all-distinct per row: parquet dictionary
     # encoding buys nothing for them but pays hash-table build + lookup per
     # value until the 1MB dictionary overflows EVERY column chunk — measured
@@ -170,10 +185,54 @@ def write_extracted(df: DataFrame, path: str, mode: str = "append",
     for k, v in scoped.items():
         spark.conf.set(k, v)
     try:
-        w.parquet(path)
+        w.parquet(target)
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
+    if target != path:
+        _replace_runs(spark, target, path)
+
+
+#: prefix of write_extracted's staging dir inside the table; Spark's
+#: readers skip ``_``-prefixed dirs
+_REPLACING = "_replacing-"
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop Path class, FileSystem of ``path``): any filesystem Spark
+    writes to works."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path  # type: ignore[union-attr]
+    conf = spark._jsc.hadoopConfiguration()  # type: ignore[union-attr]
+    return hpath, hpath(path).getFileSystem(conf)
+
+
+def _drop_stale_staging(spark: SparkSession, path: str) -> None:
+    """Remove the staging dirs a crashed overwrite left inside ``path``
+    (one writer per table at a time, as a stream's checkpoint is)."""
+    hpath, fs = _hadoop_fs(spark, path)
+    if fs.exists(hpath(path)):
+        for st in fs.listStatus(hpath(path)):
+            if st.getPath().getName().startswith(_REPLACING):
+                fs.delete(st.getPath(), True)
+
+
+def _replace_runs(spark: SparkSession, staging: str, path: str) -> None:
+    """Move each ``run_id=...`` dir of ``staging`` into ``path``, replacing
+    the dir of that name there whole, then drop staging. A crash before
+    the swap leaves the table as it was plus a hidden staging dir (the
+    next overwrite removes it); a crash during it can leave a run missing
+    until its replay."""
+    hpath, fs = _hadoop_fs(spark, staging)
+    for st in fs.listStatus(hpath(staging)):
+        name = st.getPath().getName()
+        if not name.startswith("run_id="):
+            continue
+        dest = hpath(path, name)
+        # a rename onto an existing dir would move INTO it
+        fs.delete(dest, True)
+        if not fs.rename(st.getPath(), dest):
+            raise OSError(f"could not move {st.getPath()} to {dest}")
+    fs.delete(hpath(staging), True)
 
 
 def _check_partition_layout(path: str, outer_col: str) -> None:

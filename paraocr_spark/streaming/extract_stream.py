@@ -15,9 +15,10 @@ extracts new files as they land:
     (operators/lineage.py). foreachBatch alone is at-least-once (a batch
     retried after a mid-write failure would duplicate rows), so the write is
     made IDEMPOTENT: each micro-batch lands in its own
-    ``run_id=<run>-b<batch_id>`` partition via dynamic partition overwrite
-    — a replay overwrites exactly its own partition, giving effective
-    exactly-once end to end;
+    ``run_id=<run>-b<batch_id>`` directory, and a replay replaces that
+    directory whole (sources/io.write_extracted's overwrite) — even when
+    it writes fewer buckets than the first attempt, as a restart on
+    another core count does — giving effective exactly-once end to end;
   * ``method_counts_stream`` is a pure streaming aggregation (watermark +
     tumbling window over warc_ts) for live quality monitoring — the analog
     of the reference's perf-log sink (parallel.py:124-137) as a stream.
@@ -57,9 +58,9 @@ def extract_stream(spark: SparkSession, input_path: str, output_path: str,
         # produced under exactly that config — otherwise resume would treat
         # default-backend rows as done under the custom config
         plan = pipeline._extraction_plan(batch_df, cfg, write=True)
-        # batch_id in the partition value + dynamic partition OVERWRITE
-        # = idempotent replay (the retried batch replaces only its own
-        # run_id=... directory, never touching other batches')
+        # batch_id in the partition value + OVERWRITE = idempotent replay
+        # (the retried batch replaces its own run_id=... directory whole,
+        # never touching other batches')
         out = plan.df.withColumn("run_id", F.lit(f"{cfg.run_id}-b{batch_id}"))
         pio.write_extracted(out.select(*EXTRACTED_COLS, "config_fp", "run_id",
                                        "_pid", "_doc_bytes", "_wall_s",

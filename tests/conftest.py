@@ -80,7 +80,7 @@ class HeadBackend(ExtractorBackend):
                 method.append("head"); error.append(None)
         return pd.DataFrame(
             {"extracted_text": ext, "spans": spans, "method": method,
-             "error": error}, index=pdf.index,
+             "error": error},
         )
 '''
 

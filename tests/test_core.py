@@ -5,7 +5,6 @@ No Spark needed here — these pin the oracle itself (SURVEY.md §5: the serial
 extractor is the analog of the reference's vanilla benchmark scripts).
 """
 
-import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -16,30 +15,6 @@ from paraocr_spark.core.reference import extract_document
 
 
 # ---------------------------------------------------------------- quality
-WORDS = st.lists(
-    st.sampled_from(sorted(quality.DICTIONARY)[:50] + ["zzgibberish", "qqq", "xkcd"]),
-    min_size=0, max_size=60,
-)
-
-
-@given(WORDS)
-@settings(max_examples=200, deadline=None)
-def test_quality_serial_matches_vectorized(words):
-    text = " ".join(words)
-    serial = quality.quality_ok(text)
-    vec = bool(quality.quality_ok_series(pd.Series([text])).iloc[0])
-    assert serial == vec
-
-
-@given(st.lists(st.one_of(st.none(), st.text(max_size=200)), min_size=1, max_size=20))
-@settings(max_examples=100, deadline=None)
-def test_fastpath_serial_matches_vectorized(texts):
-    s = pd.Series(texts, dtype=object)
-    vec = quality.fastpath_ok_series(s)
-    for t, v in zip(texts, vec):
-        assert quality.fastpath_ok(t) == bool(v), repr(t)
-
-
 def test_gate_thresholds():
     # 100-char rule (config.py:56 analog)
     good = ("the and of to in on with from " * 8).strip()

@@ -845,12 +845,12 @@ def test_build_session_caps_arrow_batch_bytes(monkeypatch):
 
 
 def test_arrow_byte_cap_bounds_kernel_input_batches(spark):
-    """Under the cap, a mapInPandas over pages holding giants (one in ten
-    rows 0.7 MB, as in the perfbench crawl, and one 5 MB row) gets no batch
-    whose rows before the last already reach the cap: Spark closes a batch
-    at the row that takes it there. Without the cap the record limit alone
-    puts every giant in one batch."""
-    import pandas as pd
+    """Under the cap, a mapInArrow (the kernel's path) over pages holding
+    giants (one in ten rows 0.7 MB, as in the perfbench crawl, and one
+    5 MB row) gets no batch whose rows before the last already reach the
+    cap: Spark closes a batch at the row that takes it there. Without the
+    cap the record limit alone puts every giant in one batch."""
+    import pyarrow as pa
 
     from paraocr_spark.job import ARROW_MAX_BYTES_PER_BATCH as CAP
 
@@ -863,11 +863,14 @@ def test_arrow_byte_cap_bounds_kernel_input_batches(spark):
 
     def batches(it):
         for b in it:
-            n = [len(h) for h in b["html"]]
-            yield pd.DataFrame({"rows": [len(n)], "before_last": [sum(n[:-1])]})
+            n = [len(h) for h in b.column("html").to_pylist()]
+            yield pa.RecordBatch.from_pydict(
+                {"rows": [len(n)], "before_last": [sum(n[:-1])]},
+                schema=pa.schema([("rows", pa.int64()),
+                                  ("before_last", pa.int64())]))
 
     def seen():
-        return pages.mapInPandas(batches, "rows long, before_last long").collect()
+        return pages.mapInArrow(batches, "rows long, before_last long").collect()
 
     key = "spark.sql.execution.arrow.maxBytesPerBatch"
     prior = spark.conf.get(key)

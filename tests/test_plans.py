@@ -121,7 +121,7 @@ def test_simhash_no_python(spark, docs):
 
 def test_kernel_no_shuffle_for_normal_docs(spark, tmp_path):
     """The extraction kernel on non-giant docs is shuffle-free: scan ->
-    ArrowEvalPython/MapInPandas -> project. Any Exchange here would shuffle
+    ArrowEvalPython/MapInArrow -> project. Any Exchange here would shuffle
     the full corpus at 100 TB. The operator never fans out its input (a
     coarse source is fanned out at the scan, tested below); the input here
     is the at-scale shape, a scan with >= defaultParallelism splits."""
@@ -136,7 +136,7 @@ def test_kernel_no_shuffle_for_normal_docs(spark, tmp_path):
     assert pages.rdd.getNumPartitions() >= target
     p = plan_of(extract_pages(pages, salt=False))
     assert "Exchange" not in p
-    assert "MapInPandas" in p
+    assert "MapInArrow" in p
 
 
 def _jobs_in(sc, group: str, fn):
@@ -243,7 +243,7 @@ def test_giant_branch_only_when_footers_allow_a_giant(spark, tmp_path,
     """run_extraction salts only docs larger than one scan split, and
     decides from the parquet footers whether one can exist. Parquet pages
     whose html chunks all fit the (default) split build ONE branch: one
-    scan, one MapInPandas (the kernel), no giant filter — and reading the
+    scan, one MapInArrow (the kernel), no giant filter — and reading the
     footers runs no Spark job. The same files under a split smaller than
     their giants get the salted giant branch back; so does a generated
     input, which has no files to read."""
@@ -260,19 +260,20 @@ def test_giant_branch_only_when_footers_allow_a_giant(spark, tmp_path,
     assert not jobs
     p = plan_of(out)
     assert _nodes(p, "Scan parquet") == 1, p
-    assert _nodes(p, "MapInPandas") == 1, p
+    assert _nodes(p, "MapInArrow") == 1, p
     assert "octet_length" not in p  # no giant filter
 
     with scoped_split():
         p = plan_of(run_extraction(spark, spark.read.parquet(path),
                                    PipelineConfig()))
     assert _nodes(p, "Scan parquet") == 2, p
-    assert _nodes(p, "MapInPandas") == 3, p  # kernel, salt split, shard kernel
+    assert _nodes(p, "MapInArrow") == 3, p  # kernel, salt split, shard kernel
     assert "octet_length" in p
 
     p = plan_of(run_extraction(spark, pages_df(spark, 40, 2), PipelineConfig()))
-    # + the generator, under each branch
-    assert _nodes(p, "MapInPandas") == 5, p
+    # + the generator (a MapInPandas), under each branch
+    assert _nodes(p, "MapInArrow") == 3, p
+    assert _nodes(p, "MapInPandas") == 2, p
     assert "octet_length" in p
 
 

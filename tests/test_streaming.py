@@ -2,6 +2,7 @@
 
 import pathlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from paraocr_spark.pipeline import PipelineConfig
@@ -100,7 +101,7 @@ def test_site_stats_stateful_operator(spark, tmp_path):
 
 def test_batch_replay_is_idempotent(spark, tmp_path):
     """foreachBatch retry semantics: re-writing the SAME micro-batch
-    (same run_id partition, dynamic overwrite) must not duplicate rows,
+    (same run_id partition, overwrite) must not duplicate rows,
     and must not touch other batches' partitions."""
     from paraocr_spark.operators.extract import extract_pages
     from paraocr_spark.pipeline import EXTRACTED_COLS
@@ -151,3 +152,38 @@ def test_stream_batches_use_configured_backend(spark, tmp_path, custom_backend):
     assert all(r.config_fp == cfg.fingerprint for r in rows)
     assert all(len(r.extracted_text) <= 7 for r in rows
                if r.method == "head" and r.extracted_text is not None)
+
+
+def test_replay_on_fewer_buckets_replaces_the_whole_run(spark, tmp_path):
+    """A micro-batch replayed into fewer buckets (a restart on another
+    core count) replaces its whole run_id directory: the first attempt's
+    extra bucket directories must not survive as duplicate rows, and
+    another batch's directory is left as it was. A staging dir a crashed
+    overwrite left is removed by the next one."""
+    import os
+
+    from paraocr_spark.sources import io as pio
+
+    out = str(tmp_path / "replay")
+
+    def batch(n, bid):
+        return spark.range(n).select(
+            F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+            F.timestamp_seconds(F.col("id") * 137).alias("warc_ts"),
+            F.lit(f"s-b{bid}").alias("run_id"),
+        )
+
+    pio.write_extracted(batch(1000, 0), out, mode="overwrite", n_buckets=8)
+    pio.write_extracted(batch(300, 1), out, mode="overwrite", n_buckets=8)
+    os.makedirs(os.path.join(out, "_replacing-crashed", "run_id=s-b0"))
+    pio.write_extracted(batch(1000, 0), out, mode="overwrite", n_buckets=4)
+    t = spark.read.parquet(out)
+    b0 = t.where(F.col("run_id") == "s-b0")
+    assert b0.count() == 1000
+    assert b0.select("url").distinct().count() == 1000
+    assert t.where(F.col("run_id") == "s-b1").count() == 300
+    assert sorted(os.listdir(out)) == ["run_id=s-b0", "run_id=s-b1"]
+    assert len(os.listdir(os.path.join(out, "run_id=s-b0"))) == 4
+    with pytest.raises(ValueError, match="run_id"):
+        pio.write_extracted(batch(10, 2).drop("run_id"), out,
+                            mode="overwrite")

@@ -49,7 +49,7 @@ COMMENT = {
         "What run_extraction builds over parquet pages whose footers show "
         "every html column chunk within one scan split "
         "(sources.io.input_footprint, no Spark job): one scan, one "
-        "MapInPandas, no giant filter and no second scan or anti-join. "
+        "MapInArrow (the kernel), no giant filter and no second scan or anti-join. "
         "The normal kernel extracts every doc whole, the same bytes the "
         "salted path gives."
     ),
